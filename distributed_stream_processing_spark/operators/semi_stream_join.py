@@ -14,14 +14,20 @@ ONE DataFrame program per batch:
 * state: LRU last-seen upsert, eviction of keys older than the
   adaptive window, cache rebuild = (cache ∖ evicted) ∪ fetch
 
-Spark schedules the formerly-threaded stages from one DAG. STATE
-(r15): the cache/LRU live as a base localCheckpoint plus flat
-append-only per-batch deltas (pinned probe-key/fetch checkpoint
-leaves); the O(state) latest-wins fold + eviction + re-checkpoint
-runs every min(compact_every, controller-window) batches — the X8
-lineage truncation amortized, with the per-batch cost O(batch), the
-eviction over-stay bounded by the window, and coalesce bounding
-partition width at each compaction.
+Spark schedules the formerly-threaded stages from one DAG. STATE:
+the cache/LRU live as a base localCheckpoint plus flat append-only
+per-batch deltas (pinned probe-key/fetch checkpoint leaves, built
+without their source plans' constraints — streaming/checkpoint.py);
+the O(state) latest-wins fold (one union + one groupBy,
+streaming/lru_state.py) + eviction + re-checkpoint runs every
+min(compact_every, controller-window) batches — the X8 lineage
+truncation amortized, with the eviction over-stay bounded by the
+window and coalesce bounding partition width at each compaction.
+A batch's Spark work does not depend on how many deltas are pending:
+every non-compaction batch launches the same number of jobs, and so
+does every compaction, whether it folds 2 deltas or 6 (pinned by
+test_semi_stream_jobs_per_batch_bounded). Per-batch cost is
+O(batch).
 
 Semantic invariant (tested): output == plain stream ⋈ store for every
 cache state — the cache is transparent.
@@ -47,6 +53,10 @@ from distributed_stream_processing_spark.operators.skew import bounded_broadcast
 from distributed_stream_processing_spark.streaming.checkpoint import (
     lazy_local_checkpoint,
     release_checkpoint,
+)
+from distributed_stream_processing_spark.streaming.lru_state import (
+    fold_lru,
+    state_views,
 )
 
 
@@ -270,26 +280,7 @@ class SemiStreamJoin:
             ("fetch", fetch_in),
         ]
         if compact:
-            # latest-wins fold of base + every pending key set; the
-            # key-set joins carry explicit broadcast hints (these
-            # plans are AQE-off under lazy_local_checkpoint, where an
-            # unhinted join against checkpointed state compiles to a
-            # sort-merge join); the EVICTION sets (stale, hot) are
-            # only usually small — after a workload shift stale can be
-            # the whole cache — so their hints are gated on the
-            # tracked state sizes (bounded_broadcast).
-            lru_full = self._base_pins[1]
-            cache_full = self._base_pins[0]
-            deltas = self._pend + [(batch_id, batch_keys, fetched)]
-            for bid_i, bk_i, _ in deltas:
-                lru_full = lru_full.join(
-                    F.broadcast(bk_i), k, "left_anti"
-                ).unionByName(bk_i.withColumn("last_seen", F.lit(bid_i)))
-            admitted_tail = fetched
-            stale = lru_full.filter(
-                F.col("last_seen") < batch_id - window
-            ).select(k)
-            stale_bound = self._lru_rows
+            admitted_tail, hot = fetched, None
             if self.admit_below_freq is not None:
                 # per-key batch frequency (admission only). Admission
                 # forces compact_every=1, so the fold covers exactly
@@ -311,14 +302,30 @@ class SemiStreamJoin:
                 admitted_tail = fetched.join(
                     bounded_broadcast(hot, self._freq_rows), k, "left_anti"
                 )
+            # latest-wins fold of base + every pending key set: one
+            # union and one groupBy (fold_lru), whatever the number of
+            # deltas. The EVICTION sets (stale, hot) are only usually
+            # small — after a workload shift stale can be the whole
+            # cache — so their broadcast hints are gated on the
+            # tracked state sizes (bounded_broadcast; these plans are
+            # AQE-off under lazy_local_checkpoint, with no runtime
+            # fallback).
+            cache_full, lru_view = state_views(
+                self._base_pins[0],
+                self._base_pins[1],
+                self._pend + [(batch_id, batch_keys, admitted_tail)],
+            )
+            lru_full = fold_lru(lru_view, [k])
+            stale = lru_full.filter(
+                F.col("last_seen") < batch_id - window
+            ).select(k)
+            stale_bound = self._lru_rows
+            if hot is not None:
                 stale = stale.unionByName(hot)
-                stale_bound = self._lru_rows + self._freq_rows
+                stale_bound += self._freq_rows
             # stale ⊆ prior-LRU keys (this batch's keys carry
             # last_seen == batch_id, never stale) ∪ hot keys
             stale = bounded_broadcast(stale, stale_bound)
-            for _, _, f_i in self._pend:
-                cache_full = cache_full.unionByName(f_i)
-            cache_full = cache_full.unionByName(admitted_tail)
             # admitted/hot keys are never stale (fresh last_seen, hot
             # excluded from admission), so filtering the whole union
             # equals r14's cache.anti(stale) ∪ admitted
@@ -393,18 +400,9 @@ class SemiStreamJoin:
             self._pend.append((batch_id, batch_keys, fetched))
             # upper bound: every batch key could be new to the LRU
             self._lru_rows += n_keys
-            # flat state views over base + pendings (pure unions; a
-            # key probed in several pending batches appears with
-            # several last_seen rows — every pipeline read is
-            # set-membership, and the exact latest-wins fold happens
-            # at compaction)
-            cache_v, lru_v = self._base_pins[0], self._base_pins[1]
-            for bid_i, bk_i, f_i in self._pend:
-                cache_v = cache_v.unionByName(f_i)
-                lru_v = lru_v.unionByName(
-                    bk_i.withColumn("last_seen", F.lit(bid_i))
-                )
-            self.cache, self.lru = cache_v, lru_v
+            self.cache, self.lru = state_views(
+                self._base_pins[0], self._base_pins[1], self._pend
+            )
         # MEASURED per-phase split recovered from the combined action's
         # SQL metrics (DS-Join's controller compares measured phase
         # times, streaming.scala:486-520): branch k owns the batch key

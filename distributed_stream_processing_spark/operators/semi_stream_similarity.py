@@ -56,10 +56,12 @@ tools/exp_fetch_prune*.py).
 STATE (r15): cache/LRU live as a base localCheckpoint plus flat
 append-only per-batch deltas (probe-key + fetch checkpoint LEAVES —
 LogicalRDDs, so no consumer can ever re-execute another batch's
-lineage); the O(state) latest-wins fold + eviction + re-checkpoint
-runs every min(compact_every, controller-window) batches. This
-removed the per-batch fixed floor (the unconditional state rewrite)
-while keeping eviction over-stay bounded by the window.
+lineage); the O(state) latest-wins fold (one union + one groupBy,
+streaming/lru_state.py, shared with the equi pipeline) + eviction +
+re-checkpoint runs every min(compact_every, controller-window)
+batches. This removed the per-batch fixed floor (the unconditional
+state rewrite) while keeping eviction over-stay bounded by the
+window.
 """
 
 from __future__ import annotations
@@ -85,6 +87,10 @@ from distributed_stream_processing_spark.streaming.plan_timing import (
 from distributed_stream_processing_spark.streaming.checkpoint import (
     lazy_local_checkpoint,
     release_checkpoint,
+)
+from distributed_stream_processing_spark.streaming.lru_state import (
+    fold_lru,
+    state_views,
 )
 
 # the cache/LRU/fetch key: xxhash64 of the signature triple — see the
@@ -898,20 +904,19 @@ class SemiStreamSimilarityJoin:
             ("fetch", fetch_in),
         ]
         if compact:
-            # latest-wins fold of base + every pending key set (later
-            # batches override last_seen), then the eviction filter —
-            # each anti carries an unconditional broadcast hint (key
-            # sets are batch-sized) except stale, whose bound is the
-            # tracked LRU row count (after a workload shift stale can
-            # be cache-sized; these plans are AQE-off with no runtime
-            # fallback — ADVICE r6). Runs ONCE per compaction window.
-            lru_full = self._base_pins[1]
-            cache_full = self._base_pins[0]
-            for bid_i, pk_i, f_i in self._pend + [(batch_id, probe_keys, fetched)]:
-                lru_full = lru_full.join(
-                    F.broadcast(pk_i), _KEY, "left_anti"
-                ).unionByName(pk_i.withColumn("last_seen", F.lit(bid_i)))
-                cache_full = cache_full.unionByName(f_i)
+            # latest-wins fold of base + every pending key set (one
+            # union + one groupBy, shared with the equi pipeline:
+            # fold_lru), then the eviction filter — stale's broadcast
+            # hint is gated on the tracked LRU row count (after a
+            # workload shift stale can be cache-sized; these plans are
+            # AQE-off with no runtime fallback — ADVICE r6). Runs ONCE
+            # per compaction window.
+            cache_full, lru_view = state_views(
+                self._base_pins[0],
+                self._base_pins[1],
+                self._pend + [(batch_id, probe_keys, fetched)],
+            )
+            lru_full = fold_lru(lru_view, _KEY)
             stale = bounded_broadcast(
                 lru_full.filter(
                     F.col("last_seen") < batch_id - window
@@ -987,18 +992,10 @@ class SemiStreamSimilarityJoin:
             # upper bound: every probed key could be new to the LRU
             self._lru_rows += n_keys
             # flat state views over base + pendings (pure unions — the
-            # next batch reads them with one scan, no joins). A key
-            # probed in several pending batches appears with several
-            # last_seen rows; every pipeline read is set-membership
-            # (semi/anti), and the exact latest-wins fold happens at
-            # compaction.
-            cache_v, lru_v = self._base_pins[0], self._base_pins[1]
-            for bid_i, pk_i, f_i in self._pend:
-                cache_v = cache_v.unionByName(f_i)
-                lru_v = lru_v.unionByName(
-                    pk_i.withColumn("last_seen", F.lit(bid_i))
-                )
-            self.cache, self.lru = cache_v, lru_v
+            # next batch reads them with one scan, no joins)
+            self.cache, self.lru = state_views(
+                self._base_pins[0], self._base_pins[1], self._pend
+            )
         # MEASURED per-phase split from the combined action's SQL
         # metrics: p owns the probe signature emission, m the miss
         # detect (both join context — m embeds the hit-key semi scan),

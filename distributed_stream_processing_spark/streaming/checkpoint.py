@@ -12,12 +12,29 @@ combined action merely re-scanning it (observed as
 start of every batch).
 
 ``lazy_local_checkpoint`` plans the checkpoint with AQE disabled, so
-the call just builds an RDD and the state materializes inside the
-batch's single combined action, sharing the cluster with the output
-verify as designed (X8 lineage truncation, one action per batch).
-The state subplans lose nothing from static planning: every join in
-them carries an explicit broadcast hint, and their output
-partitioning is pinned by coalesce.
+no shuffle stage runs at the call and the state materializes inside
+the batch's single combined action, sharing the cluster with the
+output verify as designed (X8 lineage truncation, one action per
+batch). The call is not free of jobs, though: a static plan prepares
+its broadcast exchanges when the RDD is built, so every broadcast-
+hinted join in the checkpointed plan runs its broadcast job AT THE
+CALL (the missed-key checkpoint ran 2-6 jobs before the fetch). The
+state subplans lose nothing from static planning: every join in them
+carries an explicit broadcast hint, and their output partitioning is
+pinned by coalesce.
+
+Leaves carry no constraints from their source plan. Spark 4 keeps a
+checkpoint leaf's (``LogicalRDD``) origin constraints, so a leaf built
+from ``filter(k IN (...))`` — a pushdown-fetched delta — carries that
+IN list into every later plan that reads it. The optimizer then copies
+the list onto the broadcast side of each semi-join against the leaf;
+the broadcasts differ per leaf, Spark cannot reuse one exchange, and
+each pending delta ran its own broadcast job, so per-batch job counts
+grew with the number of pending deltas (13 -> 21 jobs over five
+batches of perfbench's enrich_drift workload).
+The checkpoint is therefore planned with constraint propagation off as
+well. Both settings are scoped to the call and restored after it; the
+session's own settings never change.
 """
 
 from __future__ import annotations
@@ -33,10 +50,18 @@ from pyspark.sql import DataFrame
 # attempted on top of its persisted-RDD boundedness check.
 RELEASE_STATS = {"attempted": 0, "succeeded": 0}
 
+# session settings turned off for the duration of one checkpoint call:
+# AQE (a call-time AQE plan executes its shuffle stages) and
+# constraint propagation (a leaf keeps its source plan's constraints)
+_PLAN_OFF = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.constraintPropagation.enabled",
+)
+
 
 def lazy_local_checkpoint(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """NOT safe under concurrent planning on the same session (the
-    conf toggle is session-scoped); the semi-stream pipelines run
+    conf toggles are session-scoped); the semi-stream pipelines run
     batches sequentially on the driver, which is the intended use.
     Only checkpoint plans whose joins carry explicit broadcast hints
     — static planning picks sort-merge for unhinted joins with
@@ -50,13 +75,14 @@ def lazy_local_checkpoint(df: DataFrame, cols: list[str] | None = None) -> DataF
     blocks (they are RDD-level persisted, not CacheManager entries;
     ADVICE r15)."""
     spark = df.sparkSession
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    prev = {k: spark.conf.get(k) for k in _PLAN_OFF}
+    for k in _PLAN_OFF:
+        spark.conf.set(k, "false")
     try:
         out = df.localCheckpoint(eager=False)
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     jrdd = None
     try:
         plan = out._jdf.queryExecution().analyzed()

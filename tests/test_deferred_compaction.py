@@ -157,3 +157,85 @@ def test_release_stats_count_attempts_and_successes(spark):
     release_checkpoint(df2)
     assert RELEASE_STATS["attempted"] == before["attempted"] + 2
     assert RELEASE_STATS["succeeded"] == before["succeeded"] + 1
+
+
+def test_checkpoint_leaf_carries_no_source_constraints(spark):
+    """A leaf built from ``filter(k IN (...))`` (a pushdown-fetched
+    delta) must not carry the IN list into later plans: the optimizer
+    copied it onto every semi-join's broadcast side, so each pending
+    delta ran its own broadcast job. The session settings the
+    checkpoint call scopes must be unchanged after it."""
+    from distributed_stream_processing_spark.streaming.checkpoint import (
+        lazy_local_checkpoint,
+        release_checkpoint,
+    )
+
+    keys = ("spark.sql.adaptive.enabled",
+            "spark.sql.constraintPropagation.enabled")
+    before = {key: spark.conf.get(key) for key in keys}
+    src = spark.range(1_000).select(F.col("id").alias("k")).filter(
+        F.col("k").isin([3, 7, 11])
+    )
+    for cols in (None, ["k"]):
+        leaf = lazy_local_checkpoint(src, cols=cols)
+        it = leaf._jdf.queryExecution().analyzed().constraints().iterator()
+        kinds = set()
+        while it.hasNext():
+            kinds.add(it.next().getClass().getSimpleName())
+        assert not kinds & {"In", "InSet"}, f"leaf kept {kinds}"
+        assert sorted(r.k for r in leaf.collect()) == [3, 7, 11]
+        release_checkpoint(leaf)
+    assert {key: spark.conf.get(key) for key in keys} == before
+
+
+def test_similarity_deferred_fold_multi_delta_equivalence(spark):
+    """The similarity pipeline's deferred fold over several pending
+    deltas with overlapping signature keys (compact_every=100 at
+    window 3: compactions at batches 2 and 5) must match the per-batch
+    exact fold (compact_every=1): same output every batch, same LRU
+    and cache after each compaction."""
+    from fractions import Fraction
+
+    from distributed_stream_processing_spark.operators.semi_stream_similarity import (
+        SemiStreamSimilarityJoin,
+        build_similarity_store,
+    )
+
+    docs = spark.createDataFrame(
+        [
+            (i, f"tok{i % 7} tok{(i + 1) % 7} tok{(i + 2) % 7} "
+                f"tok{(i + 3) % 7} w{i % 40}")
+            for i in range(80)
+        ],
+        "id long, text string",
+    ).select("id", F.split("text", " ").alias("tokens"))
+    t = Fraction(1, 2)
+    store = build_similarity_store(docs.filter(F.col("id") < 40), t)
+    a = SemiStreamSimilarityJoin(threshold=t, artifacts=store,
+                                 compact_every=1,
+                                 controller=_fixed_controller(3))
+    b = SemiStreamSimilarityJoin(threshold=t, artifacts=store,
+                                 compact_every=100,
+                                 controller=_fixed_controller(3))
+    stream = docs.filter(F.col("id") >= 40)
+    saw_multi_delta = False
+    for i in range(6):
+        # each batch overlaps the previous one by half
+        batch = stream.filter(
+            (F.col("id") >= 40 + 4 * i) & (F.col("id") < 48 + 4 * i)
+        )
+        out_a = sorted(a.process_batch(batch, i).collect())
+        out_b = sorted(b.process_batch(batch, i).collect())
+        assert out_a == out_b, f"batch {i}: deferred output diverged"
+        saw_multi_delta |= len(b._pend) >= 2
+        if i in (2, 5):
+            assert not b._pend, f"batch {i} was expected to compact"
+            lru_a = sorted((r.sk, r.last_seen) for r in a.lru.collect())
+            lru_b = sorted((r.sk, r.last_seen) for r in b.lru.collect())
+            assert lru_a == lru_b, f"batch {i}: LRU diverged"
+            cache_a = sorted(tuple(r) for r in a.cache.collect())
+            cache_b = sorted(tuple(r) for r in b.cache.collect())
+            assert cache_a == cache_b, f"batch {i}: cache diverged"
+    assert saw_multi_delta, "deferred pipeline never held 2+ pending deltas"
+    a.close()
+    b.close()

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from fractions import Fraction
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_stream_processing_spark.operators.semi_stream_join import (
@@ -52,11 +53,19 @@ def test_pushdown_fetcher_empty_and_bounded(spark):
     )
     f = PushdownKeyedFetcher(source, "k", max_keys=5)
     assert f.fetch(source.select("k").limit(0)).count() == 0
-    try:
-        f.fetch(source.select("k"))  # 100 keys > max_keys=5
-        assert False, "expected ValueError on an unbounded key set"
-    except ValueError:
-        pass
+    # max_keys on both sides: exactly max_keys keys is accepted, one
+    # more raises
+    assert f.fetch(source.select("k").limit(5)).count() == 5
+    with pytest.raises(ValueError):
+        f.fetch(source.select("k").limit(6))
+    with pytest.raises(ValueError):
+        f.fetch(source.select("k"))  # 100 keys: an unbounded key set
+    # non-integer keys build the predicate through Column.isin
+    named = source.select(F.concat(F.lit("n"), "k").alias("s"), "v")
+    got = PushdownKeyedFetcher(named, "s").fetch(
+        spark.createDataFrame([("n3",), ("n42",)], "s string")
+    )
+    assert sorted(r.v for r in got.collect()) == [3, 42]
 
 
 def test_pipeline_transparent_through_pushdown_fetcher(spark, tmp_path):
@@ -171,6 +180,13 @@ def test_auto_fetcher_policy_boundaries(spark):
                 memory_bytes=2 * GB,
                 expected_misses=SMALL_MISS_THRESHOLD + 1
                 ) == "SemiScanFetcher"
+    # an expectation of ZERO misses keeps the scan: the pushdown
+    # range is 0 < expected_misses <= SMALL_MISS_THRESHOLD
+    assert pick(store_bytes=1 * GB, key_clustered=True,
+                memory_bytes=2 * GB, expected_misses=0) == "SemiScanFetcher"
+    assert pick(store_bytes=1 * GB, key_clustered=True,
+                memory_bytes=2 * GB, expected_misses=1
+                ) == "PushdownKeyedFetcher"
     # unknown miss volume (None) on a memory-resident store: scan
     assert pick(store_bytes=1 * GB, key_clustered=True,
                 memory_bytes=2 * GB) == "SemiScanFetcher"

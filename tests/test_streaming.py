@@ -12,6 +12,9 @@ from distributed_stream_processing_spark.operators.semi_stream_join import (
     replay_in_batches,
     run_semi_stream_join,
 )
+from distributed_stream_processing_spark.sources.fetcher import (
+    PushdownKeyedFetcher,
+)
 from distributed_stream_processing_spark.streaming.cache_controller import (
     AdaptiveCacheController,
     BatchTimings,
@@ -88,23 +91,12 @@ def test_replay_batches_partition_stream(spark, sf_smoke):
     assert sum(b.count() for _, b in batches) == li.count()
 
 
-def test_semi_stream_jobs_per_batch_bounded(spark):
-    """r15 regression pin for the exponential-lineage bug class: the
-    per-batch deltas must be CHECKPOINT LEAVES. When they were caches,
-    the analyzer's relation dedup re-instanced the subtrees embedded
-    across join sides, the CacheManager lookup missed, and every batch
-    re-executed all prior batches' fetch lineage — per-batch Spark JOB
-    counts doubled (measured 20 -> 34 -> 63 -> 129 -> 261 -> 525 ->
-    1053 over seven batches). With leaves they are flat; this asserts
-    the last non-compaction batch launches no more jobs than an early
-    one (wide slack — any regrowth is geometric, not marginal)."""
-    store = spark.range(20_000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    j = SemiStreamJoin(store=store, key="k", compact_every=100)
+def _jobs_per_batch(spark, j, n_batches: int) -> list[int]:
+    """Spark jobs launched by each of ``n_batches`` process_batch calls
+    (1,000 keys a batch, half of them new: every batch misses)."""
     sc = spark.sparkContext
     jobs = []
-    for b in range(6):
+    for b in range(n_batches):
         batch = spark.range(b * 500, b * 500 + 1_000).withColumnRenamed(
             "id", "k"
         )
@@ -113,9 +105,62 @@ def test_semi_stream_jobs_per_batch_bounded(spark):
         j.flush_attribution()
         jobs.append(sc._jsc.sc().dagScheduler().nextJobId() - j0)
     j.close()
-    # under the bug jobs[5] was ~16x jobs[1]; flat regimes differ by
-    # at most a couple of AQE-pruned stages
-    assert jobs[5] <= jobs[1] + 4, f"per-batch job counts grew: {jobs}"
+    return jobs
+
+
+def test_semi_stream_jobs_per_batch_bounded(spark, tmp_path):
+    """A batch's Spark work must not depend on how many state deltas
+    are pending.
+
+    r15 pinned the exponential-lineage bug class: when the per-batch
+    deltas were caches, the analyzer's relation dedup re-instanced the
+    subtrees embedded across join sides, the CacheManager lookup
+    missed, and every batch re-executed all prior batches' fetch
+    lineage (measured 20 -> 34 -> 63 -> ... -> 1053 jobs over seven
+    batches). Checkpoint leaves fixed that.
+
+    Two linear growths remained, both pinned here through a
+    PushdownKeyedFetcher over a key-sorted parquet store:
+    * a pushdown-fetched leaf kept its ``k IN (...)`` constraint, the
+      optimizer copied it onto each semi-join's broadcast side, and
+      every pending delta ran its own broadcast job (+2 jobs per
+      pending delta);
+    * the compaction fold chained one broadcast anti-join per delta.
+    """
+    src = str(tmp_path / "store_sorted.parquet")
+    spark.range(20_000).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    ).coalesce(1).sortWithinPartitions("k").write.parquet(src)
+    store = spark.read.parquet(src)
+
+    # in-session store, no compaction: flat
+    jobs = _jobs_per_batch(
+        spark, SemiStreamJoin(store=store, key="k", compact_every=100), 6
+    )
+    assert len(set(jobs[1:])) == 1, f"per-batch job counts moved: {jobs}"
+
+    # pushdown fetch: batches 1-5 hold 1-5 pending deltas, batch 6
+    # compacts 6 of them; a second pipeline compacts 2 at batch 2
+    def pushdown(compact_every: int) -> SemiStreamJoin:
+        return SemiStreamJoin(
+            store=store,
+            key="k",
+            fetcher=PushdownKeyedFetcher(store, "k"),
+            compact_every=compact_every,
+            controller=AdaptiveCacheController(
+                window=100, min_window=100, max_window=100
+            ),
+        )
+
+    jobs = _jobs_per_batch(spark, pushdown(7), 7)
+    assert len(set(jobs[1:6])) == 1, (
+        f"per-batch job counts grew with pending deltas: {jobs}"
+    )
+    fold2 = _jobs_per_batch(spark, pushdown(3), 3)[2]
+    assert fold2 == jobs[6], (
+        f"compaction jobs depend on the deltas folded: 2 -> {fold2}, "
+        f"6 -> {jobs[6]}"
+    )
 
 
 def test_lru_eviction_bounds_cache(spark, sf_smoke):
@@ -153,6 +198,30 @@ def test_batch_best_match_finds_planted(spark):
     got = batch_best_match(df, w, chunk=512)
     assert got[0][0] == 300 and got[0][1] == 0.0
     assert got[1][0] == 1200 and got[1][1] == 0.0
+
+
+def test_batch_best_match_window_straddles_record_batches(spark):
+    """A chunk's rows arrive in several Arrow record batches when the
+    chunk outgrows ``maxRecordsPerBatch``; a window straddling two
+    record batches must still be scored (it was dropped, and the
+    search returned some other window)."""
+    rng = np.random.default_rng(11)
+    vals = np.round(rng.normal(0, 1, 5_000).cumsum(), 2)
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
+    )
+    m = 64
+    w = {0: vals[990 : 990 + m], 1: vals[2_995 : 2_995 + m]}
+    X = np.lib.stride_tricks.sliding_window_view(vals, m)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        got = batch_best_match(df, w)
+    finally:
+        spark.conf.set(key, prev)
+    for wid, q in w.items():
+        assert got[wid][0] == int(np.argmin(((X - q) ** 2).sum(axis=1)))
 
 
 def test_sgd_matches_numpy_reference():
