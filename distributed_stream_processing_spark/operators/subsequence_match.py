@@ -58,7 +58,6 @@ def sliding_stats(
     (``sum_scaled``) so downstream grid rounding is bit-deterministic
     across engines; otherwise sum_scaled is null.
     """
-    n_copy = w - 1
 
     def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("pos")
@@ -97,22 +96,8 @@ def sliding_stats(
             }
         )
 
-    owned = series.select(
-        F.col("pos").cast("bigint").alias("pos"),
-        F.col("value").cast("double").alias("value"),
-        F.floor(F.col("pos") / chunk).cast("bigint").alias("chunk_id"),
-    )
-    spill = (
-        series.filter(F.pmod(F.col("pos"), F.lit(chunk)) < n_copy)
-        .filter(F.col("pos") >= chunk)
-        .select(
-            F.col("pos").cast("bigint").alias("pos"),
-            F.col("value").cast("double").alias("value"),
-            (F.floor(F.col("pos") / chunk) - 1).cast("bigint").alias("chunk_id"),
-        )
-    )
     return (
-        owned.unionByName(spill)
+        _chunked(series, w, chunk)
         .groupBy("chunk_id")
         .applyInPandas(
             per_chunk, schema="pos long, mean double, std double, sum_scaled double"
@@ -127,9 +112,10 @@ def _index_runs(
     chunk: int = 8192,
 ) -> DataFrame:
     """(w, mr, pos_start, pos_end) runs of equal grid-rounded mean for
-    EVERY width in one pass: the series is scanned twice total (owned
-    rows + a max(widths)-1 overlap replication) and shuffled ONCE by
-    chunk, and the per-chunk numpy kernel emits all widths' runs —
+    EVERY width in one pass: the series is scanned once (_chunked:
+    rows in the max(widths)-1 overlap explode into two chunks) and
+    shuffled ONCE by chunk, and the per-chunk numpy kernel emits all
+    widths' runs —
     before r12 each width paid its own 2 scans + shuffle, which is
     2k scans of the series for k widths, the wrong shape for a 100 TB
     build (A5-A7, IndexBuilder.java:62-302 builds per width too but
@@ -138,8 +124,7 @@ def _index_runs(
     stage ever holds the whole series in one task (the round-1
     W.partitionBy(lit(w)) single-partition Window is gone)."""
     widths = tuple(sorted(set(widths)))
-    n_copy = max(widths) - 1
-    if n_copy > chunk:
+    if max(widths) - 1 > chunk:
         # the overlap replication reaches exactly ONE chunk back, so a
         # window spanning >1 boundary would silently fail the
         # contiguity mask and its runs would be MISSING from the index
@@ -204,22 +189,8 @@ def _index_runs(
             ).astype({"w": "int32", "pos_start": "int64", "pos_end": "int64"})
         return pd.concat(frames, ignore_index=True)
 
-    owned = series.select(
-        F.col("pos").cast("bigint").alias("pos"),
-        F.col("value").cast("double").alias("value"),
-        F.floor(F.col("pos") / chunk).cast("bigint").alias("chunk_id"),
-    )
-    spill = (
-        series.filter(F.pmod(F.col("pos"), F.lit(chunk)) < n_copy)
-        .filter(F.col("pos") >= chunk)
-        .select(
-            F.col("pos").cast("bigint").alias("pos"),
-            F.col("value").cast("double").alias("value"),
-            (F.floor(F.col("pos") / chunk) - 1).cast("bigint").alias("chunk_id"),
-        )
-    )
     return (
-        owned.unionByName(spill)
+        _chunked(series, max(widths), chunk)
         .groupBy("chunk_id")
         .applyInPandas(
             per_chunk,
@@ -842,7 +813,7 @@ def verify_ed_ints(
 ) -> DataFrame:
     """Exact ED verify for FIXED-DECIMAL series: d2 is an int64 sum of
     scaled squared diffs — order-independent, so it needs no ordered
-    fold and runs as a vectorized numpy pass over cogrouped chunks
+    fold and runs as a vectorized numpy pass over the candidates' chunks
     (the same candidate-pruned shape as the DTW verify) instead of
     verify_ed's exploded (start, qoff) join. At 10x bench scale the
     explode shape shuffles ~100M rows through a fixed-width exchange
@@ -979,7 +950,7 @@ def subsequence_match_ed(
         method=probe_method,
     )
     if value_scale is not None:
-        # fixed-decimal data: exact int64 verify over cogrouped chunks
+        # fixed-decimal data: exact int64 verify over the candidates' chunks
         # (order-independent sums need no fold join; scales with
         # candidates at numpy constants — the 10x stress shape)
         return verify_ed_ints(series, cands, query, epsilon, value_scale)
@@ -991,24 +962,51 @@ def subsequence_match_ed(
 # ---------------------------------------------------------------------------
 
 
-def _chunked(series: DataFrame, m: int, extra: int, chunk: int) -> DataFrame:
-    """Series rows replicated so each chunk holds its windows fully."""
-    n_copy = m + extra - 1
-    owned = series.select(
-        F.col("pos").cast("bigint").alias("pos"),
+def _chunked(series: DataFrame, m: int, chunk: int) -> DataFrame:
+    """(pos, value, chunk_id) rows of ``series`` in one scan, so that
+    chunk c holds every width-``m`` window starting in [c*chunk,
+    (c+1)*chunk): a row within m-1 of its chunk's start is exploded
+    into its own chunk and the preceding one."""
+    pos = F.col("pos").cast("bigint")
+    cid = F.floor(pos / chunk).cast("bigint")
+    spill = (F.pmod(pos, F.lit(chunk)) < m - 1) & (pos >= chunk)
+    return series.select(
+        pos.alias("pos"),
         F.col("value").cast("double").alias("value"),
-        F.floor(F.col("pos") / chunk).cast("bigint").alias("chunk_id"),
+        F.explode(
+            F.when(spill, F.array(cid, cid - 1)).otherwise(F.array(cid))
+        ).alias("chunk_id"),
     )
-    spill = (
-        series.filter(F.pmod(F.col("pos"), F.lit(chunk)) < n_copy)
-        .filter(F.col("pos") >= chunk)
-        .select(
-            F.col("pos").cast("bigint").alias("pos"),
-            F.col("value").cast("double").alias("value"),
-            (F.floor(F.col("pos") / chunk) - 1).cast("bigint").alias("chunk_id"),
-        )
-    )
-    return owned.unionByName(spill)
+
+
+def _partition_chunks(batches):
+    """Yield ``(chunk_id, pos, value, starts)`` for every chunk of one
+    mapInPandas partition, pos ascending.
+
+    A chunk's rows can arrive in several Arrow record batches
+    (spark.sql.execution.arrow.maxRecordsPerBatch), and a window that
+    straddles two of them is never scored if each batch is scored on
+    its own, so the partition's batches are gathered first. When the
+    rows carry a ``start`` column (_verify_starts' union of series rows
+    and candidate rows), ``starts`` holds the chunk's unique candidate
+    starts and chunks without candidates are skipped; otherwise it is
+    None."""
+    pdfs = list(batches)
+    if not pdfs:
+        return
+    pdf = pd.concat(pdfs, ignore_index=True)
+    with_starts = "start" in pdf.columns
+    for cid, grp in pdf.groupby("chunk_id"):
+        starts = None
+        if with_starts:
+            is_cand = grp["start"].notna()
+            if not is_cand.any():
+                continue
+            starts = np.unique(grp.loc[is_cand, "start"].to_numpy(np.int64))
+            grp = grp[~is_cand]
+        pos = grp["pos"].to_numpy(np.int64)
+        order = np.argsort(pos, kind="stable")
+        yield int(cid), pos[order], grp["value"].to_numpy(np.float64)[order], starts
 
 
 def _verify_starts(
@@ -1020,33 +1018,34 @@ def _verify_starts(
     schema: str,
 ) -> DataFrame:
     """Run ``row_fn(pos, val, starts) -> pd.DataFrame`` per chunk over
-    ONLY the candidate window starts: the chunked series is cogrouped
-    with the candidate positions on chunk_id, so a probe that prunes
-    translates directly into chunks that verify fewer (or zero)
-    windows. Starts are owned by floor(start/chunk); overlap
-    replication guarantees the owning chunk holds the full window."""
-    ser = _chunked(series, m, 0, chunk)
+    ONLY the candidate window starts, so a probe that prunes translates
+    directly into chunks that verify fewer (or zero) windows.
+
+    Series rows (``start`` null) and candidate starts (``pos`` and
+    ``value`` null) are unioned and sent through ONE exchange on
+    chunk_id; one mapInPandas gathers each partition and calls
+    ``row_fn`` for every chunk that has candidates (a cogroup of the
+    two sides shuffled each side on its own: one exchange more).
+    Starts are owned by floor(start/chunk); the overlap replication of
+    _chunked guarantees the owning chunk holds the full window."""
+    ser = _chunked(series, m, chunk).withColumn(
+        "start", F.lit(None).cast("bigint")
+    )
     cand = candidates.select(
-        F.col("start").cast("bigint").alias("start"),
+        F.lit(None).cast("bigint").alias("pos"),
+        F.lit(None).cast("double").alias("value"),
         F.floor(F.col("start") / chunk).cast("bigint").alias("chunk_id"),
+        F.col("start").cast("bigint").alias("start"),
     )
 
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return row_fn(
-                np.empty(0, np.int64), np.empty(0, np.float64), np.empty(0, np.int64)
-            )
-        left = left.sort_values("pos")
-        return row_fn(
-            left["pos"].to_numpy(),
-            left["value"].to_numpy(dtype=np.float64),
-            np.unique(right["start"].to_numpy()),
-        )
+    def gen(batches):
+        for _cid, pos, val, starts in _partition_chunks(batches):
+            yield row_fn(pos, val, starts)
 
     return (
-        ser.groupBy("chunk_id")
-        .cogroup(cand.groupBy("chunk_id"))
-        .applyInPandas(fn, schema=schema)
+        ser.unionByName(cand)
+        .repartition("chunk_id")
+        .mapInPandas(gen, schema=schema)
     )
 
 
@@ -1434,18 +1433,12 @@ def subsequence_match_dtw(
         )
 
     def gen(batches):
-        for pdf in batches:
-            for cid, grp in pdf.groupby("chunk_id"):
-                grp = grp.sort_values("pos")
-                pos = grp["pos"].to_numpy()
-                base, hi = int(cid) * chunk, (int(cid) + 1) * chunk
-                starts = pos[(pos >= base) & (pos < hi)]
-                yield verify(
-                    pos, grp["value"].to_numpy(dtype=np.float64), starts
-                )
+        for cid, pos, val, _ in _partition_chunks(batches):
+            base = cid * chunk
+            yield verify(pos, val, pos[(pos >= base) & (pos < base + chunk)])
 
     return (
-        _chunked(series, m, 0, chunk)
+        _chunked(series, m, chunk)
         .repartition("chunk_id")
         .mapInPandas(gen, schema="start long, dist double")
     )
@@ -1468,69 +1461,57 @@ def subsequence_match_znorm(
     eps2 = epsilon * epsilon
 
     def gen(batches):
-        import pandas as pdl
-
-        empty = pdl.DataFrame({"start": [], "dist": []}).astype(
-            {"start": "int64", "dist": "float64"}
-        )
-        for pdf in batches:
-            for cid, grp in pdf.groupby("chunk_id"):
-                grp = grp.sort_values("pos")
-                pos = grp["pos"].to_numpy()
-                val = grp["value"].to_numpy(dtype=np.float64)
-                base, hi = int(cid) * chunk, (int(cid) + 1) * chunk
-                if len(val) < m:
-                    yield empty
-                    continue
-                # batched over the window axis (r19, guide §4.2 — the
-                # same rewrite 55b2d79 gave the q31 DTW verify): the
-                # per-window interpreted loop cost ~0.9 ms/window;
-                # these are ~2m numpy ops over the whole chunk.
-                # Ownership/gap checks are the scalar loop's two
-                # (strictly increasing int positions: endpoint
-                # equality implies the window is gap-free).
-                starts = pos[: len(val) - m + 1]
-                own = (
-                    (starts >= base)
-                    & (starts < hi)
-                    & (pos[m - 1 :] == starts + m - 1)
-                )
-                idx = np.flatnonzero(own)
-                if not len(idx):
-                    yield empty
-                    continue
-                # per-window moments + one BLAS matmul instead of
-                # materializing normalized windows: with population
-                # std, Σxn² = m and Σxn·qn = (Σx·qn − μ·Σqn)/σ, so
-                # d² = m − 2·Σxn·qn + Σqn² (σ = 0 → xn = 0 → d² =
-                # Σqn²) — the same closed form the exact integer-sum
-                # path evaluates, here on float moments (agrees with
-                # the scalar loop to ~1e-11 abs; both round to 6dp)
-                X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
-                mu = X.sum(axis=1) / m
-                var = np.maximum(
-                    np.einsum("ij,ij->i", X, X) / m - mu * mu, 0.0
-                )
-                sd = np.sqrt(var)
-                pos_sd = sd > 0
-                sxq = X @ qn
-                d2 = np.where(
+        for cid, pos, val, _ in _partition_chunks(batches):
+            base, hi = cid * chunk, (cid + 1) * chunk
+            if len(val) < m:
+                continue
+            # batched over the window axis (r19, guide §4.2 — the same
+            # rewrite 55b2d79 gave the q31 DTW verify): the per-window
+            # interpreted loop cost ~0.9 ms/window; these are ~2m numpy
+            # ops over the whole chunk. Ownership/gap checks are the
+            # scalar loop's two (strictly increasing int positions:
+            # endpoint equality implies the window is gap-free).
+            starts = pos[: len(val) - m + 1]
+            own = (
+                (starts >= base) & (starts < hi) & (pos[m - 1 :] == starts + m - 1)
+            )
+            idx = np.flatnonzero(own)
+            if not len(idx):
+                continue
+            # per-window moments + one BLAS matmul instead of
+            # materializing normalized windows: with population std,
+            # Σxn² = m and Σxn·qn = (Σx·qn − μ·Σqn)/σ, so d² = m −
+            # 2·Σxn·qn + Σqn² (σ = 0 → xn = 0 → d² = Σqn²) — the same
+            # closed form the exact integer-sum path evaluates, here on
+            # float moments (agrees with the scalar loop to ~1e-11 abs;
+            # both round to 6dp). The single-pass moments can leave an
+            # exact-zero d² (an affine copy of the query) slightly
+            # negative, so it is clamped at 0 before the sqrt, as cnsm
+            # does.
+            X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
+            mu = X.sum(axis=1) / m
+            var = np.maximum(np.einsum("ij,ij->i", X, X) / m - mu * mu, 0.0)
+            sd = np.sqrt(var)
+            pos_sd = sd > 0
+            sxq = X @ qn
+            d2 = np.maximum(
+                np.where(
                     pos_sd,
-                    m
-                    - 2.0 * (sxq - mu * sqn) / np.where(pos_sd, sd, 1.0)
-                    + sqq,
+                    m - 2.0 * (sxq - mu * sqn) / np.where(pos_sd, sd, 1.0) + sqq,
                     sqq,
-                )
-                hit = d2 <= eps2
-                yield pdl.DataFrame(
-                    {
-                        "start": starts[idx][hit].astype("int64"),
-                        "dist": np.round(np.sqrt(d2[hit]), 6),
-                    }
-                )
+                ),
+                0.0,
+            )
+            hit = d2 <= eps2
+            yield pd.DataFrame(
+                {
+                    "start": starts[idx][hit].astype("int64"),
+                    "dist": np.round(np.sqrt(d2[hit]), 6),
+                }
+            )
 
     return (
-        _chunked(series, m, 0, chunk)
+        _chunked(series, m, chunk)
         .repartition("chunk_id")
         .mapInPandas(gen, schema="start long, dist double")
     )
@@ -1569,80 +1550,60 @@ def subsequence_match_cnsm(
     sq_raw, sqq_raw = float(q.sum()), float(np.dot(q, q))
 
     def gen(batches):
-        import pandas as pdl
-
-        empty = pdl.DataFrame(
-            {"start": [], "dist": [], "alpha": [], "beta": []}
-        ).astype(
-            {
-                "start": "int64",
-                "dist": "float64",
-                "alpha": "float64",
-                "beta": "float64",
-            }
-        )
-        for pdf in batches:
-            for cid, grp in pdf.groupby("chunk_id"):
-                grp = grp.sort_values("pos")
-                pos = grp["pos"].to_numpy()
-                val = grp["value"].to_numpy(dtype=np.float64)
-                base, hi = int(cid) * chunk, (int(cid) + 1) * chunk
-                if len(val) < m:
-                    yield empty
-                    continue
-                # batched over the window axis (r19, guide §4.2): the
-                # clamped least-squares fit is one matmul + O(m)
-                # vector ops for the whole chunk instead of a
-                # ~0.9 ms/window interpreted loop
-                starts = pos[: len(val) - m + 1]
-                own = (
-                    (starts >= base)
-                    & (starts < hi)
-                    & (pos[m - 1 :] == starts + m - 1)
-                )
-                idx = np.flatnonzero(own)
-                if not len(idx):
-                    yield empty
-                    continue
-                # per-window moments + two BLAS matmuls instead of
-                # materializing residual windows: a = (Σx·qc − x̄·Σqc)
-                # / Σqc², and the residual expands in the window's
-                # raw moments — d² = Σx² − 2aΣxq − 2bΣx + a²Σq² +
-                # 2abΣq + m·b² (the same expansion the exact
-                # integer-sum path evaluates; agrees with the scalar
-                # loop to ~1e-9 abs, both round to 6dp)
-                X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
-                sx = X.sum(axis=1)
-                xm = sx / m
-                if qvar > 0:
-                    a = (X @ qc - xm * sqc) / qvar
-                else:
-                    a = np.ones(len(idx))
-                a = np.clip(a, a_lo, a_hi)
-                b = np.clip(xm - a * qm, -beta, beta)
-                sxx = np.einsum("ij,ij->i", X, X)
-                sxq = X @ q
-                d2 = np.maximum(
-                    sxx
-                    - 2.0 * a * sxq
-                    - 2.0 * b * sx
-                    + a * a * sqq_raw
-                    + 2.0 * a * b * sq_raw
-                    + m * b * b,
-                    0.0,
-                )
-                hit = d2 <= eps2
-                yield pdl.DataFrame(
-                    {
-                        "start": starts[idx][hit].astype("int64"),
-                        "dist": np.round(np.sqrt(d2[hit]), 6),
-                        "alpha": np.round(a[hit], 6),
-                        "beta": np.round(b[hit], 6),
-                    }
-                )
+        for cid, pos, val, _ in _partition_chunks(batches):
+            base, hi = cid * chunk, (cid + 1) * chunk
+            if len(val) < m:
+                continue
+            # batched over the window axis (r19, guide §4.2): the
+            # clamped least-squares fit is one matmul + O(m) vector ops
+            # for the whole chunk instead of a ~0.9 ms/window
+            # interpreted loop
+            starts = pos[: len(val) - m + 1]
+            own = (
+                (starts >= base) & (starts < hi) & (pos[m - 1 :] == starts + m - 1)
+            )
+            idx = np.flatnonzero(own)
+            if not len(idx):
+                continue
+            # per-window moments + two BLAS matmuls instead of
+            # materializing residual windows: a = (Σx·qc − x̄·Σqc) /
+            # Σqc², and the residual expands in the window's raw
+            # moments — d² = Σx² − 2aΣxq − 2bΣx + a²Σq² + 2abΣq + m·b²
+            # (the same expansion the exact integer-sum path evaluates;
+            # agrees with the scalar loop to ~1e-9 abs, both round to
+            # 6dp)
+            X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
+            sx = X.sum(axis=1)
+            xm = sx / m
+            if qvar > 0:
+                a = (X @ qc - xm * sqc) / qvar
+            else:
+                a = np.ones(len(idx))
+            a = np.clip(a, a_lo, a_hi)
+            b = np.clip(xm - a * qm, -beta, beta)
+            sxx = np.einsum("ij,ij->i", X, X)
+            sxq = X @ q
+            d2 = np.maximum(
+                sxx
+                - 2.0 * a * sxq
+                - 2.0 * b * sx
+                + a * a * sqq_raw
+                + 2.0 * a * b * sq_raw
+                + m * b * b,
+                0.0,
+            )
+            hit = d2 <= eps2
+            yield pd.DataFrame(
+                {
+                    "start": starts[idx][hit].astype("int64"),
+                    "dist": np.round(np.sqrt(d2[hit]), 6),
+                    "alpha": np.round(a[hit], 6),
+                    "beta": np.round(b[hit], 6),
+                }
+            )
 
     return (
-        _chunked(series, m, 0, chunk)
+        _chunked(series, m, chunk)
         .repartition("chunk_id")
         .mapInPandas(gen, schema="start long, dist double, alpha double, beta double")
     )
@@ -1721,7 +1682,7 @@ def window_int_sums(
         )
 
     return (
-        _chunked(series, m, 0, chunk)
+        _chunked(series, m, chunk)
         .groupBy("chunk_id")
         .applyInPandas(
             per_chunk, schema="start long, sx long, sxx long, sxq long"

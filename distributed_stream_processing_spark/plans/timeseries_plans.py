@@ -316,7 +316,8 @@ def _dtw_oracle(rho: int = DTW_RHO, eps: float = EPS_DTW) -> str:
         "KV-match RSM/DTW (Sakoe-Chiba band rho=5): envelope-widened "
         "mean-range probes against the kv index (QueryEngineDtw "
         "phase 1), then LB_Keogh cascade + early-abandon DTW on the "
-        "candidates only (cogrouped chunks). HARD oracle since round "
+        "candidates only (one exchange of series + candidate chunks). "
+        "HARD oracle since round "
         "3: the banded DP runs as a DuckDB recursive CTE with the "
         "band unrolled into lateral column aliases — same recurrence, "
         "same operand order, bit-exact accepted distances (was "

@@ -10,10 +10,12 @@ then predict + warm-start-train an SGD linear model
 
 Engine mapping: the per-window best-match search runs DISTRIBUTED in
 one pass over chunked stored-series windows (numpy inside
-mapInPandas, all query windows scored per chunk, then a min_by
-aggregation); the reference instead ran a single-node Java engine on
-the driver (S3M's acknowledged inversion). The SGD model itself is
-tiny (dim ~ window+pred) and stays driver-side like the reference's.
+mapInPandas, all query windows scored per chunk; each partition keeps
+its per-window minimum and the driver merges those, at most one row
+per window per partition); the reference instead ran a single-node
+Java engine on the driver (S3M's acknowledged inversion). The SGD
+model itself is tiny (dim ~ window+pred) and stays driver-side like
+the reference's.
 """
 
 from __future__ import annotations
@@ -33,7 +35,16 @@ def batch_best_match(
     value_scale: int | None = None,
 ) -> dict[int, tuple[int, float, float]]:
     """Best (ED) match offset in ``series`` for every query window:
-    one distributed pass; all windows scored per chunk; min_by merge.
+    one distributed pass with ONE exchange (the series by chunk); all
+    windows are scored per chunk.
+
+    The merge runs in two steps, with no aggregation exchange: each
+    partition emits one row per window, its (d2, pos) minimum over the
+    partition's chunks, and the driver merges those rows. At most P·W
+    rows reach the driver, where P is the chunk exchange's partition
+    count (spark.sql.shuffle.partitions, or fewer after AQE
+    coalescing) and W = len(windows), which the caller already holds
+    on the driver. Ties go to the lowest position.
 
     With ``value_scale`` (fixed-decimal data, e.g. 100 for 2-decimal
     values), squared distances are EXACT int64 sums of scaled values —
@@ -66,22 +77,17 @@ def batch_best_match(
         (float(np.abs(q).max()) for _, q in items if len(q)), default=0.0
     )
 
-    from distributed_stream_processing_spark.operators.subsequence_match import _chunked
+    from distributed_stream_processing_spark.operators.subsequence_match import (
+        _chunked,
+        _partition_chunks,
+    )
 
     def gen(batches):
-        # a chunk's rows can span several Arrow record batches of the
-        # partition (spark.sql.execution.arrow.maxRecordsPerBatch), and
-        # a window straddling two of them was never scored: gather the
-        # partition's record batches first (no extra shuffle or sort)
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        for cid, grp in pdf.groupby("chunk_id"):
-            grp = grp.sort_values("pos")
-            pos = grp["pos"].to_numpy()
-            val = grp["value"].to_numpy(dtype=np.float64)
-            base, hi = int(cid) * chunk, (int(cid) + 1) * chunk
+        # each chunk's per-window minimum; one row per window per
+        # partition leaves the task
+        found = []
+        for cid, pos, val, _ in _partition_chunks(batches):
+            base, hi = cid * chunk, (cid + 1) * chunk
             if len(val) < m:
                 continue
             if value_scale is not None:
@@ -111,30 +117,27 @@ def batch_best_match(
             if not own.any():
                 continue
             Xo, so = X[own], starts[own]
-            wids, bpos, bd2 = [], [], []
             for wid, q in items:
                 d2 = ((Xo - q) ** 2).sum(axis=1)
-                i = int(np.argmin(d2))
-                wids.append(wid)
-                bpos.append(int(so[i]))
-                bd2.append(float(d2[i]))
-            yield pd.DataFrame({"window_id": wids, "pos": bpos, "d2": bd2})
+                i = int(np.argmin(d2))  # first minimum: lowest position
+                found.append((wid, int(so[i]), float(d2[i])))
+        if found:
+            pdf = pd.DataFrame(found, columns=["window_id", "pos", "d2"])
+            yield pdf.sort_values(["d2", "pos"]).drop_duplicates("window_id")
 
-    per_chunk = (
-        _chunked(series, m, 0, chunk)
+    rows = (
+        _chunked(series, m, chunk)
         .repartition("chunk_id")
         .mapInPandas(gen, schema="window_id long, pos long, d2 double")
+        .collect()
     )
-    best = (
-        per_chunk.groupBy("window_id")
-        .agg(F.min(F.struct("d2", "pos")).alias("b"))
-        .select("window_id", "b.pos", "b.d2")
-    )
+    # driver merge of the per-partition minima: the first row per
+    # window in (d2, pos) order, so ties go to the lowest position
     scale = float(value_scale) if value_scale is not None else 1.0
-    return {
-        r.window_id: (r.pos, float(np.sqrt(r.d2)) / scale, r.d2)
-        for r in best.collect()
-    }
+    best: dict[int, tuple[int, float, float]] = {}
+    for r in sorted(rows, key=lambda r: (r.d2, r.pos)):
+        best.setdefault(r.window_id, (r.pos, float(np.sqrt(r.d2)) / scale, r.d2))
+    return best
 
 
 @dataclass

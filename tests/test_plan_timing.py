@@ -11,6 +11,8 @@ pair while the controller trace semantics stay unchanged.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import functions as F
 
 from distributed_stream_processing_spark.operators.semi_stream_join import (
@@ -123,13 +125,19 @@ def test_attributor_differences_persistent_cache_metrics(spark):
         )
 
     attr = PlanTimeAttributor()
+    t0 = time.monotonic()
     primer = run_once(attr)  # first call records the baseline only
+    prime_wall_s = time.monotonic() - t0
     assert primer is None
     # the baseline now holds the cumulative metrics of the priming
     # action — dominated by the ~15+ CPU-s sha2 cache build the
     # steady-state deltas must NOT re-attribute
     build_s = sum(attr._last.values())
-    assert build_s > 5.0  # sanity: the build really was measured
+    # sanity: the build really was measured. Summed task time is at
+    # least the priming action's wall (less scheduling overhead) when
+    # the build dominates it, on any host speed and core count; a
+    # fixed floor in seconds failed on a loaded host
+    assert build_s > 0.5 * prime_wall_s
     first = run_once(attr)
     second = run_once(attr)
     assert first is not None and second is not None

@@ -200,7 +200,9 @@ def test_batch_best_match_finds_planted(spark):
     assert got[1][0] == 1200 and got[1][1] == 0.0
 
 
-def test_batch_best_match_window_straddles_record_batches(spark):
+def test_batch_best_match_window_straddles_record_batches(
+    spark, small_arrow_batches
+):
     """A chunk's rows arrive in several Arrow record batches when the
     chunk outgrows ``maxRecordsPerBatch``; a window straddling two
     record batches must still be scored (it was dropped, and the
@@ -213,15 +215,37 @@ def test_batch_best_match_window_straddles_record_batches(spark):
     m = 64
     w = {0: vals[990 : 990 + m], 1: vals[2_995 : 2_995 + m]}
     X = np.lib.stride_tricks.sliding_window_view(vals, m)
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "1000")
-    try:
-        got = batch_best_match(df, w)
-    finally:
-        spark.conf.set(key, prev)
+    got = batch_best_match(df, w)
     for wid, q in w.items():
         assert got[wid][0] == int(np.argmin(((X - q) ** 2).sum(axis=1)))
+
+
+def test_batch_best_match_one_exchange(spark, count_jobs):
+    """The per-window minimum is merged per partition and then on the
+    driver, with no aggregation exchange: one shuffle-map job for the
+    chunk exchange plus the result job. The merge keeps every window's
+    argmin over all partitions, and ties go to the lowest position."""
+    rng = np.random.default_rng(5)
+    vals = np.round(rng.normal(0, 1, 6_000).cumsum(), 2)
+    vals[4_000:4_064] = vals[100:164]  # an exact tie at 100 and 4000
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
+    ).cache()
+    df.count()
+    m = 64
+    w = {j: vals[100 + 900 * j : 164 + 900 * j] + 0.01 * j for j in range(6)}
+    got = {}
+    n_jobs = count_jobs(
+        lambda: got.update(batch_best_match(df, w, chunk=512, value_scale=100))
+    )
+    assert n_jobs == 2
+    X = np.lib.stride_tricks.sliding_window_view(np.rint(vals * 100), m)
+    for wid, q in w.items():
+        d2 = ((X - np.rint(q * 100)) ** 2).sum(axis=1)
+        assert got[wid][0] == int(np.argmin(d2))
+        assert got[wid][2] == float(d2.min())
+    assert got[0][0] == 100
+    df.unpersist()
 
 
 def test_sgd_matches_numpy_reference():

@@ -537,3 +537,180 @@ def test_index_width_exceeding_chunk_overlap_raises(spark, series):
 
     with pytest.raises(ValueError, match="chunk overlap bound"):
         _index_runs(df, (25, 8194), 100, chunk=8192).count()
+
+
+# ---------------- chunked numpy seams: Arrow record-batch straddle ----------------
+#
+# With the default 8192-point chunk, the 5,000-point series below is one
+# chunk, and at maxRecordsPerBatch=1000 it reaches its task in five
+# Arrow record batches. Each test's epsilon admits ~30% of all windows,
+# so windows that straddle two record batches are among the matches.
+
+STRADDLE_M = 32
+STRADDLE_Q = 990  # the query is the window at 990: it straddles 1,000
+
+
+@pytest.fixture(scope="module")
+def straddle_series(spark):
+    rng = np.random.default_rng(11)
+    vals = np.round(rng.normal(0, 1, 5_000).cumsum(), 2)
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
+    )
+    df.cache().count()
+    yield df, vals
+    df.unpersist()
+
+
+def _dtw_all(X: np.ndarray, q: np.ndarray, rho: int) -> np.ndarray:
+    """Banded DTW distance of every row of X to q (the scalar
+    recurrence of test_dtw_equals_brute_force, vectorized over rows)."""
+    n, m = X.shape
+    D = np.full((n, m + 1, m + 1), np.inf)
+    D[:, 0, 0] = 0.0
+    for i in range(1, m + 1):
+        for j in range(max(1, i - rho), min(m, i + rho) + 1):
+            best = np.minimum(
+                np.minimum(D[:, i - 1, j], D[:, i - 1, j - 1]), D[:, i, j - 1]
+            )
+            D[:, i, j] = (X[:, i - 1] - q[j - 1]) ** 2 + best
+    return np.sqrt(D[:, m, m])
+
+
+def _straddle_case(vals: np.ndarray, dist_fn):
+    """(query, brute-force distance of every window, epsilon): epsilon
+    sits halfway between the 30%-quantile distance and the next one,
+    so no window is within rounding of it."""
+    X = np.lib.stride_tricks.sliding_window_view(vals, STRADDLE_M)
+    q = vals[STRADDLE_Q : STRADDLE_Q + STRADDLE_M]
+    dist = dist_fn(X, q)
+    d = np.sort(dist)
+    k = int(0.3 * len(d))
+    return q, dist, float(d[k] + d[k + 1]) / 2
+
+
+def _assert_matches(got: dict, dist: np.ndarray, eps: float):
+    want = {s: float(d) for s, d in enumerate(dist) if d <= eps}
+    assert STRADDLE_Q in want
+    assert set(got) == set(want)
+    for s, d in want.items():
+        assert math.isclose(got[s], d, abs_tol=1e-6)
+
+
+def test_dtw_full_scan_window_straddles_record_batches(
+    spark, straddle_series, small_arrow_batches
+):
+    df, vals = straddle_series
+    rho = 3
+    q, dist, eps = _straddle_case(vals, lambda X, q: _dtw_all(X, q, rho))
+    got = {
+        r.start: r.dist
+        for r in subsequence_match_dtw(df, q.tolist(), eps, rho).collect()
+    }
+    _assert_matches(got, dist, eps)
+
+
+def test_znorm_window_straddles_record_batches(
+    spark, straddle_series, small_arrow_batches
+):
+    df, vals = straddle_series
+
+    def znorm_dist(X, q):
+        qn = (q - q.mean()) / q.std()
+        sd = X.std(axis=1, keepdims=True)
+        Xn = (X - X.mean(axis=1, keepdims=True)) / np.where(sd > 0, sd, 1.0)
+        return np.sqrt(((Xn - qn) ** 2).sum(axis=1))
+
+    q, dist, eps = _straddle_case(vals, znorm_dist)
+    got = {
+        r.start: r.dist
+        for r in subsequence_match_znorm(df, q.tolist(), eps).collect()
+    }
+    _assert_matches(got, dist, eps)
+
+
+def test_cnsm_window_straddles_record_batches(
+    spark, straddle_series, small_arrow_batches
+):
+    from distributed_stream_processing_spark.operators.subsequence_match import (
+        subsequence_match_cnsm,
+    )
+
+    df, vals = straddle_series
+    alpha, beta = 2.0, 10.0
+
+    def cnsm_dist(X, q):
+        qc = q - q.mean()
+        a = np.clip(
+            ((X - X.mean(axis=1, keepdims=True)) @ qc) / np.dot(qc, qc),
+            1 / alpha,
+            alpha,
+        )
+        b = np.clip(X.mean(axis=1) - a * q.mean(), -beta, beta)
+        r = X - (a[:, None] * q + b[:, None])
+        return np.sqrt((r * r).sum(axis=1))
+
+    q, dist, eps = _straddle_case(vals, cnsm_dist)
+    got = {
+        r.start: r.dist
+        for r in subsequence_match_cnsm(df, q.tolist(), eps, alpha, beta).collect()
+    }
+    _assert_matches(got, dist, eps)
+
+
+def test_indexed_verify_window_straddles_record_batches(
+    spark, straddle_series, small_arrow_batches
+):
+    """The candidate verify (_verify_starts: series rows and candidate
+    starts through one exchange) gathers each partition too."""
+    df, vals = straddle_series
+    q, dist, eps = _straddle_case(
+        vals, lambda X, q: np.sqrt(((X - q) ** 2).sum(axis=1))
+    )
+    got = {
+        r.start: r.dist
+        for r in subsequence_match_ed(
+            df, q.tolist(), eps, widths=(25,), value_scale=100
+        ).collect()
+    }
+    _assert_matches(got, dist, eps)
+
+
+def test_indexed_ed_one_exchange(spark, series, count_jobs):
+    """An indexed ED range query verifies its candidates through ONE
+    exchange (series rows and candidate starts unioned): one
+    shuffle-map job plus the result job."""
+    df, arr = series
+    idx = build_kv_index(df, widths=(25, 50), value_scale=100).cache()
+    idx.count()
+    q = arr[500 : 500 + M]
+    rows = []
+    n_jobs = count_jobs(
+        lambda: rows.extend(
+            subsequence_match_ed(
+                df, q.tolist(), 1.0, widths=(25, 50), index=idx,
+                n_positions=N, value_scale=100, available_widths={25, 50},
+            ).collect()
+        )
+    )
+    assert n_jobs == 2
+    assert sorted((r.start, r.dist) for r in rows) == brute_force_ed(arr, q, 1.0)
+    idx.unpersist()
+
+
+def test_znorm_affine_copy_distance_is_zero(spark, series):
+    """An affine copy of the query has an exact z-normalized d² of 0;
+    the closed form on single-pass float moments can land slightly
+    below 0, which gave a NaN (null) distance before the clamp."""
+    df, arr = series
+    q = arr[700 : 700 + M]
+    vals = np.concatenate([arr[:2900], np.round(2.0 * q + 3.0, 2), arr[2900 + M :]])
+    df2 = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
+    )
+    got = {
+        r.start: r.dist
+        for r in subsequence_match_znorm(df2, q.tolist(), 0.5, chunk=CHUNK).collect()
+    }
+    assert got[2900] == 0.0 and got[700] == 0.0
+    assert all(d is not None and not math.isnan(d) for d in got.values())
