@@ -540,94 +540,103 @@ def duplicate_clusters(
     edges_pin = None  # set once the first contraction lands
     contract_done = False
     rounds = 0
-    for _ in range(max_rounds):
-        rounds += 1
-        # hook: min label over the closed neighborhood
-        nbr = edges.join(
-            bounded_broadcast(
-                labels.select(
-                    F.col("id").alias("v"), F.col("label").alias("nl")
-                ),
-                n_active,
-            ),
-            "v",
-        ).select(F.col("u").alias("id"), F.col("nl").alias("cand"))
-        hooked = (
-            labels.select("id", F.col("label").alias("cand"))
-            .unionAll(nbr)
-            .groupBy("id")
-            .agg(F.min("cand").alias("label"))
-        )
-        # jump: label <- label-of-label. Every label is a node id (it
-        # starts as the node's own id and each hook takes a min over
-        # other nodes' labels), so the self-join always matches; the
-        # left+coalesce is belt-and-braces for edges referencing ids
-        # absent from ``ids``. (hooked appears on both sides, so its
-        # subtree computes twice per round — one extra E-pass only on
-        # the pre-contraction rounds, cheaper than checkpointing it.)
-        jumped = (
-            hooked.join(
+    # every pin the loop holds is released if it raises (max_rounds
+    # exhausted included): the pins are locals, so after the error
+    # nothing but JVM GC would ever free their blocks
+    try:
+        for _ in range(max_rounds):
+            rounds += 1
+            # hook: min label over the closed neighborhood
+            nbr = edges.join(
                 bounded_broadcast(
-                    hooked.select(
-                        F.col("id").alias("pid"),
-                        F.col("label").alias("plabel"),
+                    labels.select(
+                        F.col("id").alias("v"), F.col("label").alias("nl")
                     ),
                     n_active,
                 ),
-                F.col("label") == F.col("pid"),
-                "left",
+                "v",
+            ).select(F.col("u").alias("id"), F.col("nl").alias("cand"))
+            hooked = (
+                labels.select("id", F.col("label").alias("cand"))
+                .unionAll(nbr)
+                .groupBy("id")
+                .agg(F.min("cand").alias("label"))
             )
-            .select(
-                "id", F.coalesce("plabel", "label").alias("new_label")
+            # jump: label <- label-of-label. Every label is a node id (it
+            # starts as the node's own id and each hook takes a min over
+            # other nodes' labels), so the self-join always matches; the
+            # left+coalesce is belt-and-braces for edges referencing ids
+            # absent from ``ids``. (hooked appears on both sides, so its
+            # subtree computes twice per round — one extra E-pass only on
+            # the pre-contraction rounds, cheaper than checkpointing it.)
+            jumped = (
+                hooked.join(
+                    bounded_broadcast(
+                        hooked.select(
+                            F.col("id").alias("pid"),
+                            F.col("label").alias("plabel"),
+                        ),
+                        n_active,
+                    ),
+                    F.col("label") == F.col("pid"),
+                    "left",
+                )
+                .select(
+                    "id", F.coalesce("plabel", "label").alias("new_label")
+                )
             )
-        )
-        merged_in = labels.join(
-            bounded_broadcast(jumped, n_active), "id"
-        ).select(
-            "id",
-            F.col("new_label").alias("label"),
-            (F.col("new_label") != F.col("label")).alias("changed"),
-        ).coalesce(label_parts)
-        merged = lazy_local_checkpoint(
-            merged_in, cols=["id", "label", "changed"]
-        )
-        # the round's convergence action — also materializes the
-        # checkpoint
-        changed = merged.filter(F.col("changed")).limit(1).count()
-        # the old labels' blocks have no further consumer (merged is a
-        # leaf) — release them instead of waiting on GC
-        release_checkpoint(labels_pin)
-        labels, labels_pin = merged.select("id", "label"), merged
-        if changed == 0:
-            break
-        if not contract_done:
-            lab_u = labels.select(
-                F.col("id").alias("u"), F.col("label").alias("lu")
+            merged_in = labels.join(
+                bounded_broadcast(jumped, n_active), "id"
+            ).select(
+                "id",
+                F.col("new_label").alias("label"),
+                (F.col("new_label") != F.col("label")).alias("changed"),
+            ).coalesce(label_parts)
+            merged = lazy_local_checkpoint(
+                merged_in, cols=["id", "label", "changed"]
             )
-            lab_v = labels.select(
-                F.col("id").alias("v"), F.col("label").alias("lv")
+            # the round's convergence action — also materializes the
+            # checkpoint
+            changed = merged.filter(F.col("changed")).limit(1).count()
+            # the old labels' blocks have no further consumer (merged is a
+            # leaf) — release them instead of waiting on GC
+            release_checkpoint(labels_pin)
+            labels, labels_pin = merged.select("id", "label"), merged
+            if changed == 0:
+                break
+            if not contract_done:
+                lab_u = labels.select(
+                    F.col("id").alias("u"), F.col("label").alias("lu")
+                )
+                lab_v = labels.select(
+                    F.col("id").alias("v"), F.col("label").alias("lv")
+                )
+                contracted = (
+                    edges.join(bounded_broadcast(lab_u, n_active), "u")
+                    .join(bounded_broadcast(lab_v, n_active), "v")
+                    .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
+                    .filter(F.col("u") != F.col("v"))
+                    .distinct()
+                )
+                new_edges = lazy_local_checkpoint(contracted, cols=["u", "v"])
+                n_edges = new_edges.count()
+                if edges_pin is not None:
+                    release_checkpoint(edges_pin)
+                elif pairs_pin is not None:
+                    # the first contraction supersedes the pair leaf
+                    release_checkpoint(pairs_pin)
+                    pairs_pin = None
+                edges, edges_pin = new_edges, new_edges
+                contract_done = n_edges <= max(1000, 4 * n_active)
+        else:
+            raise RuntimeError(
+                f"duplicate_clusters did not converge in {max_rounds} rounds"
             )
-            contracted = (
-                edges.join(bounded_broadcast(lab_u, n_active), "u")
-                .join(bounded_broadcast(lab_v, n_active), "v")
-                .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            new_edges = lazy_local_checkpoint(contracted, cols=["u", "v"])
-            n_edges = new_edges.count()
-            if edges_pin is not None:
-                release_checkpoint(edges_pin)
-            elif pairs_pin is not None:
-                # the first contraction supersedes the pair leaf
-                release_checkpoint(pairs_pin)
-                pairs_pin = None
-            edges, edges_pin = new_edges, new_edges
-            contract_done = n_edges <= max(1000, 4 * n_active)
-    else:
-        raise RuntimeError(
-            f"duplicate_clusters did not converge in {max_rounds} rounds"
-        )
+    except BaseException:
+        for pin in (pairs_pin, edges_pin, labels_pin):
+            if pin is not None:
+                release_checkpoint(pin)
+        raise
     if stats is not None:
         stats["rounds"] = rounds
     # the edge blocks have no consumer past the loop (the result joins

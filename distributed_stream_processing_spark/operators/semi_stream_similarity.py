@@ -53,44 +53,33 @@ reference's own 10-doc batches (484/4096 buckets) the bucket filter
 cost more than the full directory scan it pruned (0.54 s vs 0.23 s;
 tools/exp_fetch_prune*.py).
 
-STATE (r15): cache/LRU live as a base localCheckpoint plus flat
-append-only per-batch deltas (probe-key + fetch checkpoint LEAVES —
-LogicalRDDs, so no consumer can ever re-execute another batch's
-lineage); the O(state) latest-wins fold (one union + one groupBy,
-streaming/lru_state.py, shared with the equi pipeline) + eviction +
-re-checkpoint runs every min(compact_every, controller-window)
-batches. This removed the per-batch fixed floor (the unconditional
-state rewrite) while keeping eviction over-stay bounded by the
-window.
+STATE: streaming/lru_state.py (``CacheState``, shared with the equi
+pipeline) owns the deferred-compaction cache/LRU, the batch's one
+combined action and every pin; this module builds the probe, the miss
+detect, the key-directory fetch and the verify.
 """
 
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass, field
 from fractions import Fraction
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from distributed_stream_processing_spark.functions.text import jaccard_parts
+from distributed_stream_processing_spark.operators.semi_stream_join import (
+    replay_in_batches,
+)
 from distributed_stream_processing_spark.operators.skew import bounded_broadcast
 from distributed_stream_processing_spark.streaming.cache_controller import (
     AdaptiveCacheController,
-    BatchTimings,
-)
-from distributed_stream_processing_spark.streaming.plan_timing import (
-    DeferredObservation,
-    PlanTimeAttributor,
-)
-from distributed_stream_processing_spark.streaming.checkpoint import (
-    lazy_local_checkpoint,
-    release_checkpoint,
 )
 from distributed_stream_processing_spark.streaming.lru_state import (
-    fold_lru,
-    state_views,
+    CachedPipeline,
+    CacheState,
 )
 
 # the cache/LRU/fetch key: xxhash64 of the signature triple — see the
@@ -498,21 +487,15 @@ class SimilarityStore:
 
 
 @dataclass
-class SemiStreamSimilarityJoin:
+class SemiStreamSimilarityJoin(CachedPipeline):
     stored: DataFrame | None = None  # (id, tokens) — the remote document store
     threshold: Fraction | float = Fraction(4, 5)
     controller: AdaptiveCacheController = field(default_factory=AdaptiveCacheController)
     artifacts: SimilarityStore | None = None  # prebuilt corpus store
-    # full cache/LRU rewrite + checkpoint every K batches (r15): the
-    # per-batch state swap was the pipeline's fixed floor — empty
-    # batches cost 2.0-4.3 s rewriting O(state) rows that hadn't
-    # changed. Between compactions the state is a flat append-only
-    # union (base checkpoint + pinned per-batch probe-key/fetch
-    # leaves), so a batch's one action materializes only O(batch)
-    # rows; every min(K, controller-window)-th batch pays the
-    # O(state) latest-wins fold + eviction once (X8 lineage
-    # truncation, amortized; eviction over-stay bounded by the
-    # window).
+    # compaction cadence (streaming/lru_state.py): the real cadence is
+    # min(compact_every, controller window). Deferring the compaction
+    # removed the per-batch O(state) rewrite, the pipeline's fixed
+    # floor (empty batches cost 2.0-4.3 s rewriting unchanged rows).
     compact_every: int = 8
     # pluggable keyed remote fetch (SURVEY S7; sources/fetcher.py):
     # any object with fetch(missed_keys) -> DataFrame in the cache
@@ -524,8 +507,6 @@ class SemiStreamSimilarityJoin:
     fetcher: object | None = None
     sig_store: DataFrame | None = None
     kv_store: DataFrame | None = None
-    cache: DataFrame | None = None
-    lru: DataFrame | None = None
     _groups: list | None = None
     _hs: dict | None = None
 
@@ -559,10 +540,13 @@ class SemiStreamSimilarityJoin:
             self.kv_store = _build_kv_directory(self.sig_store, n_part)
         spark = self.sig_store.sparkSession
         # cache rows carry the fetch layout: (sk, b_id, b_sz, b_kind)
-        self.cache = spark.createDataFrame(
-            [], "sk long, b_id long, b_sz int, b_kind int"
-        ).cache()
-        self.lru = spark.createDataFrame([], "sk long, last_seen long").cache()
+        self._state = CacheState(
+            spark.createDataFrame(
+                [], "sk long, b_id long, b_sz int, b_kind int"
+            ).cache(),
+            spark.createDataFrame([], "sk long, last_seen long").cache(),
+            _KEY, self.controller, self.compact_every,
+        )
         # probe-side signature expressions built ONCE and reused per
         # batch (see _sig_exprs: ~0.7s of py4j construction per call)
         self._probe_exprs = _sig_exprs(
@@ -587,21 +571,6 @@ class SemiStreamSimilarityJoin:
             (t.denominator * F.col("b_sz") >= t.numerator * F.col("a_sz"))
             & (t.denominator * F.col("a_sz") >= t.numerator * F.col("b_sz"))
         )
-        self._attributor = PlanTimeAttributor()
-        self._deferred = DeferredObservation()
-        # LRU row bound for the eviction-set broadcast gate: exact at
-        # each compaction (read off the 'l' branch count), grown by
-        # the batch's probe-key count between them (an upper bound —
-        # every probed key could be new). Overcounting only demotes a
-        # broadcast to the spillable tiers, never the reverse.
-        self._lru_rows: int = 0
-        # persisted artifacts backing the current state: the base
-        # checkpoints [cache, lru] from the last compaction, plus each
-        # pending batch's (batch_id, probe-key checkpoint, fetch
-        # cache) delta. Released together at the next compaction (or
-        # close()).
-        self._base_pins: list[DataFrame] = [self.cache, self.lru]
-        self._pend: list[tuple] = []
 
     def _sigs(self, df: DataFrame, prefix: str, own_group_only: bool) -> DataFrame:
         return _emit_sigs(
@@ -682,95 +651,17 @@ class SemiStreamSimilarityJoin:
         ).select("a_id", "a_sz", "sk", "b_kind")
         return direct.unionByName(chosen)
 
-    def process_batch(self, batch: DataFrame, batch_id: int) -> DataFrame:
-        """One micro-batch of query docs (id, tokens) -> verified
-        similar pairs vs the stored corpus, through the cache.
-
-        The previous batch's attribution walk (background diagnostics,
-        DeferredObservation) is joined just before this batch reads
-        ``controller.window`` — the latest point that preserves the
-        synchronous flow's semantics, so the walk genuinely overlaps
-        THIS batch's driver-side plan construction (probe signatures,
-        miss detect, verify) even for back-to-back callers like
-        run_semi_stream_similarity (ADVICE r10). Callers reading
-        ``controller.history`` after a bare process_batch must call
-        :meth:`flush_attribution`."""
-        t = self.threshold
-        # the probe side (one micro-batch of chosen probe rows) is the
-        # small side of every join below — broadcast it so the cached
-        # signature store is only ever SCANNED, never shuffled. Pinned
-        # as a CHECKPOINT LEAF, not a cache: relation dedup re-instances
-        # cache subtrees embedded across join sides, after which the
-        # CacheManager lookup misses and each consumer re-runs the
-        # whole probe emission (see the fetch note below for the
-        # measured blast radius of that failure mode)
-        probe_in = self._probe_rows(batch)
-        probe = lazy_local_checkpoint(
-            probe_in, cols=["a_id", "a_sz", "sk", "b_kind"]
-        )
-
-        t0 = time.monotonic()
-        # pinned per-batch key set (lazy checkpoint, materialized by
-        # the combined action's 'p' branch): the LRU/cache chains
-        # reference it until the next compaction, so it must not
-        # recompute through the caller's batch DataFrame
-        # (toDF: the checkpoint RDD inherits the probe's expression
-        # ids; re-aliasing keeps batch-side joins against
-        # probe_keys-derived plans clear of the analyzer's
-        # conflicting-reference check)
-        # coalesce(8): the key set is batch-sized by construction, and
-        # every later read is a broadcast collect or a compaction fold
-        # — 8 partitions keep those reads off the 32-task scheduling
-        # floor that dominates EMPTY batches
-        probe_keys = lazy_local_checkpoint(
-            probe.select(*_KEY).distinct().coalesce(8), cols=list(_KEY)
-        )
-        # the LRU holds exactly the keys whose store rows are already
-        # cached OR known absent from the store (negative caching:
-        # keys with no store rows are not refetched every batch).
-        # Miss detect is SCAN-SIDE (r15): semi-join the LRU against
-        # the broadcast batch keys (one scan of state, like the kv
-        # fetch), then a tiny anti between two batch-sized sets —
-        # probe ∖ (lru ⋉ probe) ≡ probe ∖ lru. The previous shape
-        # broadcast the LRU itself into the anti-join: a per-batch
-        # O(state) driver collect (~16 MB per 1M keys, every batch,
-        # forever) — exactly the unconditional-broadcast scale risk
-        # bounded_broadcast exists to remove, paid here even on empty
-        # batches.
-        hit_keys = self.lru.select(*_KEY).join(
-            F.broadcast(probe_keys), _KEY, "left_semi"
-        )
-        # pinned as its own CHECKPOINT LEAF so the fetch plan embeds
-        # only a leaf scan: the miss-detect work (LRU semi scan +
-        # anti) is attributed to the JOIN phase via the missed_in
-        # extra instead of riding inside the fetch leaf's RDD and
-        # inflating fetch_s — the signal that grows the controller
-        # window must read ~0 on a zero-miss batch
-        missed_in = probe_keys.join(
-            F.broadcast(hit_keys), _KEY, "left_anti"
-        )
-        missed_keys = lazy_local_checkpoint(missed_in, cols=list(_KEY))
-        # the miss fetch reads the KEY DIRECTORY — one row per distinct
-        # sk, matched groups exploded back to flat cache rows. Scans
-        # rows-per-KEY with a single-long broadcast semi-join: the
-        # engine's analogue of the reference's indexed point lookup
-        # (module docstring; measured 7.9-8.6 s -> ~0.6 s per batch at
-        # the 100x store). Pinned as a CHECKPOINT LEAF (LogicalRDD),
-        # not a cache: the analyzer's relation dedup re-instances
-        # subtrees that share expression ids across join sides, after
-        # which the CacheManager's canonical lookup MISSES and the
-        # consumer silently re-executes the fetch lineage — which
-        # embeds the state view and therefore every prior pending
-        # batch's fetch, doubling per-batch job counts (measured
-        # 20 -> 1053 over seven batches on the equi twin). A leaf has
-        # no lineage to re-execute; toDF gives each batch's leaf fresh
-        # output ids.
-        # a fetcher may DECLINE (return None — AutoFetcher's scan pick
-        # with no delegate): the pipeline then runs its inline default
+    def _fetch(self, missed_keys: DataFrame) -> DataFrame:
+        """Fetch phase: the store rows of the missed keys, in the cache
+        layout. A fetcher may DECLINE (return None — AutoFetcher's scan
+        pick with no delegate); the inline default then reads the KEY
+        DIRECTORY — one row per distinct sk, matched groups exploded
+        back to flat cache rows — with a single-long broadcast
+        semi-join: the engine's analogue of the reference's indexed
+        point lookup (module docstring; measured 7.9-8.6 s -> ~0.6 s
+        per batch at the 100x store)."""
         fetch_in = (
-            self.fetcher.fetch(missed_keys)
-            if self.fetcher is not None
-            else None
+            self.fetcher.fetch(missed_keys) if self.fetcher is not None else None
         )
         if fetch_in is None:
             fetch_in = (
@@ -778,10 +669,14 @@ class SemiStreamSimilarityJoin:
                 .select("sk", F.explode("rows").alias("r"))
                 .select("sk", "r.b_id", "r.b_sz", "r.b_kind")
             )
-        fetched = lazy_local_checkpoint(
-            fetch_in, cols=["sk", "b_id", "b_sz", "b_kind"]
-        )
+        return fetch_in
 
+    def _verified(
+        self, batch: DataFrame, probe: DataFrame, fetched: DataFrame
+    ) -> DataFrame:
+        """Verify phase: the batch's candidate pairs from the cache (hit)
+        and the fetched rows (miss), deduped, joined to their payloads
+        and verified exactly."""
         # b_kind is an equi-key: each probe row joins only the store
         # kind it targets (VSL rows name theirs; equality rows are 0)
         hit = self.cache.join(F.broadcast(probe), _KEY + ["b_kind"])
@@ -843,221 +738,62 @@ class SemiStreamSimilarityJoin:
             bounded_broadcast(b_side, self._rep_rows, max_rows=500_000),
             "b_id",
         )
-        # lazy localCheckpoint (the X8 lineage-truncation pattern): the
-        # caller's final evaluation of the unioned batches must not
-        # recompute through this batch's (by then unpersisted) cache
-        # state, so the output is pinned to checkpoint blocks — but
-        # the pinning job is the batch's ONE combined action below,
-        # not a separate eager barrier ahead of state maintenance
-        # (round 2 ran 5 actions per batch, rounds 3-4 ran 2 with the
-        # output serialized before the state swap; this runs 1, so at
-        # thousands of batches the output tail never stalls the
-        # pipeline).
-        out_in = _verify(pairs, t, self._mapping is not None)
-        out = lazy_local_checkpoint(out_in)
+        return _verify(pairs, self.threshold, self._mapping is not None)
 
-        # ---- signature-keyed LRU / eviction / cache rebuild ----
-        # Deferred compaction (r15): the O(state) latest-wins fold +
-        # eviction + localCheckpoint runs only at COMPACTION batches.
-        # Between them the state is a flat APPEND-ONLY union — base
-        # checkpoint + each pending batch's pinned probe-key/fetch
-        # delta, NO joins — so reading it costs one scan and zero
-        # extra jobs, and a batch's one action materializes O(batch)
-        # rows (the empty-batch floor was the unconditional rewrite).
-        # An earlier r15 draft chained the per-batch anti-join
-        # rewrites lazily instead: every chain evaluation re-ran every
-        # prior batch's broadcast subqueries, and per-batch job counts
-        # grew geometrically (measured 14 -> 29 -> 66 jobs over three
-        # sf0.1 batches) — eviction must not ride the hot path as
-        # unmaterialized joins.
-        #
-        # Eviction between compactions is DEFERRED, never lost: keys
-        # only over-stay (transparency unaffected — the LRU set still
-        # equals the keys whose rows are cached or known absent), and
-        # the compaction cadence is bounded by the CONTROLLER WINDOW
-        # (min(compact_every, window)), so a key due for eviction
-        # over-stays at most window-1 batches — with window=1 the
-        # reference's strict per-batch eviction is preserved exactly.
-        # The previous batch's background walk is joined NOW — the
-        # first controller read; everything above overlapped it.
-        self._deferred.flush()
-        window = self.controller.window
-        compact = len(self._pend) + 1 >= max(
-            1, min(self.compact_every, window)
-        )
-        # batches the compaction fold covers — captured before the
-        # release path resets _pend; maintain_s is amortized over it
-        # below (ADVICE r15)
-        n_folded = len(self._pend) + 1 if compact else 1
-        n_part = int(
-            self.sig_store.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        # join extras precede the fetch extra (ADVICE r15), and the
-        # miss-detect rides its own leaf input (missed_in) — fetch_in
-        # embeds only the key-directory scan + one leaf-scan
-        # broadcast, so fetch_s is exactly the store-fetch cost the
-        # window policy feeds on
-        extra_roots = [
-            ("join", probe_in),
-            ("join", missed_in),
-            ("join", out_in),
-            ("fetch", fetch_in),
-        ]
-        if compact:
-            # latest-wins fold of base + every pending key set (one
-            # union + one groupBy, shared with the equi pipeline:
-            # fold_lru), then the eviction filter — stale's broadcast
-            # hint is gated on the tracked LRU row count (after a
-            # workload shift stale can be cache-sized; these plans are
-            # AQE-off with no runtime fallback — ADVICE r6). Runs ONCE
-            # per compaction window.
-            cache_full, lru_view = state_views(
-                self._base_pins[0],
-                self._base_pins[1],
-                self._pend + [(batch_id, probe_keys, fetched)],
-            )
-            lru_full = fold_lru(lru_view, _KEY)
-            stale = bounded_broadcast(
-                lru_full.filter(
-                    F.col("last_seen") < batch_id - window
-                ).select(*_KEY),
-                self._lru_rows,
-            )
-            cache_in = cache_full.join(stale, _KEY, "left_anti").coalesce(
-                n_part
-            )
-            lru_in = lru_full.join(stale, _KEY, "left_anti").coalesce(n_part)
-            new_cache = lazy_local_checkpoint(cache_in)
-            new_lru = lazy_local_checkpoint(lru_in)
-            extra_roots += [("maintain", cache_in), ("maintain", lru_in)]
-        # THE one action of the batch: a single job materializes the
-        # verified output checkpoint, the per-batch pinned deltas (and
-        # on compaction batches both state checkpoints), and the
-        # controller's key counts together — output verify and state
-        # maintenance share the cluster instead of serializing
-        tagged = (
-            missed_keys.select(F.lit("m").alias("t"))
-            .unionAll(probe_keys.select(F.lit("p").alias("t")))
-            .unionAll(out.select(F.lit("o").alias("t")))
-            .unionAll(fetched.select(F.lit("x").alias("t")))
-        )
-        # phase ownership (r15): the scan-side miss detect embeds the
-        # hit-key computation (LRU semi scan + broadcasts) in the 'm'
-        # subtree — JOIN work — so m is tagged join and walked before
-        # x, leaving fetch owning exactly the key-directory scan +
-        # fetch join the controller's window policy feeds on
-        phases = ["join", "join", "join", "fetch"]
-        tags = ["m", "p", "o", "x"]
-        walk_order = [1, 0, 3, 2]
-        if compact:
-            tagged = tagged.unionAll(
-                new_cache.select(F.lit("c").alias("t"))
-            ).unionAll(new_lru.select(F.lit("l").alias("t")))
-            phases = phases + ["maintain", "maintain"]
-            tags = tags + ["c", "l"]
-            # p, m, x, c, l, o — the shared cached fetch is walked
-            # (x) before the state branches that reuse it
-            walk_order = [1, 0, 3, 4, 5, 2]
-        counts_df = tagged.groupBy("t").agg(F.count("*").alias("n"))
-        counts = {r.t: r.n for r in counts_df.collect()}
-        n_miss = int(counts.get("m", 0))
-        n_keys = int(counts.get("p", 0))
-        total_s = time.monotonic() - t0
+    def process_batch(self, batch: DataFrame, batch_id: int) -> DataFrame:
+        """One micro-batch of query docs (id, tokens) -> verified
+        similar pairs vs the stored corpus, through the cache.
 
-        # the probe and missed-key leaves' only consumers (hit/miss →
-        # out, fetch leaf, the m branch) ran inside the combined
-        # action above; release their blocks for real (RDD-level —
-        # DataFrame.unpersist was a no-op on checkpoint leaves and
-        # executor storage floated with GC lag, ADVICE r15)
-        release_checkpoint(probe)
-        release_checkpoint(missed_keys)
-        if compact:
-            # the compaction checkpoints absorbed every pending delta
-            # (including this batch's fetch/probe keys) — release them
-            # and the previous base together
-            for _, pk_i, f_i in self._pend:
-                release_checkpoint(pk_i)
-                release_checkpoint(f_i)
-            for d in self._base_pins:
-                release_checkpoint(d)
-            release_checkpoint(fetched)
-            release_checkpoint(probe_keys)
-            self._pend = []
-            self._base_pins = [new_cache, new_lru]
-            # exact LRU bound off the compaction's own count branch
-            self._lru_rows = int(counts.get("l", 0))
-            self.cache, self.lru = new_cache, new_lru
-        else:
-            self._pend.append((batch_id, probe_keys, fetched))
-            # upper bound: every probed key could be new to the LRU
-            self._lru_rows += n_keys
-            # flat state views over base + pendings (pure unions — the
-            # next batch reads them with one scan, no joins)
-            self.cache, self.lru = state_views(
-                self._base_pins[0], self._base_pins[1], self._pend
+        The previous batch's attribution walk (background diagnostics,
+        streaming/lru_state.py) is joined at this batch's first read of
+        ``controller.window``, so the walk overlaps THIS batch's
+        driver-side plan construction (probe signatures, miss detect,
+        verify) even for back-to-back callers like
+        run_semi_stream_similarity. Callers reading
+        ``controller.history`` after a bare process_batch must call
+        :meth:`flush_attribution`."""
+        state = self._state
+        with state.batch():
+            # the probe side (one micro-batch of chosen probe rows) is
+            # the small side of every join — broadcast, so the cached
+            # signature store is only ever SCANNED, never shuffled
+            probe_in = self._probe_rows(batch)
+            probe = state.pin(probe_in, cols=["a_id", "a_sz", "sk", "b_kind"])
+            probe_keys = state.pin_keys(probe)
+            # the LRU holds exactly the keys whose store rows are already
+            # cached OR known absent from the store (negative caching:
+            # keys with no store rows are not refetched every batch).
+            # Miss detect is SCAN-SIDE: semi-join the LRU against
+            # the broadcast batch keys (one scan of state, like the kv
+            # fetch), then a tiny anti between two batch-sized sets —
+            # probe ∖ (lru ⋉ probe) ≡ probe ∖ lru. The previous shape
+            # broadcast the LRU itself into the anti-join: a per-batch
+            # O(state) driver collect (~16 MB per 1M keys, every batch,
+            # forever) — exactly the unconditional-broadcast scale risk
+            # bounded_broadcast exists to remove, paid here even on
+            # empty batches. The missed keys are pinned as their own
+            # leaf so the miss detect is attributed to the JOIN phase,
+            # not to the fetch that reads them.
+            hit_keys = self.lru.select(*_KEY).join(
+                F.broadcast(probe_keys), _KEY, "left_semi"
             )
-        # MEASURED per-phase split from the combined action's SQL
-        # metrics: p owns the probe signature emission, m the miss
-        # detect (both join context — m embeds the hit-key semi scan),
-        # x the key-directory fetch, c/l the state rebuild (compaction
-        # batches only — between them maintenance is deferred and the
-        # phase reads ~0), o the hit/miss join + verification; x is
-        # walked before c/o so the shared cached fetch lands in the
-        # fetch phase. The walk is py4j-round-trip-
-        # bound, so it runs in the background and is joined at the
-        # next batch's entry.
-        attributor, controller = self._attributor, self.controller
-
-        def _attribute_and_observe():
-            split = attributor.attribute(
-                counts_df, phases=phases, tags=tags, walk_order=walk_order,
-                extra=extra_roots,
+            missed_in = probe_keys.join(F.broadcast(hit_keys), _KEY, "left_anti")
+            missed_keys = state.pin(missed_in, cols=list(_KEY))
+            fetch_in = self._fetch(missed_keys)
+            fetched = state.pin(fetch_in, cols=["sk", "b_id", "b_sz", "b_kind"])
+            # the output is pinned to checkpoint blocks, so the caller's
+            # final evaluation of the unioned batches never recomputes
+            # through this batch's (by then released) state; the
+            # pinning job is the batch's ONE combined action
+            out_in = self._verified(batch, probe, fetched)
+            out = state.pin(out_in)
+            state.commit(
+                batch_id, keys=probe_keys, missed=missed_keys,
+                fetched=fetched, out=out,
+                join_extras=[probe_in, missed_in, out_in],
+                fetch_extra=fetch_in,
             )
-            if split is not None:
-                # the compaction fold's O(state) spike is amortized
-                # over the batches it covered — the controller reads
-                # PER-BATCH maintenance, and an unamortized spike
-                # shrinks the window that sets the compaction cadence
-                # (feedback oscillation; ADVICE r15)
-                fetch_s = split["fetch"]
-                maintain_s = split.get("maintain", 0.0) / n_folded
-                join_s, measured = split["join"], True
-            else:
-                # fallback: miss-fraction attribution — the signal the
-                # reference's rule-based window policy keys on
-                # (DS_SimJoin_stream.scala:645-667)
-                miss_frac = n_miss / n_keys if n_keys else 0.0
-                fetch_s = total_s * miss_frac
-                maintain_s = total_s - fetch_s
-                join_s, measured = 0.0, False
-            controller.observe(
-                BatchTimings(
-                    batch_id, n_miss, fetch_s, maintain_s,
-                    join_s=join_s, measured=measured,
-                )
-            )
-
-        self._deferred.submit(_attribute_and_observe)
         return out
-
-    def flush_attribution(self) -> None:
-        """Join the pending background attribution walk — required
-        before reading ``controller.history`` after the last batch."""
-        self._deferred.flush()
-
-    def close(self) -> None:
-        """Release every persisted block backing the pipeline's STATE
-        (base checkpoints + pending deltas). Batch outputs are pinned
-        to their own checkpoint blocks and stay readable. Safe to call
-        once the last batch's combined action has run; the instance
-        must not process further batches afterwards."""
-        self.flush_attribution()
-        for _, pk_i, f_i in self._pend:
-            release_checkpoint(pk_i)
-            release_checkpoint(f_i)
-        for d in self._base_pins:
-            release_checkpoint(d)
-        self._pend, self._base_pins = [], []
 
 
 def run_semi_stream_similarity(
@@ -1080,23 +816,17 @@ def run_semi_stream_similarity(
         artifacts=artifacts,
         fetcher=fetcher,
     )
-    outs = []
-    for b in range(n_batches):
-        batch = stream_table.filter(F.pmod(F.col("id"), F.lit(n_batches)) == b)
-        outs.append(j.process_batch(batch, b))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    # the last batch's background attribution must land before anyone
-    # reads the controller history off the diagnostics seam; close()
-    # releases the state blocks (the outputs are checkpoint-pinned by
-    # each batch's action and stay readable) so repeated invocations —
-    # a benchmark loop, a long session — don't accrete dead cache/LRU
-    # state in the CacheManager
-    j.close()
-    # per-invocation diagnostics seam (bench.py publishes the
-    # measured/estimated regime split): carried on the result, not a
-    # module global, so interleaved pipelines can't cross-report
+    # close() in finally: the state blocks are released on error too
+    # (see run_semi_stream_join)
+    try:
+        outs = [
+            j.process_batch(batch, b)
+            for b, batch in replay_in_batches(stream_table, n_batches, "id")
+        ]
+    finally:
+        j.close()
+    out = reduce(DataFrame.unionByName, outs)
+    # per-invocation diagnostics seam, as in run_semi_stream_join
     out._controller = j.controller
     return out
 

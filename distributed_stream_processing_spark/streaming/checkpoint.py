@@ -83,17 +83,24 @@ def lazy_local_checkpoint(df: DataFrame, cols: list[str] | None = None) -> DataF
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
-    jrdd = None
-    try:
-        plan = out._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            jrdd = plan.rdd()
-    except Exception:
-        jrdd = None
+    jrdd = checkpoint_rdd(out)
     if cols is not None:
         out = out.toDF(*cols)
     out._ckpt_jrdd = jrdd
     return out
+
+
+def checkpoint_rdd(df: DataFrame):
+    """The checkpointed JVM RDD behind a localCheckpoint leaf (the
+    handle ``release_checkpoint`` unpersists), or None when ``df`` is
+    not a bare checkpoint leaf."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            return plan.rdd()
+    except Exception:
+        pass
+    return None
 
 
 def release_checkpoint(df: DataFrame) -> None:

@@ -178,6 +178,7 @@ def _captured_batch_plans(spark, specs, name, monkeypatch):
     from distributed_stream_processing_spark.operators import (
         semi_stream_similarity as sss,
     )
+    from distributed_stream_processing_spark.streaming import lru_state
     from distributed_stream_processing_spark.streaming.checkpoint import (
         lazy_local_checkpoint as real_ckpt,
     )
@@ -201,8 +202,13 @@ def _captured_batch_plans(spark, specs, name, monkeypatch):
         return None  # estimate fallback — capture only
 
     monkeypatch.setattr(PlanTimeAttributor, "attribute", capture)
-    for mod in (ssj, sss):
-        monkeypatch.setattr(mod, "lazy_local_checkpoint", capture_ckpt)
+    # the pipelines pin through the cache-state owner (lru_state);
+    # raising=False: a module that does not checkpoint directly gets
+    # the patched name unused
+    for mod in (ssj, sss, lru_state):
+        monkeypatch.setattr(
+            mod, "lazy_local_checkpoint", capture_ckpt, raising=False
+        )
     specs[name].fn(spark, SF)  # per-batch actions run inside
     return plans
 

@@ -91,17 +91,15 @@ def test_replay_batches_partition_stream(spark, sf_smoke):
     assert sum(b.count() for _, b in batches) == li.count()
 
 
-def _jobs_per_batch(spark, j, n_batches: int) -> list[int]:
-    """Spark jobs launched by each of ``n_batches`` process_batch calls
-    (1,000 keys a batch, half of them new: every batch misses)."""
+def _jobs_per_batch(spark, j, batches, rows: int | None = None) -> list[int]:
+    """Spark jobs launched by each process_batch call over ``batches``
+    (each output drained; ``rows``: its expected row count)."""
     sc = spark.sparkContext
     jobs = []
-    for b in range(n_batches):
-        batch = spark.range(b * 500, b * 500 + 1_000).withColumnRenamed(
-            "id", "k"
-        )
+    for b, batch in enumerate(batches):
         j0 = sc._jsc.sc().dagScheduler().nextJobId()
-        assert j.process_batch(batch, b).count() == 1_000
+        n = j.process_batch(batch, b).count()
+        assert rows is None or n == rows
         j.flush_attribution()
         jobs.append(sc._jsc.sc().dagScheduler().nextJobId() - j0)
     j.close()
@@ -126,18 +124,41 @@ def test_semi_stream_jobs_per_batch_bounded(spark, tmp_path):
       every pending delta ran its own broadcast job (+2 jobs per
       pending delta);
     * the compaction fold chained one broadcast anti-join per delta.
+
+    The similarity pipeline runs the same state code and is held to
+    the same two bounds.
     """
+    from fractions import Fraction
+
+    from distributed_stream_processing_spark.operators.semi_stream_similarity import (
+        SemiStreamSimilarityJoin,
+        build_similarity_store,
+    )
+
     src = str(tmp_path / "store_sorted.parquet")
     spark.range(20_000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     ).coalesce(1).sortWithinPartitions("k").write.parquet(src)
     store = spark.read.parquet(src)
 
+    # 1,000 keys a batch, half of them new: every batch misses
+    def key_batches(n):
+        return [
+            spark.range(b * 500, b * 500 + 1_000).withColumnRenamed("id", "k")
+            for b in range(n)
+        ]
+
     # in-session store, no compaction: flat
     jobs = _jobs_per_batch(
-        spark, SemiStreamJoin(store=store, key="k", compact_every=100), 6
+        spark, SemiStreamJoin(store=store, key="k", compact_every=100),
+        key_batches(6), rows=1_000,
     )
     assert len(set(jobs[1:])) == 1, f"per-batch job counts moved: {jobs}"
+
+    def fixed() -> AdaptiveCacheController:
+        return AdaptiveCacheController(
+            window=100, min_window=100, max_window=100
+        )
 
     # pushdown fetch: batches 1-5 hold 1-5 pending deltas, batch 6
     # compacts 6 of them; a second pipeline compacts 2 at batch 2
@@ -147,19 +168,50 @@ def test_semi_stream_jobs_per_batch_bounded(spark, tmp_path):
             key="k",
             fetcher=PushdownKeyedFetcher(store, "k"),
             compact_every=compact_every,
-            controller=AdaptiveCacheController(
-                window=100, min_window=100, max_window=100
-            ),
+            controller=fixed(),
         )
 
-    jobs = _jobs_per_batch(spark, pushdown(7), 7)
+    jobs = _jobs_per_batch(spark, pushdown(7), key_batches(7), rows=1_000)
     assert len(set(jobs[1:6])) == 1, (
         f"per-batch job counts grew with pending deltas: {jobs}"
     )
-    fold2 = _jobs_per_batch(spark, pushdown(3), 3)[2]
+    fold2 = _jobs_per_batch(spark, pushdown(3), key_batches(3), rows=1_000)[2]
     assert fold2 == jobs[6], (
         f"compaction jobs depend on the deltas folded: 2 -> {fold2}, "
         f"6 -> {jobs[6]}"
+    )
+
+    # the similarity pipeline, same cadences: 20 documents a batch,
+    # none of them seen before
+    docs = spark.createDataFrame(
+        [
+            (i, f"tok{i % 7} tok{(i + 1) % 7} tok{(i + 2) % 7} "
+                f"tok{(i + 3) % 7} w{i % 40}")
+            for i in range(180)
+        ],
+        "id long, text string",
+    ).select("id", F.split("text", " ").alias("tokens"))
+    t = Fraction(1, 2)
+    sim_store = build_similarity_store(docs.filter(F.col("id") < 40), t)
+    doc_batches = [
+        docs.filter((F.col("id") >= 40 + 20 * b) & (F.col("id") < 60 + 20 * b))
+        for b in range(7)
+    ]
+
+    def similarity(compact_every: int) -> SemiStreamSimilarityJoin:
+        return SemiStreamSimilarityJoin(
+            threshold=t, artifacts=sim_store, compact_every=compact_every,
+            controller=fixed(),
+        )
+
+    jobs = _jobs_per_batch(spark, similarity(7), doc_batches)
+    assert len(set(jobs[1:6])) == 1, (
+        f"similarity per-batch job counts moved: {jobs}"
+    )
+    fold2 = _jobs_per_batch(spark, similarity(3), doc_batches[:3])[2]
+    assert fold2 == jobs[6], (
+        f"similarity compaction jobs depend on the deltas folded: "
+        f"2 -> {fold2}, 6 -> {jobs[6]}"
     )
 
 
