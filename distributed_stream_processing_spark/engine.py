@@ -46,6 +46,7 @@ from distributed_stream_processing_spark.operators.subsequence_match import (
     build_kv_index,
     load_kv_index,
     save_kv_index,
+    subsequence_match_cnsm,
     subsequence_match_dtw,
     subsequence_match_ed,
     subsequence_match_znorm,
@@ -150,8 +151,9 @@ class Engine:
         rho: int = 5,
         **kw,
     ) -> DataFrame:
-        """measure in {ED, DTW, NormED} (the reference's sel dispatch,
-        kvmatch/test.java:35-54)."""
+        """measure in {ED, DTW, NormED, cNSM} (the reference's sel
+        dispatch, kvmatch/test.java:35-54); ``value_scale=`` selects the
+        exact fixed-decimal kernel of ED, NormED and cNSM."""
         if measure == "ED":
             return subsequence_match_ed(series, query, epsilon, **kw)
         if measure == "DTW":
@@ -159,10 +161,6 @@ class Engine:
         if measure == "NormED":
             return subsequence_match_znorm(series, query, epsilon, **kw)
         if measure == "cNSM":
-            from distributed_stream_processing_spark.operators.subsequence_match import (
-                subsequence_match_cnsm,
-            )
-
             return subsequence_match_cnsm(series, query, epsilon, **kw)
         raise ValueError(f"unknown measure {measure!r}")
 

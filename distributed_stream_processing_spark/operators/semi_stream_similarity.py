@@ -328,7 +328,7 @@ def build_similarity_store(
     # parquet) and is fp-cached either way.
     sig_store.unpersist()
     return SimilarityStore(
-        groups, hs, mapping, rep_store, sig_store, vsl, sig_freq,
+        groups, hs, mapping, rep_store, sig_store, t, vsl, sig_freq,
         sig_freq_rows, kv_store, rep_rows,
     )
 
@@ -459,6 +459,9 @@ class SimilarityStore:
     mapping: dict | None
     rep_store: DataFrame
     sig_store: DataFrame
+    # the Jaccard threshold the signatures were built for: the segment
+    # counts hs and the signature layout depend on it
+    threshold: Fraction
     # per-group VSL flags: a True group's store rows carry BOTH
     # signature kinds at full H and its probe rows are priced per
     # record against sig_freq (_vsl_probe_rows); False groups are
@@ -840,7 +843,9 @@ def run_semi_stream_similarity(
 #     sigfreq is keyed by sk) + the kv key directory serving the fetch
 # v5 (r14): machinery-level materiality — saved stores carry baked-in
 #     vsl flags, so a chooser-criterion change must rebuild them
-STORE_LAYOUT_VERSION = 5
+# v6: groups/ records the build threshold (t_num, t_den); a load at
+#     another threshold is refused
+STORE_LAYOUT_VERSION = 6
 
 
 def save_similarity_artifacts(store: SimilarityStore, path: str) -> None:
@@ -866,13 +871,15 @@ def save_similarity_artifacts(store: SimilarityStore, path: str) -> None:
     spark.createDataFrame(
         list((store.mapping or {}).items()), "tok string, bit long"
     ).write.mode("overwrite").parquet(f"{path}/mapping")
+    t = store.threshold
     spark.createDataFrame(
         [
             (g, lo, hi, bool((store.vsl or {}).get(g, False)),
-             STORE_LAYOUT_VERSION)
+             STORE_LAYOUT_VERSION, t.numerator, t.denominator)
             for g, (lo, hi) in enumerate(store.groups)
         ],
-        "g int, lo int, hi int, vsl boolean, layout_version int",
+        "g int, lo int, hi int, vsl boolean, layout_version int, "
+        "t_num long, t_den long",
     ).write.mode("overwrite").parquet(f"{path}/groups")
 
 
@@ -887,6 +894,7 @@ def save_similarity_store(join: SemiStreamSimilarityJoin, path: str) -> None:
             mapping=join._mapping,
             rep_store=join.rep_store,
             sig_store=join.sig_store,
+            threshold=join.threshold,
             vsl=join._vsl,
             sig_freq=join.sig_freq,
             sig_freq_rows=join._sig_freq_rows,
@@ -903,8 +911,8 @@ def load_similarity_artifacts(
     """Reconstruct the corpus artifacts from save_similarity_artifacts
     output: same signature store, payloads, dictionary, and groups —
     probe-ready, no corpus re-index. Raises ValueError on a store
-    saved under a different layout version (stale caches must rebuild
-    loudly, never mis-decode)."""
+    saved under a different layout version or built for a different
+    threshold (stale caches must rebuild loudly, never mis-decode)."""
     from distributed_stream_processing_spark.functions.signatures import (
         seg_count_dima,
     )
@@ -916,6 +924,13 @@ def load_similarity_artifacts(
         raise ValueError(
             f"saved store at {path} has layout version {sorted(versions)}, "
             f"engine expects {STORE_LAYOUT_VERSION} — rebuild the store"
+        )
+    saved = {Fraction(int(r.t_num), int(r.t_den)) for r in graw}
+    if saved != {t}:
+        raise ValueError(
+            f"saved store at {path} was built for threshold "
+            f"{', '.join(str(x) for x in sorted(saved))}, the load asks "
+            f"for {t} — rebuild the store"
         )
     grows = sorted((r.g, r.lo, r.hi, bool(r.vsl)) for r in graw)
     groups = [(lo, hi) for _, lo, hi, _ in grows]
@@ -975,6 +990,7 @@ def load_similarity_artifacts(
         rep_store=rep_store,
         rep_rows=rep_store.count(),
         sig_store=sig_store,
+        threshold=t,
         vsl=vsl,
         sig_freq=sig_freq,
         sig_freq_rows=sig_freq_rows,

@@ -8,18 +8,26 @@ then verify ED/DTW with early abandoning (kvmatch/QueryEngine.java:
 74-293, utils/DtwUtils.java:50-338). This engine re-expresses it
 distributed:
 
-* index build  = chunked sliding stats (applyInPandas over
-  overlap-replicated chunks — no global-order Window bottleneck)
-  + run-length grouping into (mean_round, pos_start, pos_end) rows;
-* probe        = range filter on the index DataFrame per query
-  segment (Cauchy-Schwarz bound: ED <= eps over a width-w segment
-  implies |segment mean diff| <= eps/sqrt(w), plus the 0.25
-  rounding-grid slack), then k-way intersection of candidates;
-* ED verify    = equi/range join of candidates x series with a
-  deterministic left-to-right fold (bit-reproducible vs the DuckDB
-  oracle); DTW/zNorm verify = numpy over chunked windows
-  (mapInPandas, Arrow batches) with the LB_Keogh cascade and early
-  abandon.
+* index build  = one numpy pass over overlap-replicated chunks (no
+  global-order Window bottleneck) + run-length grouping into
+  (w, mr, pos_start, pos_end) rows;
+* probe        = one scan of the index DataFrame for all query
+  segments (Cauchy-Schwarz bound: ED <= eps over a width-w segment
+  implies |segment mean diff| <= eps/sqrt(w), plus the grid rounding
+  slack), then an interval sweep-line intersects the segments'
+  candidate start-ranges;
+* ED verify    = for fixed-decimal data (``value_scale``), exact int64
+  distances in a numpy pass over the candidates' chunks; otherwise an
+  equi-join of candidates x series with a deterministic left-to-right
+  fold (bit-reproducible vs the DuckDB oracle); DTW = the LB_Kim /
+  LB_Keogh cascade with early abandon, and zNorm / cNSM = batched
+  closed forms (float, or exact integer window sums with
+  ``value_scale``).
+
+Every numpy pass runs through one chunk runner (``_run_chunks``: one
+mapInPandas behind one exchange on chunk id), and every
+``value_scale`` path through one fixed-decimal contract
+(``_fixed_decimal``: off-grid input raises ValueError).
 
 Positions are 0-based window starts; a window of width m covers
 [start, start+m-1].
@@ -40,69 +48,159 @@ _GRID = 0.5  # KV-match half-integer mean rounding (MeanIntervalUtils.java:51-60
 
 
 # ---------------------------------------------------------------------------
-# sliding stats + index build
+# fixed-decimal contract + the chunk runner
 # ---------------------------------------------------------------------------
 
 
-def sliding_stats(
-    series: DataFrame, w: int, chunk: int = 8192, value_scale: int | None = None
-) -> DataFrame:
-    """(pos, mean, std, sum_scaled) of every width-``w`` window.
+def _fixed_decimal(
+    values, value_scale: int, what: str, against: np.ndarray | None = None
+) -> np.ndarray:
+    """``values`` as exact scaled int64 (``value_scale`` = 100 for
+    2-decimal data) — the one contract of every ``value_scale`` path.
 
-    Rows are replicated into the preceding chunk when within w-1 of a
-    chunk boundary, so each chunk computes its own window starts
-    independently; cumsum-based, one pass, no global sort.
-
-    ``value_scale``: when values are fixed-decimal (e.g. 100 for
-    2-decimal data), window sums are computed exactly in scaled int64
-    (``sum_scaled``) so downstream grid rounding is bit-deterministic
-    across engines; otherwise sum_scaled is null.
-    """
-
-    def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        pos = pdf["pos"].to_numpy()
-        val = pdf["value"].to_numpy(dtype=np.float64)
-        base = int(pdf["chunk_id"].iloc[0]) * chunk
-        hi = base + chunk  # starts in [base, hi)
-        if len(val) < w:
-            return pd.DataFrame(
-                {"pos": [], "mean": [], "std": [], "sum_scaled": []}
-            ).astype({"pos": "int64", "sum_scaled": "float64"})
-        starts = pos[: len(val) - w + 1]
-        # windows must be contiguous (replication guarantees it except
-        # at series end) and owned by this chunk
-        own = (starts >= base) & (starts < hi) & (pos[w - 1 :] == starts + w - 1)
-        if value_scale is not None:
-            vi = np.rint(val * value_scale).astype(np.int64)
-            ci = np.concatenate(([0], np.cumsum(vi)))
-            s1i = ci[w:] - ci[:-w]
-            mean = s1i[own] / (w * value_scale)
-            sum_scaled = s1i[own].astype("float64")
-        else:
-            c1 = np.concatenate(([0.0], np.cumsum(val)))
-            s1 = c1[w:] - c1[:-w]
-            mean = (s1 / w)[own]
-            sum_scaled = np.full(own.sum(), np.nan)
-        c2 = np.concatenate(([0.0], np.cumsum(val * val)))
-        s2 = (c2[w:] - c2[:-w])[own]
-        var = np.maximum(s2 / w - mean * mean, 0.0)
-        return pd.DataFrame(
-            {
-                "pos": starts[own],
-                "mean": mean,
-                "std": np.sqrt(var),
-                "sum_scaled": sum_scaled,
-            }
+    Exactness is data-dependent, so a value more than 1e-6 off the
+    scaled grid raises ValueError instead of being quantized to a
+    different problem. ``against`` is the scaled query (1-D) or queries
+    (2-D, one per row) these values are matched against: the squared
+    distance of a width-m window, an int64 sum later read as a double,
+    is exact only below 2^53, so a bound that could reach it raises
+    too."""
+    sv = np.asarray(values, dtype=np.float64) * value_scale
+    if sv.size and float(np.abs(sv - np.rint(sv)).max()) > 1e-6:
+        raise ValueError(
+            f"value_scale={value_scale} but the {what} is not "
+            "fixed-decimal at that scale"
         )
+    ints = np.rint(sv).astype(np.int64)
+    if against is not None and ints.size and against.size:
+        dmax = float(np.abs(ints).max()) + float(np.abs(against).max())
+        if dmax * dmax * against.shape[-1] >= 2.0**53:
+            raise ValueError(
+                "scaled |diff|^2 * m may exceed 2^53 — exact int64 "
+                "distance contract would break; lower value_scale or "
+                "shorten the query"
+            )
+    return ints
 
-    return (
-        _chunked(series, w, chunk)
-        .groupBy("chunk_id")
-        .applyInPandas(
-            per_chunk, schema="pos long, mean double, std double, sum_scaled double"
-        )
+
+def _chunked(series: DataFrame, m: int, chunk: int) -> DataFrame:
+    """(pos, value, chunk_id) rows of ``series`` in one scan, so that
+    chunk c holds every width-``m`` window starting in [c*chunk,
+    (c+1)*chunk): a row within m-1 of its chunk's start is exploded
+    into its own chunk and the preceding one."""
+    pos = F.col("pos").cast("bigint")
+    cid = F.floor(pos / chunk).cast("bigint")
+    spill = (F.pmod(pos, F.lit(chunk)) < m - 1) & (pos >= chunk)
+    return series.select(
+        pos.alias("pos"),
+        F.col("value").cast("double").alias("value"),
+        F.explode(
+            F.when(spill, F.array(cid, cid - 1)).otherwise(F.array(cid))
+        ).alias("chunk_id"),
     )
+
+
+def _owned_rows(pos: np.ndarray, base: int, chunk: int, w: int) -> np.ndarray:
+    """Row offsets of the gap-free width-``w`` windows a chunk owns:
+    the start lies in [base, base + chunk) and the window's last row
+    holds start + w - 1 (positions are strictly increasing integers, so
+    endpoint equality means no gap)."""
+    starts = pos[: max(len(pos) - w + 1, 0)]
+    return np.flatnonzero(
+        (starts >= base)
+        & (starts < base + chunk)
+        & (pos[w - 1 : w - 1 + len(starts)] == starts + w - 1)
+    )
+
+
+def _aligned_rows(pos: np.ndarray, starts: np.ndarray, w: int) -> np.ndarray:
+    """Row offsets of the candidate ``starts`` whose gap-free width-``w``
+    window the chunk holds."""
+    s = np.searchsorted(pos, starts)
+    ok = s + w <= len(pos)
+    s, starts = s[ok], starts[ok]
+    return s[(pos[s] == starts) & (pos[s + w - 1] == starts + w - 1)]
+
+
+def _partition_chunks(batches, m: int, chunk: int):
+    """Yield ``(base, pos, val, rows)`` for every chunk of one
+    mapInPandas partition, pos ascending; ``rows`` are the row offsets
+    of the width-``m`` windows to score.
+
+    A chunk's rows can arrive in several Arrow record batches
+    (spark.sql.execution.arrow.maxRecordsPerBatch), and a window that
+    straddles two of them is never scored if each batch is scored on
+    its own, so the partition's batches are gathered first. When the
+    rows carry a ``start`` column (_run_chunks' union of series rows
+    and candidate rows), ``rows`` align the chunk's candidate starts
+    and chunks without candidates are skipped; otherwise ``rows`` are
+    every window the chunk owns."""
+    pdfs = list(batches)
+    if not pdfs:
+        return
+    pdf = pd.concat(pdfs, ignore_index=True)
+    with_starts = "start" in pdf.columns
+    for cid, grp in pdf.groupby("chunk_id"):
+        if with_starts:
+            is_cand = grp["start"].notna()
+            if not is_cand.any():
+                continue
+            starts = np.unique(grp.loc[is_cand, "start"].to_numpy(np.int64))
+            grp = grp[~is_cand]
+        pos = grp["pos"].to_numpy(np.int64)
+        order = np.argsort(pos, kind="stable")
+        pos, val = pos[order], grp["value"].to_numpy(np.float64)[order]
+        base = int(cid) * chunk
+        rows = (
+            _aligned_rows(pos, starts, m)
+            if with_starts
+            else _owned_rows(pos, base, chunk, m)
+        )
+        yield base, pos, val, rows
+
+
+def _run_chunks(
+    series: DataFrame,
+    m: int,
+    chunk: int,
+    kernel,
+    schema: str,
+    candidates: DataFrame | None = None,
+) -> DataFrame:
+    """The one per-chunk driver of every numpy pass: ``kernel`` maps
+    the ``(base, pos, val, rows)`` chunks of one partition
+    (_partition_chunks) to pandas frames of ``schema``, in ONE
+    mapInPandas behind ONE exchange on chunk_id. No global sort, and
+    no stage holds the whole series in one task.
+
+    With ``candidates`` (a ``start`` column), ``rows`` are only those
+    window starts: series rows (``start`` null) and candidate rows
+    (``pos`` and ``value`` null) are unioned and sent through the same
+    exchange (a cogroup of the two sides shuffled each side on its own:
+    one exchange more), so a probe that prunes translates directly into
+    chunks that verify fewer or zero windows. Starts are owned by
+    floor(start/chunk); the overlap replication of _chunked guarantees
+    the owning chunk holds the full window."""
+    rows = _chunked(series, m, chunk)
+    if candidates is not None:
+        rows = rows.withColumn("start", F.lit(None).cast("bigint")).unionByName(
+            candidates.select(
+                F.lit(None).cast("bigint").alias("pos"),
+                F.lit(None).cast("double").alias("value"),
+                F.floor(F.col("start") / chunk).cast("bigint").alias("chunk_id"),
+                F.col("start").cast("bigint").alias("start"),
+            )
+        )
+
+    def gen(batches):
+        yield from kernel(_partition_chunks(batches, m, chunk))
+
+    return rows.repartition("chunk_id").mapInPandas(gen, schema=schema)
+
+
+# ---------------------------------------------------------------------------
+# index build
+# ---------------------------------------------------------------------------
 
 
 def _index_runs(
@@ -120,9 +218,7 @@ def _index_runs(
     2k scans of the series for k widths, the wrong shape for a 100 TB
     build (A5-A7, IndexBuilder.java:62-302 builds per width too but
     over a local file). Runs that span a chunk boundary come out
-    split and are re-joined by the caller's merge_intervals pass. No
-    stage ever holds the whole series in one task (the round-1
-    W.partitionBy(lit(w)) single-partition Window is gone)."""
+    split and are re-joined by the caller's merge_intervals pass."""
     widths = tuple(sorted(set(widths)))
     if max(widths) - 1 > chunk:
         # the overlap replication reaches exactly ONE chunk back, so a
@@ -134,47 +230,29 @@ def _index_runs(
             f"(chunk={chunk}); raise chunk= to at least width-1"
         )
 
-    def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        pos = pdf["pos"].to_numpy()
-        val = pdf["value"].to_numpy(dtype=np.float64)
-        base = int(pdf["chunk_id"].iloc[0]) * chunk
-        hi = base + chunk
-        if value_scale is not None:
-            vi = np.rint(val * value_scale).astype(np.int64)
-            ci = np.concatenate(([0], np.cumsum(vi)))
-        else:
-            c1 = np.concatenate(([0.0], np.cumsum(val)))
-        frames = []
-        for w in widths:
-            if len(val) < w:
-                continue
-            starts = pos[: len(val) - w + 1]
-            # a start is owned by this chunk and contiguous through
-            # its window; the overlap replication is sized for the
-            # LARGEST width, which only adds tail rows smaller widths
-            # ignore (their non-owned starts are masked out)
-            own = (
-                (starts >= base)
-                & (starts < hi)
-                & (pos[w - 1 :] == starts + w - 1)
-            )
-            if not own.any():
-                continue
+    def kernel(chunks):
+        for base, pos, val, _rows in chunks:
             if value_scale is not None:
-                s1i = (ci[w:] - ci[:-w])[own]
-                mr = np.floor(s1i / float(value_scale * w * _GRID)) * _GRID
-            else:
-                mean = ((c1[w:] - c1[:-w]) / w)[own]
-                mr = np.floor(mean / _GRID) * _GRID
-            st = starts[own]
-            brk = (
-                np.flatnonzero((mr[1:] != mr[:-1]) | (st[1:] != st[:-1] + 1))
-                + 1
-            )
-            seg = np.concatenate(([0], brk, [len(st)]))
-            frames.append(
-                pd.DataFrame(
+                val = _fixed_decimal(val, value_scale, "series")
+            c = np.concatenate(([0], np.cumsum(val)))
+            for w in widths:
+                # the overlap replication is sized for the LARGEST
+                # width; smaller widths mask its extra tail rows out
+                own = _owned_rows(pos, base, chunk, w)
+                if not len(own):
+                    continue
+                s = c[own + w] - c[own]
+                if value_scale is not None:
+                    mr = np.floor(s / float(value_scale * w * _GRID)) * _GRID
+                else:
+                    mr = np.floor(s / w / _GRID) * _GRID
+                st = pos[own]
+                brk = (
+                    np.flatnonzero((mr[1:] != mr[:-1]) | (st[1:] != st[:-1] + 1))
+                    + 1
+                )
+                seg = np.concatenate(([0], brk, [len(st)]))
+                yield pd.DataFrame(
                     {
                         "w": np.full(len(seg) - 1, w, dtype=np.int32),
                         "mr": mr[seg[:-1]],
@@ -182,20 +260,13 @@ def _index_runs(
                         "pos_end": st[seg[1:] - 1],
                     }
                 )
-            )
-        if not frames:
-            return pd.DataFrame(
-                {"w": [], "mr": [], "pos_start": [], "pos_end": []}
-            ).astype({"w": "int32", "pos_start": "int64", "pos_end": "int64"})
-        return pd.concat(frames, ignore_index=True)
 
-    return (
-        _chunked(series, max(widths), chunk)
-        .groupBy("chunk_id")
-        .applyInPandas(
-            per_chunk,
-            schema="w int, mr double, pos_start long, pos_end long",
-        )
+    return _run_chunks(
+        series,
+        max(widths),
+        chunk,
+        kernel,
+        "w int, mr double, pos_start long, pos_end long",
     )
 
 
@@ -470,12 +541,20 @@ def probe_index_ranges(
 ) -> DataFrame:
     """Window starts whose width-``w`` segment at ``offset`` has its
     grid-rounded mean inside [lo, hi] for EVERY probe
-    (w, offset, lo, hi) — the shared probe core for ED (point mean ±
-    Cauchy-Schwarz slack) and DTW (envelope-widened mean ranges).
+    (w, offset, lo, hi) — the one probe core, shared by ED (point mean
+    ± Cauchy-Schwarz slack) and DTW (envelope-widened mean ranges).
 
-    Interval rows are exploded to positions (fine at these interval
-    sizes; an interval-algebra join would replace the explode at
-    extreme scale) and intersected by counting segment hits.
+    Candidate intersection runs at INTERVAL granularity. Each probe's
+    matching index rows are disjoint start-ranges (a width's runs
+    partition the position space, and clamping preserves
+    disjointness), so the K-way intersection is a sweep-line: +1/-1
+    boundary events per range, a distributed prefix sum over
+    deterministic position-range buckets (per-bucket net deltas
+    collected — B rows — and re-broadcast as entry offsets), and
+    coverage==K segments become the candidate ranges. Work scales with
+    the number of index intervals, not series positions — the shape
+    that holds when the series is 100 TB. Only the final intersected
+    ranges (output-sized) are exploded to starts.
 
     ``available_widths``: the widths the index is known to hold.  Pass
     it whenever the caller built the index itself — the alternative is
@@ -495,72 +574,6 @@ def probe_index_ranges(
             f"segmentation (has {sorted(available)}); build the index with "
             "matching widths or pass widths= to the match call"
         )
-    cands = None
-    for i, (w, offset, lo, hi) in enumerate(probes):
-        # full-grid (not half) slack: mr is a *floor* rounding, so the
-        # true mean lies in [mr, mr+grid) — keeps completeness
-        rows = index.filter(
-            (F.col("w") == w)
-            & (F.col("mr") >= lo - grid)
-            & (F.col("mr") <= hi + grid)
-        )
-        starts = (
-            rows.select(F.explode(F.sequence("pos_start", "pos_end")).alias("p"))
-            .select(
-                (F.col("p") - F.lit(offset)).alias("start"),
-                F.lit(i).alias("seg"),
-            )
-            .filter((F.col("start") >= 0) & (F.col("start") <= max_start))
-        )
-        cands = starts if cands is None else cands.unionByName(starts)
-    if len(probes) == 1:
-        # single-segment queries need no intersection: one probe's
-        # index intervals are disjoint, so the exploded starts are
-        # already unique — skip the count shuffle entirely
-        return cands.select("start")
-    return (
-        cands.groupBy("start")
-        .agg(F.countDistinct("seg").alias("n_seg"))
-        .filter(F.col("n_seg") == len(probes))
-        .select("start")
-    )
-
-
-def probe_index_ranges_sweep(
-    index: DataFrame,
-    probes: list[tuple[int, int, float, float]],
-    n_positions: int,
-    query_len: int,
-    grid: float = _GRID,
-    available_widths: set[int] | None = None,
-) -> DataFrame:
-    """Interval-algebra twin of probe_index_ranges: identical output,
-    but candidate intersection runs at INTERVAL granularity instead of
-    exploding every covered position.
-
-    Each probe's matching index rows are disjoint start-ranges (a
-    width's runs partition the position space, and clamping preserves
-    disjointness), so the K-way intersection is a sweep-line: +1/-1
-    boundary events per range, a distributed prefix sum over
-    deterministic position-range buckets (per-bucket net deltas
-    collected — B rows — and re-broadcast as entry offsets), and
-    coverage==K segments become the candidate ranges. Work scales with the number of index
-    intervals, not series positions — the shape that holds when the
-    series is 100 TB and the explode twin's position stream would be
-    the bottleneck. Only the final intersected ranges (output-sized)
-    are exploded to starts.
-    """
-    max_start = n_positions - query_len
-    if available_widths is not None:
-        available = set(available_widths)
-    else:
-        available = {r.w for r in index.select("w").distinct().collect()}
-    needed = {w for w, _, _, _ in probes}
-    if not needed <= available:
-        raise ValueError(
-            f"index lacks widths {sorted(needed - available)} required by the "
-            f"segmentation (has {sorted(available)})"
-        )
     k = len(probes)
     # ONE index scan for ALL probes: each row tests the probe-literal
     # array and explodes its matches into clamped start-ranges (the
@@ -571,9 +584,9 @@ def probe_index_ranges_sweep(
             F.struct(
                 F.lit(int(w)).cast("int").alias("pw"),
                 F.lit(int(offset)).cast("long").alias("off"),
-                # full-grid (not half) slack, as in the explode twin:
-                # mr is a floor rounding, the true mean lies in
-                # [mr, mr + grid)
+                # full-grid (not half) slack: mr is a floor rounding,
+                # so the true mean lies in [mr, mr + grid) — keeps
+                # completeness
                 F.lit(float(lo - grid)).alias("lo"),
                 F.lit(float(hi + grid)).alias("hi"),
             )
@@ -694,13 +707,8 @@ def probe_index(
     query_len: int,
     grid: float = _GRID,
     available_widths: set[int] | None = None,
-    method: str = "explode",
 ) -> DataFrame:
-    """ED probe: |segment mean diff| <= eps/sqrt(w) (Cauchy-Schwarz).
-
-    ``method``: "explode" (position-stream intersection — simple, fine
-    while positions fit the shuffle) or "sweep" (interval sweep-line —
-    work scales with index intervals, the extreme-scale shape)."""
+    """ED probe: |segment mean diff| <= eps/sqrt(w) (Cauchy-Schwarz)."""
     probes = [
         (
             s.width,
@@ -710,8 +718,9 @@ def probe_index(
         )
         for s in segments
     ]
-    fn = probe_index_ranges_sweep if method == "sweep" else probe_index_ranges
-    return fn(index, probes, n_positions, query_len, grid, available_widths)
+    return probe_index_ranges(
+        index, probes, n_positions, query_len, grid, available_widths
+    )
 
 
 def dtw_envelope_probes(
@@ -823,58 +832,28 @@ def verify_ed_ints(
     bit-reproducible in DuckDB via the same integer cents sums.
     """
     m = len(query)
-    qs = np.asarray(query, dtype=np.float64) * value_scale
-    # the exactness contract is data-dependent: fail LOUDLY when the
-    # query/series are not fixed-decimal at this scale instead of
-    # silently rint-quantizing to a different problem (same guards as
-    # online_ml.batch_best_match — one contract across the int paths)
-    if len(qs) and float(np.abs(qs - np.rint(qs)).max()) > 1e-6:
-        raise ValueError(
-            f"value_scale={value_scale} but the query is not "
-            "fixed-decimal at that scale"
-        )
-    q = np.rint(qs).astype(np.int64)
-    _q_absmax = float(np.abs(q).max()) if len(q) else 0.0
+    q = _fixed_decimal(query, value_scale, "query")
     eps2 = float(epsilon * value_scale) ** 2  # int64 d2 < 2^53 is exact
 
-    def row_fn(pos: np.ndarray, val: np.ndarray, starts: np.ndarray) -> pd.DataFrame:
-        empty = pd.DataFrame({"start": [], "dist": []}).astype(
-            {"start": "int64", "dist": "float64"}
-        )
-        if len(starts) == 0 or len(val) < m:
-            return empty
-        sv = val * value_scale
-        if len(sv) and float(np.abs(sv - np.rint(sv)).max()) > 1e-6:
-            raise ValueError(
-                f"value_scale={value_scale} but series values are not "
-                "fixed-decimal at that scale"
+    def kernel(chunks):
+        for _base, pos, val, rows in chunks:
+            if not len(rows):
+                continue
+            cents = _fixed_decimal(val, value_scale, "series", against=q)
+            X = np.lib.stride_tricks.sliding_window_view(cents, m)[rows]
+            d2 = ((X - q) ** 2).sum(axis=1)
+            keep = d2 <= eps2
+            yield pd.DataFrame(
+                {
+                    "start": pos[rows][keep],
+                    "dist": np.round(
+                        np.sqrt(d2[keep].astype(np.float64)) / value_scale, 6
+                    ),
+                }
             )
-        cents = np.rint(sv).astype(np.int64)
-        dmax = float(np.abs(cents).max()) + _q_absmax
-        if dmax * dmax * m >= 2.0**53:
-            raise ValueError(
-                "scaled |diff|^2 * m may exceed 2^53 — exact int64 "
-                "distance contract would break; lower value_scale or "
-                "shorten the query"
-            )
-        s_idx = np.searchsorted(pos, starts)
-        ok = s_idx + m <= len(pos)
-        si, st = s_idx[ok], starts[ok]
-        # window must be contiguous positions (chunk gaps excluded)
-        ok2 = (pos[si] == st) & (pos[np.minimum(si + m - 1, len(pos) - 1)] == st + m - 1)
-        si, st = si[ok2], st[ok2]
-        if len(si) == 0:
-            return empty
-        X = np.lib.stride_tricks.sliding_window_view(cents, m)[si]
-        d2 = ((X - q) ** 2).sum(axis=1)
-        keep = d2 <= eps2
-        dist = np.round(np.sqrt(d2[keep].astype(np.float64)) / value_scale, 6)
-        return pd.DataFrame({"start": st[keep], "dist": dist}).astype(
-            {"start": "int64", "dist": "float64"}
-        )
 
-    return _verify_starts(
-        series, candidates, m, chunk, row_fn, "start long, dist double"
+    return _run_chunks(
+        series, m, chunk, kernel, "start long, dist double", candidates
     )
 
 
@@ -889,8 +868,6 @@ def subsequence_match_ed(
     index_grid: float = _GRID,
     segmenter: str = "greedy",
     available_widths: set[int] | None = None,
-    probe_method: str = "explode",
-    early_stop: bool = True,
 ) -> DataFrame:
     """RSM with ED: all window starts within ``epsilon`` of ``query``.
 
@@ -898,46 +875,50 @@ def subsequence_match_ed(
     phase-2 verification is exact. Pass ``index_grid`` when probing a
     compacted index (factor * default grid); ``segmenter="dp"``
     plans segments from index statistics (minimum estimated candidate
-    volume) instead of greedily, and ``early_stop`` then applies the
-    T11 cost-model segment budget (truncate_segments_cost) on the
-    same statistics. ``available_widths`` declares the widths a
-    caller-supplied ``index`` holds, skipping the probe's
-    distinct-widths materialization.
+    volume) instead of greedily, then applies the T11 cost-model
+    segment budget (truncate_segments_cost) on the same statistics.
+    ``available_widths`` declares the widths a caller-supplied
+    ``index`` holds, skipping the probe's distinct-widths
+    materialization. Without ``index`` the call builds one (its shuffle
+    stages run at the call) and pins it as a local checkpoint whose
+    blocks go with the returned frame.
     """
     if not query:
         raise ValueError("empty query")
     if n_positions is None:
         n_positions = series.count()
-    known_widths: set[int] | None = available_widths
-    stats = None
+    # greedy segmentation is query-only: plan first, then build ONLY
+    # the widths it selected (round 2 built all three widths for a
+    # single-width segmentation — 3x the work)
+    segments = plan_segments(query, widths) if segmenter != "dp" else None
     if index is None:
-        usable = tuple(w for w in widths if w <= len(query)) or (min(widths),)
-        if segmenter == "dp":
+        if segments is None:
             # DP needs index statistics over every usable width
-            index = build_kv_index(series, usable, value_scale=value_scale).cache()
-            stats = index_stats(index)
-            segments = plan_segments_dp(query, usable, stats, epsilon)
+            built = tuple(w for w in widths if w <= len(query)) or (min(widths),)
         else:
-            # greedy segmentation is query-only: plan first, then build
-            # ONLY the widths it selected (round 2 built all three
-            # widths for a single-width segmentation — 3x the work) and
-            # cache so the probe's per-segment scans share one build
-            segments = plan_segments(query, usable)
-            usable = tuple(sorted({s.width for s in segments}, reverse=True))
-            index = build_kv_index(series, usable, value_scale=value_scale).cache()
-        known_widths = set(usable)
-    elif segmenter == "dp":
-        stats = index_stats(index)
-        segments = plan_segments_dp(query, widths, stats, epsilon)
-    else:
-        segments = plan_segments(query, widths)
-    if early_stop and stats is not None:
+            built = tuple(sorted({s.width for s in segments}, reverse=True))
+        # pinned so the probe's scans share one build; a checkpoint is
+        # no CacheManager entry, so nothing outlives the returned frame.
+        # Planned under the session's AQE, which runs the build's
+        # shuffle stages at this call: lazy_local_checkpoint's static
+        # plan gives every build shuffle spark.sql.shuffle.partitions
+        # tasks (200 Python tasks on a stock session; measured at
+        # local[3]: 23-27 s per 6,000-point query against ~2 s here)
+        index = build_kv_index(
+            series, built, value_scale=value_scale
+        ).localCheckpoint(eager=False)
+        available_widths = set(built)
+    if segments is None:
         # T11 early probe termination over the same statistics the DP
         # planner used: drop segments whose marginal candidate cut no
         # longer pays for their index scan (result stays exact — the
         # probe superset only widens)
+        stats = index_stats(index)
         segments = truncate_segments_cost(
-            segments, stats, epsilon, n_positions
+            plan_segments_dp(query, widths, stats, epsilon),
+            stats,
+            epsilon,
+            n_positions,
         )
     cands = probe_index(
         index,
@@ -946,8 +927,7 @@ def subsequence_match_ed(
         n_positions,
         len(query),
         grid=index_grid,
-        available_widths=known_widths,
-        method=probe_method,
+        available_widths=available_widths,
     )
     if value_scale is not None:
         # fixed-decimal data: exact int64 verify over the candidates' chunks
@@ -958,95 +938,8 @@ def subsequence_match_ed(
 
 
 # ---------------------------------------------------------------------------
-# chunked-window numpy paths (DTW, normalized) — mapInPandas
+# DTW and normalized matching — numpy over chunked windows
 # ---------------------------------------------------------------------------
-
-
-def _chunked(series: DataFrame, m: int, chunk: int) -> DataFrame:
-    """(pos, value, chunk_id) rows of ``series`` in one scan, so that
-    chunk c holds every width-``m`` window starting in [c*chunk,
-    (c+1)*chunk): a row within m-1 of its chunk's start is exploded
-    into its own chunk and the preceding one."""
-    pos = F.col("pos").cast("bigint")
-    cid = F.floor(pos / chunk).cast("bigint")
-    spill = (F.pmod(pos, F.lit(chunk)) < m - 1) & (pos >= chunk)
-    return series.select(
-        pos.alias("pos"),
-        F.col("value").cast("double").alias("value"),
-        F.explode(
-            F.when(spill, F.array(cid, cid - 1)).otherwise(F.array(cid))
-        ).alias("chunk_id"),
-    )
-
-
-def _partition_chunks(batches):
-    """Yield ``(chunk_id, pos, value, starts)`` for every chunk of one
-    mapInPandas partition, pos ascending.
-
-    A chunk's rows can arrive in several Arrow record batches
-    (spark.sql.execution.arrow.maxRecordsPerBatch), and a window that
-    straddles two of them is never scored if each batch is scored on
-    its own, so the partition's batches are gathered first. When the
-    rows carry a ``start`` column (_verify_starts' union of series rows
-    and candidate rows), ``starts`` holds the chunk's unique candidate
-    starts and chunks without candidates are skipped; otherwise it is
-    None."""
-    pdfs = list(batches)
-    if not pdfs:
-        return
-    pdf = pd.concat(pdfs, ignore_index=True)
-    with_starts = "start" in pdf.columns
-    for cid, grp in pdf.groupby("chunk_id"):
-        starts = None
-        if with_starts:
-            is_cand = grp["start"].notna()
-            if not is_cand.any():
-                continue
-            starts = np.unique(grp.loc[is_cand, "start"].to_numpy(np.int64))
-            grp = grp[~is_cand]
-        pos = grp["pos"].to_numpy(np.int64)
-        order = np.argsort(pos, kind="stable")
-        yield int(cid), pos[order], grp["value"].to_numpy(np.float64)[order], starts
-
-
-def _verify_starts(
-    series: DataFrame,
-    candidates: DataFrame,
-    m: int,
-    chunk: int,
-    row_fn,
-    schema: str,
-) -> DataFrame:
-    """Run ``row_fn(pos, val, starts) -> pd.DataFrame`` per chunk over
-    ONLY the candidate window starts, so a probe that prunes translates
-    directly into chunks that verify fewer (or zero) windows.
-
-    Series rows (``start`` null) and candidate starts (``pos`` and
-    ``value`` null) are unioned and sent through ONE exchange on
-    chunk_id; one mapInPandas gathers each partition and calls
-    ``row_fn`` for every chunk that has candidates (a cogroup of the
-    two sides shuffled each side on its own: one exchange more).
-    Starts are owned by floor(start/chunk); the overlap replication of
-    _chunked guarantees the owning chunk holds the full window."""
-    ser = _chunked(series, m, chunk).withColumn(
-        "start", F.lit(None).cast("bigint")
-    )
-    cand = candidates.select(
-        F.lit(None).cast("bigint").alias("pos"),
-        F.lit(None).cast("double").alias("value"),
-        F.floor(F.col("start") / chunk).cast("bigint").alias("chunk_id"),
-        F.col("start").cast("bigint").alias("start"),
-    )
-
-    def gen(batches):
-        for _cid, pos, val, starts in _partition_chunks(batches):
-            yield row_fn(pos, val, starts)
-
-    return (
-        ser.unionByName(cand)
-        .repartition("chunk_id")
-        .mapInPandas(gen, schema=schema)
-    )
 
 
 def _dtw_banded(
@@ -1347,7 +1240,6 @@ def subsequence_match_dtw(
     widths: tuple[int, ...] = DEFAULT_WIDTHS,
     index_grid: float = _GRID,
     available_widths: set[int] | None = None,
-    probe_method: str = "explode",
 ) -> DataFrame:
     """RSM with banded DTW: LB_Keogh cascade + early abandon, numpy
     over chunked windows (the reference's DtwUtils.java:50-338 cascade
@@ -1370,57 +1262,43 @@ def subsequence_match_dtw(
     eps2 = epsilon * epsilon
     lo_env = np.array([q[max(0, j - rho) : j + rho + 1].min() for j in range(m)])
     hi_env = np.array([q[max(0, j - rho) : j + rho + 1].max() for j in range(m)])
+    view = np.lib.stride_tricks.sliding_window_view
 
-    def verify(pos: np.ndarray, val: np.ndarray, starts: np.ndarray) -> pd.DataFrame:
-        empty = pd.DataFrame({"start": [], "dist": []}).astype(
-            {"start": "int64", "dist": "float64"}
-        )
-        if not len(starts) or len(pos) < m:
-            return empty
-        # data-side envelope once per chunk, shared by every window
-        # (DtwUtils.java:96-134 builds it as the stream arrives);
-        # computed over chunk indices, which only WIDENS a window's
-        # true envelope at its edges — admissible
-        ser = pd.Series(val)
-        w = 2 * rho + 1
-        u_env_c = ser.rolling(w, min_periods=1, center=True).max().to_numpy()
-        l_env_c = ser.rolling(w, min_periods=1, center=True).min().to_numpy()
-        # align starts to array offsets; endpoint equality implies the
-        # whole window is gap-free (positions are strictly increasing
-        # integers) — the same two checks the scalar loop made
-        s = np.searchsorted(pos, starts)
-        ok = s + m <= len(pos)
-        sv, stv = s[ok], starts[ok]
-        ok2 = (pos[sv] == stv) & (pos[sv + m - 1] == stv + m - 1)
-        sv, stv = sv[ok2], stv[ok2]
-        if not len(sv):
-            return empty
-        # the whole chunk's cascade in one batched numpy pass (the
-        # scalar per-window loop measured ~0.9 ms x 93k surviving
-        # windows on the sf0.1 fixture — see dtw_cascade_batch)
-        Xw = np.lib.stride_tricks.sliding_window_view(val, m)
-        WLw = np.lib.stride_tricks.sliding_window_view(l_env_c, m)
-        WUw = np.lib.stride_tricks.sliding_window_view(u_env_c, m)
-        d = dtw_cascade_batch(
-            Xw[sv], q, rho, eps2, lo_env, hi_env, WLw[sv], WUw[sv]
-        )
-        hit = d * d <= eps2
-        return pd.DataFrame(
-            {
-                "start": stv[hit].astype("int64"),
-                "dist": np.round(d[hit], 6),
-            }
-        ).astype({"start": "int64", "dist": "float64"})
+    def kernel(chunks):
+        for _base, pos, val, rows in chunks:
+            if not len(rows):
+                continue
+            # data-side envelope once per chunk, shared by every window
+            # (DtwUtils.java:96-134 builds it as the stream arrives);
+            # computed over chunk indices, which only WIDENS a window's
+            # true envelope at its edges — admissible
+            ser = pd.Series(val)
+            w = 2 * rho + 1
+            u_env_c = ser.rolling(w, min_periods=1, center=True).max().to_numpy()
+            l_env_c = ser.rolling(w, min_periods=1, center=True).min().to_numpy()
+            # the whole chunk's cascade in one batched numpy pass (the
+            # scalar per-window loop measured ~0.9 ms x 93k surviving
+            # windows on the sf0.1 fixture — see dtw_cascade_batch)
+            d = dtw_cascade_batch(
+                view(val, m)[rows],
+                q,
+                rho,
+                eps2,
+                lo_env,
+                hi_env,
+                view(l_env_c, m)[rows],
+                view(u_env_c, m)[rows],
+            )
+            hit = d * d <= eps2
+            yield pd.DataFrame(
+                {"start": pos[rows][hit], "dist": np.round(d[hit], 6)}
+            )
 
+    cands = None
     if index is not None:
         if n_positions is None:
             n_positions = series.count()
-        probe_fn = (
-            probe_index_ranges_sweep
-            if probe_method == "sweep"
-            else probe_index_ranges
-        )
-        cands = probe_fn(
+        cands = probe_index_ranges(
             index,
             dtw_envelope_probes(list(q), rho, epsilon, widths),
             n_positions,
@@ -1428,20 +1306,7 @@ def subsequence_match_dtw(
             grid=index_grid,
             available_widths=available_widths,
         )
-        return _verify_starts(
-            series, cands, m, chunk, verify, "start long, dist double"
-        )
-
-    def gen(batches):
-        for cid, pos, val, _ in _partition_chunks(batches):
-            base = cid * chunk
-            yield verify(pos, val, pos[(pos >= base) & (pos < base + chunk)])
-
-    return (
-        _chunked(series, m, chunk)
-        .repartition("chunk_id")
-        .mapInPandas(gen, schema="start long, dist double")
-    )
+    return _run_chunks(series, m, chunk, kernel, "start long, dist double", cands)
 
 
 def subsequence_match_znorm(
@@ -1449,46 +1314,57 @@ def subsequence_match_znorm(
     query: list[float],
     epsilon: float,
     chunk: int = 8192,
+    value_scale: int | None = None,
 ) -> DataFrame:
     """NSM: ED between z-normalized window and z-normalized query
-    (NormQueryEngine.java semantics), numpy over chunked windows."""
+    (NormQueryEngine.java semantics: population std, std=0 → unit
+    divisor), numpy over chunked windows.
+
+    ``value_scale`` (fixed-decimal data) computes the distance from
+    exact integer window sums through the closed form znorm_d2_sql,
+    which the DuckDB oracle evaluates identically — bit-reproducible in
+    any SQL engine. Windows failing the segment-mean stats screen
+    (znorm_segment_prune) skip the O(m) sxq dot product; the screen is
+    complete, so results are unchanged."""
     q = np.asarray(query, dtype=np.float64)
     m = len(q)
     if m == 0:
         raise ValueError("empty query")
+    if value_scale is not None:
+        m, sq, sqq = _query_int_sums(query, value_scale)
+        sums = window_int_sums(
+            series,
+            query,
+            value_scale,
+            chunk,
+            prune=znorm_segment_prune(query, epsilon, value_scale),
+        )
+        return (
+            sums.selectExpr("start", f"{znorm_d2_sql(m, sq, sqq)} AS d2")
+            .filter(F.col("d2") <= epsilon * epsilon)
+            .selectExpr(
+                "CAST(start AS BIGINT) AS start", "round(sqrt(d2), 6) AS dist"
+            )
+        )
     qn = (q - q.mean()) / (q.std() if q.std() > 0 else 1.0)
     sqn, sqq = float(qn.sum()), float(np.dot(qn, qn))
     eps2 = epsilon * epsilon
 
-    def gen(batches):
-        for cid, pos, val, _ in _partition_chunks(batches):
-            base, hi = cid * chunk, (cid + 1) * chunk
-            if len(val) < m:
+    def kernel(chunks):
+        for _base, pos, val, rows in chunks:
+            if not len(rows):
                 continue
-            # batched over the window axis (r19, guide §4.2 — the same
-            # rewrite 55b2d79 gave the q31 DTW verify): the per-window
-            # interpreted loop cost ~0.9 ms/window; these are ~2m numpy
-            # ops over the whole chunk. Ownership/gap checks are the
-            # scalar loop's two (strictly increasing int positions:
-            # endpoint equality implies the window is gap-free).
-            starts = pos[: len(val) - m + 1]
-            own = (
-                (starts >= base) & (starts < hi) & (pos[m - 1 :] == starts + m - 1)
-            )
-            idx = np.flatnonzero(own)
-            if not len(idx):
-                continue
-            # per-window moments + one BLAS matmul instead of
-            # materializing normalized windows: with population std,
-            # Σxn² = m and Σxn·qn = (Σx·qn − μ·Σqn)/σ, so d² = m −
-            # 2·Σxn·qn + Σqn² (σ = 0 → xn = 0 → d² = Σqn²) — the same
-            # closed form the exact integer-sum path evaluates, here on
-            # float moments (agrees with the scalar loop to ~1e-11 abs;
-            # both round to 6dp). The single-pass moments can leave an
-            # exact-zero d² (an affine copy of the query) slightly
-            # negative, so it is clamped at 0 before the sqrt, as cnsm
-            # does.
-            X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
+            # batched over the window axis (r19, guide §4.2): per-window
+            # moments + one BLAS matmul instead of materializing
+            # normalized windows: with population std, Σxn² = m and
+            # Σxn·qn = (Σx·qn − μ·Σqn)/σ, so d² = m − 2·Σxn·qn + Σqn²
+            # (σ = 0 → xn = 0 → d² = Σqn²) — the same closed form the
+            # exact integer-sum path evaluates, here on float moments
+            # (agrees with the scalar loop to ~1e-11 abs; both round to
+            # 6dp). The single-pass moments can leave an exact-zero d²
+            # (an affine copy of the query) slightly negative, so it is
+            # clamped at 0 before the sqrt, as cnsm does.
+            X = np.lib.stride_tricks.sliding_window_view(val, m)[rows]
             mu = X.sum(axis=1) / m
             var = np.maximum(np.einsum("ij,ij->i", X, X) / m - mu * mu, 0.0)
             sd = np.sqrt(var)
@@ -1504,17 +1380,10 @@ def subsequence_match_znorm(
             )
             hit = d2 <= eps2
             yield pd.DataFrame(
-                {
-                    "start": starts[idx][hit].astype("int64"),
-                    "dist": np.round(np.sqrt(d2[hit]), 6),
-                }
+                {"start": pos[rows][hit], "dist": np.round(np.sqrt(d2[hit]), 6)}
             )
 
-    return (
-        _chunked(series, m, chunk)
-        .repartition("chunk_id")
-        .mapInPandas(gen, schema="start long, dist double")
-    )
+    return _run_chunks(series, m, chunk, kernel, "start long, dist double")
 
 
 def subsequence_match_cnsm(
@@ -1524,6 +1393,7 @@ def subsequence_match_cnsm(
     alpha: float = 2.0,
     beta: float = 10.0,
     chunk: int = 8192,
+    value_scale: int | None = None,
 ) -> DataFrame:
     """cNSM (NormQueryEngine.java semantics): windows x matching the
     query under a CONSTRAINED linear normalization — exists a in
@@ -1535,11 +1405,39 @@ def subsequence_match_cnsm(
     eps (convexity: clamping coordinates of the box-constrained
     quadratic keeps the residual minimal on the box edge). Distributed
     over chunked windows like the other numpy paths.
+
+    ``value_scale`` (fixed-decimal data) evaluates the clamped fit from
+    exact integer window sums through cnsm_fit_sql — oracle-
+    reproducible. The mean/std stats screen (cnsm_stats_prune) drops
+    windows before the O(m) sxq dot product; complete, so results are
+    unchanged.
     """
     q = np.asarray(query, dtype=np.float64)
     m = len(q)
     if m == 0:
         raise ValueError("empty query")
+    if value_scale is not None:
+        m, sq, sqq = _query_int_sums(query, value_scale)
+        sums = window_int_sums(
+            series,
+            query,
+            value_scale,
+            chunk,
+            prune=cnsm_stats_prune(query, epsilon, alpha, beta, value_scale),
+        )
+        a_sql, b_sql, d2_sql = cnsm_fit_sql(m, sq, sqq, value_scale, alpha, beta)
+        return (
+            sums.selectExpr("start", "sx", "sxx", "sxq", f"{a_sql} AS _a")
+            .selectExpr("start", "sx", "sxx", "sxq", "_a", f"{b_sql} AS _b")
+            .selectExpr("start", "_a", "_b", f"{d2_sql} AS d2")
+            .filter(F.col("d2") <= epsilon * epsilon)
+            .selectExpr(
+                "CAST(start AS BIGINT) AS start",
+                "round(sqrt(d2), 6) AS dist",
+                "round(_a, 6) AS alpha",
+                "round(_b, 6) AS beta",
+            )
+        )
     qc = q - q.mean()
     qvar = float(np.dot(qc, qc))
     eps2 = epsilon * epsilon
@@ -1549,36 +1447,24 @@ def subsequence_match_cnsm(
     sqc = float(qc.sum())
     sq_raw, sqq_raw = float(q.sum()), float(np.dot(q, q))
 
-    def gen(batches):
-        for cid, pos, val, _ in _partition_chunks(batches):
-            base, hi = cid * chunk, (cid + 1) * chunk
-            if len(val) < m:
+    def kernel(chunks):
+        for _base, pos, val, rows in chunks:
+            if not len(rows):
                 continue
-            # batched over the window axis (r19, guide §4.2): the
-            # clamped least-squares fit is one matmul + O(m) vector ops
-            # for the whole chunk instead of a ~0.9 ms/window
-            # interpreted loop
-            starts = pos[: len(val) - m + 1]
-            own = (
-                (starts >= base) & (starts < hi) & (pos[m - 1 :] == starts + m - 1)
-            )
-            idx = np.flatnonzero(own)
-            if not len(idx):
-                continue
-            # per-window moments + two BLAS matmuls instead of
-            # materializing residual windows: a = (Σx·qc − x̄·Σqc) /
-            # Σqc², and the residual expands in the window's raw
-            # moments — d² = Σx² − 2aΣxq − 2bΣx + a²Σq² + 2abΣq + m·b²
-            # (the same expansion the exact integer-sum path evaluates;
-            # agrees with the scalar loop to ~1e-9 abs, both round to
-            # 6dp)
-            X = np.lib.stride_tricks.sliding_window_view(val, m)[idx]
+            # batched over the window axis (r19, guide §4.2): per-window
+            # moments + two BLAS matmuls instead of materializing
+            # residual windows: a = (Σx·qc − x̄·Σqc) / Σqc², and the
+            # residual expands in the window's raw moments — d² = Σx² −
+            # 2aΣxq − 2bΣx + a²Σq² + 2abΣq + m·b² (the same expansion
+            # the exact integer-sum path evaluates; agrees with the
+            # scalar loop to ~1e-9 abs, both round to 6dp)
+            X = np.lib.stride_tricks.sliding_window_view(val, m)[rows]
             sx = X.sum(axis=1)
             xm = sx / m
             if qvar > 0:
                 a = (X @ qc - xm * sqc) / qvar
             else:
-                a = np.ones(len(idx))
+                a = np.ones(len(rows))
             a = np.clip(a, a_lo, a_hi)
             b = np.clip(xm - a * qm, -beta, beta)
             sxx = np.einsum("ij,ij->i", X, X)
@@ -1595,17 +1481,19 @@ def subsequence_match_cnsm(
             hit = d2 <= eps2
             yield pd.DataFrame(
                 {
-                    "start": starts[idx][hit].astype("int64"),
+                    "start": pos[rows][hit],
                     "dist": np.round(np.sqrt(d2[hit]), 6),
                     "alpha": np.round(a[hit], 6),
                     "beta": np.round(b[hit], 6),
                 }
             )
 
-    return (
-        _chunked(series, m, chunk)
-        .repartition("chunk_id")
-        .mapInPandas(gen, schema="start long, dist double, alpha double, beta double")
+    return _run_chunks(
+        series,
+        m,
+        chunk,
+        kernel,
+        "start long, dist double, alpha double, beta double",
     )
 
 
@@ -1624,13 +1512,12 @@ def window_int_sums(
 ) -> DataFrame:
     """(start, sx, sxx, sxq) for every complete width-m window, where
     sx/sxx/sxq are EXACT int64 sums of scaled values: sx = Σ X[s+i],
-    sxx = Σ X[s+i]², sxq = Σ X[s+i]·Q[i] with X = rint(value*scale).
+    sxx = Σ X[s+i]², sxq = Σ X[s+i]·Q[i] with X = value*scale.
 
     Integer sums are order-independent, so the distributed chunked
     computation is bit-equal to any SQL engine's GROUP BY sum — the
     foundation that makes the normalized-match closed forms (zNorm,
-    cNSM) reproducible in the DuckDB oracle. Chunked with overlap
-    replication like sliding_stats; no global sort.
+    cNSM) reproducible in the DuckDB oracle.
 
     ``prune(sx, sxx, segmean) -> keep mask`` (numpy, per chunk) drops
     windows BEFORE the O(m)-per-window sxq dot product — the engine's
@@ -1640,53 +1527,35 @@ def window_int_sums(
     mask must be conservative w.r.t. the caller's final exact
     distance filter; pruned windows emit no row at all.
     """
-    q = np.rint(np.asarray(query, dtype=np.float64) * value_scale).astype(np.int64)
+    q = _fixed_decimal(query, value_scale, "query")
     m = len(q)
 
-    def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        pos = pdf["pos"].to_numpy()
-        val = pdf["value"].to_numpy(dtype=np.float64)
-        base = int(pdf["chunk_id"].iloc[0]) * chunk
-        hi = base + chunk
-        if len(val) < m:
-            return pd.DataFrame(
-                {"start": [], "sx": [], "sxx": [], "sxq": []}
-            ).astype("int64")
-        X = np.rint(val * value_scale).astype(np.int64)
-        starts = pos[: len(X) - m + 1]
-        own = (starts >= base) & (starts < hi) & (pos[m - 1 :] == starts + m - 1)
-        c1 = np.concatenate(([0], np.cumsum(X)))
-        c2 = np.concatenate(([0], np.cumsum(X * X)))
-        idx = np.flatnonzero(own)
-        sx = c1[idx + m] - c1[idx]
-        sxx = c2[idx + m] - c2[idx]
-        if prune is not None:
+    def kernel(chunks):
+        for _base, pos, val, rows in chunks:
+            if not len(rows):
+                continue
+            X = _fixed_decimal(val, value_scale, "series")
+            c1 = np.concatenate(([0], np.cumsum(X)))
+            c2 = np.concatenate(([0], np.cumsum(X * X)))
+            sx = c1[rows + m] - c1[rows]
+            sxx = c2[rows + m] - c2[rows]
+            if prune is not None:
 
-            def segmean(offset: int, width: int) -> np.ndarray:
-                return (c1[idx + offset + width] - c1[idx + offset]) / (
-                    width * value_scale
-                )
+                def segmean(offset: int, width: int) -> np.ndarray:
+                    return (c1[rows + offset + width] - c1[rows + offset]) / (
+                        width * value_scale
+                    )
 
-            keep = prune(sx, sxx, segmean)
-            idx, sx, sxx = idx[keep], sx[keep], sxx[keep]
-        windows = np.lib.stride_tricks.sliding_window_view(X, m)
-        sxq = windows[idx] @ q  # int64 matmul, survivors only — exact
-        return pd.DataFrame(
-            {
-                "start": starts[idx],
-                "sx": sx,
-                "sxx": sxx,
-                "sxq": sxq,
-            }
-        )
+                keep = prune(sx, sxx, segmean)
+                rows, sx, sxx = rows[keep], sx[keep], sxx[keep]
+            windows = np.lib.stride_tricks.sliding_window_view(X, m)
+            sxq = windows[rows] @ q  # int64 matmul, survivors only — exact
+            yield pd.DataFrame(
+                {"start": pos[rows], "sx": sx, "sxx": sxx, "sxq": sxq}
+            )
 
-    return (
-        _chunked(series, m, chunk)
-        .groupBy("chunk_id")
-        .applyInPandas(
-            per_chunk, schema="start long, sx long, sxx long, sxq long"
-        )
+    return _run_chunks(
+        series, m, chunk, kernel, "start long, sx long, sxx long, sxq long"
     )
 
 
@@ -1769,7 +1638,7 @@ def cnsm_fit_sql(
 
 
 def _query_int_sums(query: list[float], scale: int) -> tuple[int, int, int]:
-    q = np.rint(np.asarray(query, dtype=np.float64) * scale).astype(np.int64)
+    q = _fixed_decimal(query, scale, "query")
     return len(q), int(q.sum()), int((q * q).sum())
 
 
@@ -1790,7 +1659,7 @@ def znorm_segment_prune(
     normalized-index probe of NormQueryEngine.java:136-243 re-derived
     against sliding stats instead of a beta-partitioned index file.
     sigma_x ~ 0 windows are kept (the exact formula decides them)."""
-    qv = np.rint(np.asarray(query, dtype=np.float64) * value_scale) / value_scale
+    qv = _fixed_decimal(query, value_scale, "query") / value_scale
     m = len(qv)
     qstd = float(qv.std())
     if qstd <= 0:
@@ -1835,7 +1704,7 @@ def cnsm_stats_prune(
                 alpha sigma_q + eps/sqrt(m)]
     (|mean r| <= eps/sqrt(m), std r <= eps/sqrt(m) for ||r|| <= eps)
     — the ENABLE_STD_FILTER screen (NormQueryEngine.java:54-56)."""
-    qv = np.rint(np.asarray(query, dtype=np.float64) * value_scale) / value_scale
+    qv = _fixed_decimal(query, value_scale, "query") / value_scale
     m = len(qv)
     mq, sq_ = float(qv.mean()), float(qv.std())
     slack = epsilon / math.sqrt(m) + _PRUNE_SLACK
@@ -1852,72 +1721,6 @@ def cnsm_stats_prune(
         return (mu >= mu_lo) & (mu <= mu_hi) & (sd >= sd_lo) & (sd <= sd_hi)
 
     return prune
-
-
-def subsequence_match_znorm_exact(
-    series: DataFrame,
-    query: list[float],
-    epsilon: float,
-    value_scale: int = 100,
-    chunk: int = 8192,
-    widths: tuple[int, ...] = DEFAULT_WIDTHS,
-) -> DataFrame:
-    """NSM via exact integer window sums + closed-form distance — same
-    semantics as subsequence_match_znorm (population std, std=0 → unit
-    divisor) but bit-reproducible in any SQL engine (the DuckDB oracle
-    evaluates the identical formula on identical integer sums).
-    Windows failing the segment-mean stats screen skip the O(m) sxq
-    dot product; the screen is complete, so results are unchanged."""
-    m, sq, sqq = _query_int_sums(query, value_scale)
-    sums = window_int_sums(
-        series,
-        query,
-        value_scale,
-        chunk,
-        prune=znorm_segment_prune(query, epsilon, value_scale, widths),
-    )
-    d2 = znorm_d2_sql(m, sq, sqq)
-    return (
-        sums.selectExpr("start", f"{d2} AS d2")
-        .filter(F.col("d2") <= epsilon * epsilon)
-        .selectExpr("CAST(start AS BIGINT) AS start", "round(sqrt(d2), 6) AS dist")
-    )
-
-
-def subsequence_match_cnsm_exact(
-    series: DataFrame,
-    query: list[float],
-    epsilon: float,
-    alpha: float = 2.0,
-    beta: float = 10.0,
-    value_scale: int = 100,
-    chunk: int = 8192,
-) -> DataFrame:
-    """cNSM via exact integer window sums + closed-form clamped fit —
-    same semantics as subsequence_match_cnsm, oracle-reproducible.
-    The mean/std stats screen (cnsm_stats_prune) drops windows before
-    the O(m) sxq dot product; complete, so results are unchanged."""
-    m, sq, sqq = _query_int_sums(query, value_scale)
-    sums = window_int_sums(
-        series,
-        query,
-        value_scale,
-        chunk,
-        prune=cnsm_stats_prune(query, epsilon, alpha, beta, value_scale),
-    )
-    a_sql, b_sql, d2_sql = cnsm_fit_sql(m, sq, sqq, value_scale, alpha, beta)
-    return (
-        sums.selectExpr("start", "sx", "sxx", "sxq", f"{a_sql} AS _a")
-        .selectExpr("start", "sx", "sxx", "sxq", "_a", f"{b_sql} AS _b")
-        .selectExpr("start", "_a", "_b", f"{d2_sql} AS d2")
-        .filter(F.col("d2") <= epsilon * epsilon)
-        .selectExpr(
-            "CAST(start AS BIGINT) AS start",
-            "round(sqrt(d2), 6) AS dist",
-            "round(_a, 6) AS alpha",
-            "round(_b, 6) AS beta",
-        )
-    )
 
 
 def brute_force_ed(series_values: np.ndarray, query: np.ndarray, epsilon: float):

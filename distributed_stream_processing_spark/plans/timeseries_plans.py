@@ -15,10 +15,10 @@ from distributed_stream_processing_spark.catalog import Catalog
 from distributed_stream_processing_spark.operators.subsequence_match import (
     build_kv_index,
     cnsm_fit_sql,
-    subsequence_match_cnsm_exact,
+    subsequence_match_cnsm,
     subsequence_match_dtw,
     subsequence_match_ed,
-    subsequence_match_znorm_exact,
+    subsequence_match_znorm,
     znorm_d2_sql,
 )
 from distributed_stream_processing_spark.plans.registry import query
@@ -156,13 +156,6 @@ def q29_subseq_match_ed(spark: SparkSession, sf_dir: str) -> DataFrame:
         index=shared_index(spark, sf_dir),
         n_positions=n,
         available_widths={100},
-        # the interval-granularity probe (work scales with index
-        # intervals, not series positions — the 100 TB shape). Round 5
-        # closed its fixed costs: single index scan for all probes,
-        # k==1 shortcut, deterministic buckets instead of a sampled
-        # range shuffle; measured <= the explode twin at sf0.1 for
-        # both the k=1 (this query) and k=4 shapes
-        probe_method="sweep",
     )
 
 
@@ -202,9 +195,7 @@ def q59_subseq_match_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
         index=shared_index(spark, sf_dir, widths=widths),
         n_positions=n,
         available_widths=set(widths),
-        probe_method="sweep",
         segmenter="dp",
-        early_stop=True,
     )
 
 
@@ -330,7 +321,6 @@ def q31_subseq_match_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return subsequence_match_dtw(
         s, qv, epsilon=EPS_DTW, rho=DTW_RHO, index=shared_index(spark, sf_dir),
         n_positions=n, widths=(25, 50, 100), available_widths={100},
-        probe_method="sweep",
     )
 
 
@@ -365,7 +355,7 @@ def _cnsm_oracle() -> str:
 def q49_subseq_match_cnsm(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = series_df(spark, sf_dir)
     qv, _n = _query_values(spark, sf_dir)
-    return subsequence_match_cnsm_exact(
+    return subsequence_match_cnsm(
         s, qv, epsilon=EPS_CNSM, alpha=CNSM_ALPHA, beta=CNSM_BETA, value_scale=100
     )
 
@@ -393,4 +383,4 @@ def _znorm_oracle() -> str:
 def q32_subseq_match_znorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = series_df(spark, sf_dir)
     qv, _n = _query_values(spark, sf_dir)
-    return subsequence_match_znorm_exact(s, qv, epsilon=EPS_ZN, value_scale=100)
+    return subsequence_match_znorm(s, qv, epsilon=EPS_ZN, value_scale=100)

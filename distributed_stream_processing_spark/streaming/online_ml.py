@@ -27,6 +27,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_stream_processing_spark.operators.subsequence_match import (
+    _fixed_decimal,
+    _run_chunks,
+)
+
 
 def batch_best_match(
     series: DataFrame,
@@ -59,78 +64,35 @@ def batch_best_match(
     """
     if not windows:
         return {}
-    m = len(next(iter(windows.values())))
     items = sorted((int(k), np.asarray(v, dtype=np.float64)) for k, v in windows.items())
+    ids = [k for k, _ in items]
     if value_scale is not None:
-        scaled = [(k, v * value_scale) for k, v in items]
-        # the exactness contract is data-dependent: fail LOUDLY when
-        # the data is not fixed-decimal at this scale instead of
-        # silently degrading to approximately-rounded integers
-        for k, sv in scaled:
-            if len(sv) and float(np.abs(sv - np.rint(sv)).max()) > 1e-6:
-                raise ValueError(
-                    f"value_scale={value_scale} but window {k} is not "
-                    "fixed-decimal at that scale"
-                )
-        items = [(k, np.rint(sv).astype(np.int64)) for k, sv in scaled]
-    _q_absmax = max(
-        (float(np.abs(q).max()) for _, q in items if len(q)), default=0.0
-    )
+        Q = np.stack([_fixed_decimal(v, value_scale, f"window {k}") for k, v in items])
+    else:
+        Q = np.stack([v for _, v in items])
+    m = Q.shape[1]
 
-    from distributed_stream_processing_spark.operators.subsequence_match import (
-        _chunked,
-        _partition_chunks,
-    )
-
-    def gen(batches):
+    def kernel(chunks):
         # each chunk's per-window minimum; one row per window per
         # partition leaves the task
         found = []
-        for cid, pos, val, _ in _partition_chunks(batches):
-            base, hi = cid * chunk, (cid + 1) * chunk
-            if len(val) < m:
+        for _base, pos, val, rows in chunks:
+            if not len(rows):
                 continue
             if value_scale is not None:
-                sv = val * value_scale
-                if len(sv) and float(np.abs(sv - np.rint(sv)).max()) > 1e-6:
-                    raise ValueError(
-                        f"value_scale={value_scale} but series values "
-                        "are not fixed-decimal at that scale"
-                    )
-                val = np.rint(sv).astype(np.int64)
-                # int64-exactness guard: the double-typed merge
-                # column is exact only while d2 < 2^53
-                dmax = float(np.abs(val).max()) + _q_absmax
-                if dmax * dmax * m >= 2.0**53:
-                    raise ValueError(
-                        "scaled |diff|^2 * m may exceed 2^53 — exact "
-                        "int64 distance contract would break; lower "
-                        "value_scale or shorten the window"
-                    )
-            X = np.lib.stride_tricks.sliding_window_view(val, m)
-            starts = pos[: len(val) - m + 1]
-            own = (
-                (starts >= base)
-                & (starts < hi)
-                & (pos[m - 1 :] == starts + m - 1)
-            )
-            if not own.any():
-                continue
-            Xo, so = X[own], starts[own]
-            for wid, q in items:
-                d2 = ((Xo - q) ** 2).sum(axis=1)
+                val = _fixed_decimal(val, value_scale, "series", against=Q)
+            X = np.lib.stride_tricks.sliding_window_view(val, m)[rows]
+            for wid, q in zip(ids, Q):
+                d2 = ((X - q) ** 2).sum(axis=1)
                 i = int(np.argmin(d2))  # first minimum: lowest position
-                found.append((wid, int(so[i]), float(d2[i])))
+                found.append((wid, int(pos[rows[i]]), float(d2[i])))
         if found:
             pdf = pd.DataFrame(found, columns=["window_id", "pos", "d2"])
             yield pdf.sort_values(["d2", "pos"]).drop_duplicates("window_id")
 
-    rows = (
-        _chunked(series, m, chunk)
-        .repartition("chunk_id")
-        .mapInPandas(gen, schema="window_id long, pos long, d2 double")
-        .collect()
-    )
+    rows = _run_chunks(
+        series, m, chunk, kernel, "window_id long, pos long, d2 double"
+    ).collect()
     # driver merge of the per-partition minima: the first row per
     # window in (d2, pos) order, so ties go to the lowest position
     scale = float(value_scale) if value_scale is not None else 1.0

@@ -54,6 +54,38 @@ def count_jobs(spark):
 
 
 @pytest.fixture(scope="session")
+def probe_reference():
+    """``ref(index_rows, segments, epsilon, n_positions, query_len)``:
+    the candidate starts of an ED index probe, computed in numpy from
+    the collected index rows. A start passes a segment when start +
+    offset lies in a run of the segment's width whose mr is within
+    eps/sqrt(w) + grid of the segment mean (Cauchy-Schwarz plus the
+    floor-rounding slack); the result is the intersection over all
+    segments, ascending."""
+    import math
+
+    import numpy as np
+
+    def ref(rows, segments, epsilon, n_positions, query_len, grid=0.5):
+        max_start = n_positions - query_len
+        cands = np.ones(max_start + 1, dtype=bool)
+        for seg in segments:
+            slack = epsilon / math.sqrt(seg.width)
+            lo, hi = seg.mean - slack - grid, seg.mean + slack + grid
+            hit = np.zeros(max_start + 1, dtype=bool)
+            for r in rows:
+                if r.w == seg.width and lo <= r.mr <= hi:
+                    s = max(0, r.pos_start - seg.offset)
+                    e = min(max_start, r.pos_end - seg.offset)
+                    if e >= s:
+                        hit[s : e + 1] = True
+            cands &= hit
+        return np.flatnonzero(cands).tolist()
+
+    return ref
+
+
+@pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE
 

@@ -332,6 +332,24 @@ def test_similarity_store_layout_version_gate(spark, corpus, tmp_path):
         load_similarity_store(spark, path, T)
 
 
+def test_similarity_store_threshold_gate(spark, corpus, tmp_path):
+    """A store built at one threshold must not load at another: its
+    segment counts and signatures belong to the build threshold, so a
+    load at a different one would silently drop pairs."""
+    from distributed_stream_processing_spark.operators.semi_stream_similarity import (
+        build_similarity_store,
+        load_similarity_artifacts,
+        save_similarity_artifacts,
+    )
+
+    stored = corpus.filter(F.col("id") >= 60)
+    path = str(tmp_path / "tstore")
+    save_similarity_artifacts(build_similarity_store(stored, Fraction(3, 4)), path)
+    with pytest.raises(ValueError, match="threshold 3/4, the load asks for 4/5"):
+        load_similarity_artifacts(spark, path, Fraction(4, 5))
+    assert load_similarity_artifacts(spark, path, Fraction(3, 4)).threshold == Fraction(3, 4)
+
+
 def test_dima_vsl_scheme_equals_brute_force(spark, corpus):
     """scheme='vsl' (per-record per-segment probe V-selection,
     DimaJoin.scala:330-479 granularity) must stay exact whatever

@@ -225,10 +225,11 @@ def test_merge_intervals_equals_bruteforce_hypothesis(spark):
     run()
 
 
-def test_sweep_probe_equals_explode_hypothesis(spark):
+def test_probe_equals_numpy_candidates_hypothesis(spark, probe_reference):
     """Random series/epsilons: the interval sweep-line probe admits
-    exactly the explode probe's starts (stresses partition-boundary
-    handling in the distributed prefix sum)."""
+    exactly the starts a numpy intersection of the collected index rows
+    admits (stresses partition-boundary handling in the distributed
+    prefix sum)."""
     import random
 
     from distributed_stream_processing_spark.operators.subsequence_match import (
@@ -252,18 +253,12 @@ def test_sweep_probe_equals_explode_hypothesis(spark):
         idx = build_kv_index(df, widths=(10, 20), value_scale=100)
         q = vals[100 : 100 + m]
         segs = plan_segments(q, widths=(10, 20))
-        kw = dict(
-            epsilon=eps, n_positions=n, query_len=m,
-            available_widths={10, 20},
-        )
-        explode = sorted(
+        got = sorted(
             r.start
-            for r in probe_index(idx, segs, **kw, method="explode").collect()
+            for r in probe_index(
+                idx, segs, eps, n, m, available_widths={10, 20}
+            ).collect()
         )
-        sweep = sorted(
-            r.start
-            for r in probe_index(idx, segs, **kw, method="sweep").collect()
-        )
-        assert sweep == explode
+        assert got == probe_reference(idx.collect(), segs, eps, n, m)
 
     run()

@@ -14,7 +14,6 @@ from distributed_stream_processing_spark.operators.subsequence_match import (
     brute_force_ed,
     build_kv_index,
     plan_segments,
-    sliding_stats,
     subsequence_match_dtw,
     subsequence_match_ed,
     subsequence_match_znorm,
@@ -41,19 +40,6 @@ def series(spark):
     )
     df.cache().count()
     return df, arr
-
-
-def test_sliding_stats_exact(spark, series):
-    df, arr = series
-    got = {
-        r.pos: (r.mean, r.std)
-        for r in sliding_stats(df, 25, chunk=CHUNK).collect()
-    }
-    assert len(got) == N - 24
-    for pos in (0, 100, CHUNK - 1, CHUNK, CHUNK + 1, N - 25):
-        w = arr[pos : pos + 25]
-        assert math.isclose(got[pos][0], w.mean(), rel_tol=1e-9)
-        assert math.isclose(got[pos][1], w.std(), rel_tol=1e-6, abs_tol=1e-9)
 
 
 def test_index_covers_all_positions(spark, series):
@@ -230,20 +216,17 @@ def test_znorm_equals_brute_force(spark, series):
 
 
 def test_znorm_exact_equals_numpy_path(spark, series):
-    """The closed-form integer-sum zNorm path (oracle-reproducible)
-    must agree with the numpy z-normalization to float tolerance."""
-    from distributed_stream_processing_spark.operators.subsequence_match import (
-        subsequence_match_znorm_exact,
-    )
-
+    """The closed-form integer-sum zNorm path (value_scale,
+    oracle-reproducible) must agree with the float z-normalization to
+    float tolerance."""
     df, arr = series
     q = arr[500 : 500 + M]
     eps = 5.0
     base = {r.start: r.dist for r in
             subsequence_match_znorm(df, q.tolist(), eps, chunk=CHUNK).collect()}
     exact = {r.start: r.dist for r in
-             subsequence_match_znorm_exact(
-                 df, q.tolist(), eps, value_scale=100, chunk=CHUNK
+             subsequence_match_znorm(
+                 df, q.tolist(), eps, chunk=CHUNK, value_scale=100
              ).collect()}
     assert set(exact) == set(base) and len(base) > 0
     for s in base:
@@ -335,14 +318,10 @@ def test_cnsm_equals_brute_force(spark, series):
         assert math.isclose(got[s], want[s], abs_tol=1e-6)
 
     # the closed-form integer-sum path (oracle-reproducible) agrees
-    from distributed_stream_processing_spark.operators.subsequence_match import (
-        subsequence_match_cnsm_exact,
-    )
-
     exact = {
         r.start: (r.dist, r.alpha, r.beta)
-        for r in subsequence_match_cnsm_exact(
-            df2, q.tolist(), eps, alpha, beta, value_scale=100, chunk=CHUNK
+        for r in subsequence_match_cnsm(
+            df2, q.tolist(), eps, alpha, beta, chunk=CHUNK, value_scale=100
         ).collect()
     }
     assert set(exact) == set(want)
@@ -379,45 +358,52 @@ def test_index_save_load_probe_roundtrip(spark, series, tmp_path):
     assert {s for s, _ in built} >= {500, 2000}
 
 
-def test_sweep_probe_equals_explode_probe(spark, series):
-    """The interval sweep-line probe must admit exactly the explode
-    probe's candidate starts (and both matchers the same output)."""
+def test_probe_equals_numpy_candidates(spark, series, probe_reference):
+    """The interval sweep-line probe admits exactly the starts a numpy
+    intersection of the collected index rows admits, for k = 1, 2 and
+    4 query segments — including covered ranges that cross a sweep
+    bucket boundary, which the sweep closes from the next bucket."""
     from distributed_stream_processing_spark.operators.subsequence_match import (
-        plan_segments,
         probe_index,
     )
 
     df, arr = series
-    idx = build_kv_index(df, widths=(25, 50), value_scale=100)
-    for qstart, eps in ((500, 1.0), (700, 8.0), (0, 3.0)):
-        q = arr[qstart : qstart + M].tolist()
-        segs = plan_segments(q, widths=(25, 50))
-        kw = dict(
-            epsilon=eps, n_positions=N, query_len=M,
-            available_widths={25, 50},
-        )
-        explode = sorted(
-            r.start for r in probe_index(idx, segs, **kw, method="explode").collect()
-        )
-        sweep = sorted(
-            r.start for r in probe_index(idx, segs, **kw, method="sweep").collect()
-        )
-        assert sweep == explode and explode
-    # full matcher parity through the sweep path
-    q = arr[500 : 500 + M].tolist()
-    got = sorted(
-        (r.start, round(r.dist, 6))
-        for r in subsequence_match_ed(
-            df, q, 1.0, widths=(25, 50), value_scale=100, probe_method="sweep"
-        ).collect()
+    idx = build_kv_index(df, widths=(25, 50), value_scale=100).cache()
+    rows = idx.collect()
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    crossed = False
+    cases = (
+        # (query start, query length, segment widths, eps, segments)
+        (500, M, (25, 50), 1.0, 1),
+        (0, M, (25, 50), 3.0, 1),
+        (0, M, (25,), 12.0, 2),
+        (700, 100, (50,), 8.0, 2),
+        (500, 100, (25,), 20.0, 4),
     )
-    want = sorted(
-        (r.start, round(r.dist, 6))
-        for r in subsequence_match_ed(
-            df, q, 1.0, widths=(25, 50), value_scale=100
-        ).collect()
-    )
-    assert got == want
+    for qstart, m, widths, eps, k in cases:
+        q = arr[qstart : qstart + m].tolist()
+        segs = plan_segments(q, widths)
+        assert len(segs) == k
+        got = sorted(
+            r.start
+            for r in probe_index(
+                idx, segs, eps, N, m, available_widths={25, 50}
+            ).collect()
+        )
+        want = probe_reference(rows, segs, eps, N, m)
+        assert got == want and want
+        if k > 1:
+            # a covered run [s, e] has its events at s and e + 1; the
+            # sweep buckets positions over [0, N - m + 1]
+            span = N - m + 2
+            runs = np.split(want, np.flatnonzero(np.diff(want) > 1) + 1)
+            crossed |= any(
+                min(n_parts - 1, r[0] * n_parts // span)
+                != min(n_parts - 1, (r[-1] + 1) * n_parts // span)
+                for r in runs
+            )
+    assert crossed
+    idx.unpersist()
 
 
 def test_t11_truncation_cost_model():
@@ -453,26 +439,21 @@ def test_t11_truncation_cost_model():
 
 
 def test_t11_early_stop_keeps_results_exact(spark, series):
-    """early_stop=True may only widen the candidate superset — the
-    verified output must equal the untruncated dp run."""
+    """The dp path's T11 segment truncation may only widen the
+    candidate superset — the verified output must equal brute force."""
     df, arr = series
-    q = arr[300 : 300 + M].tolist()
+    q = arr[300 : 300 + M]
     eps = 8.0
-    full = {
+    got = sorted(
         (r.start, r.dist)
         for r in subsequence_match_ed(
-            df, q, eps, widths=(25, 50), value_scale=100, segmenter="dp",
-            early_stop=False,
+            df, q.tolist(), eps, widths=(25, 50), value_scale=100, segmenter="dp",
         ).collect()
-    }
-    cut = {
-        (r.start, r.dist)
-        for r in subsequence_match_ed(
-            df, q, eps, widths=(25, 50), value_scale=100, segmenter="dp",
-            early_stop=True,
-        ).collect()
-    }
-    assert cut == full and len(full) > 0
+    )
+    want = brute_force_ed(arr, q, eps)
+    assert [g[0] for g in got] == [w[0] for w in want] and want
+    for (_, gd), (_, wd) in zip(got, want):
+        assert math.isclose(gd, wd, abs_tol=1e-6)
 
 
 def test_index_mr_values_match_numpy(spark, series):
@@ -661,8 +642,9 @@ def test_cnsm_window_straddles_record_batches(
 def test_indexed_verify_window_straddles_record_batches(
     spark, straddle_series, small_arrow_batches
 ):
-    """The candidate verify (_verify_starts: series rows and candidate
-    starts through one exchange) gathers each partition too."""
+    """The candidate verify (_run_chunks with candidates: series rows
+    and candidate starts through one exchange) gathers each partition
+    too."""
     df, vals = straddle_series
     q, dist, eps = _straddle_case(
         vals, lambda X, q: np.sqrt(((X - q) ** 2).sum(axis=1))
@@ -714,3 +696,70 @@ def test_znorm_affine_copy_distance_is_zero(spark, series):
     }
     assert got[2900] == 0.0 and got[700] == 0.0
     assert all(d is not None and not math.isnan(d) for d in got.values())
+
+
+def test_self_built_index_leaves_no_cache_entry(spark, series):
+    """A match call that builds its own index pins it as a local
+    checkpoint that goes with the returned frame; it must leave no
+    CacheManager entry behind (a .cache() entry lived until the session
+    ended), on the greedy and on the dp path."""
+    _, arr = series
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(arr)], "pos long, value double"
+    )
+    q = arr[500 : 500 + M]
+    spark.catalog.clearCache()
+    for segmenter in ("greedy", "dp"):
+        got = subsequence_match_ed(
+            df, q.tolist(), 1.0, widths=(25, 50), value_scale=100,
+            segmenter=segmenter,
+        ).collect()
+        assert sorted(r.start for r in got) == [
+            s for s, _ in brute_force_ed(arr, q, 1.0)
+        ]
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_value_scale_refuses_off_grid_input(spark, series):
+    """Every value_scale path refuses data that is not fixed-decimal at
+    that scale instead of quantizing it: a 3-decimal series fails the
+    task with the contract's ValueError (surfaced on the driver as a
+    PythonException), and a 3-decimal query raises ValueError on the
+    driver."""
+    from pyspark.errors import PythonException
+
+    from distributed_stream_processing_spark.operators.subsequence_match import (
+        subsequence_match_cnsm,
+    )
+
+    df, arr = series
+    fine = arr + np.round(np.random.default_rng(2).uniform(-0.004, 0.004, N), 3)
+    df3 = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(fine)], "pos long, value double"
+    )
+    q2 = arr[500 : 500 + M].tolist()
+    q3 = fine[500 : 500 + M].tolist()
+    series_calls = (
+        lambda: build_kv_index(df3, widths=(25,), value_scale=100),
+        lambda: subsequence_match_znorm(df3, q2, 5.0, value_scale=100),
+        lambda: subsequence_match_cnsm(df3, q2, 5.0, value_scale=100),
+        lambda: subsequence_match_ed(df3, q2, 1.0, widths=(50,), value_scale=100),
+    )
+    for call in series_calls:
+        with pytest.raises(
+            PythonException,
+            match="ValueError: value_scale=100 but the series is not fixed-decimal",
+        ):
+            call().collect()
+    query_calls = (
+        lambda: subsequence_match_znorm(df, q3, 5.0, value_scale=100),
+        lambda: subsequence_match_cnsm(df, q3, 5.0, value_scale=100),
+        lambda: subsequence_match_ed(
+            df, q3, 1.0, widths=(50,), value_scale=100
+        ).collect(),
+    )
+    for call in query_calls:
+        with pytest.raises(
+            ValueError, match="value_scale=100 but the query is not fixed-decimal"
+        ):
+            call()
