@@ -6,15 +6,21 @@ join, miss detect, per-partition remote fetch, LRU upsert, eviction,
 cache swap, hand-rolled threads (streaming.scala:211-617) — becomes
 ONE DataFrame program per batch:
 
-* hit   = batch ⋈ cache          (inner; broadcast when cache small)
-* miss  = batch ⟕̸ cache          (left_anti)
-* fetch = store ⋉ missed-keys    (left_semi on a broadcast key set —
-          the JDBC/connector analogue is WHERE key IN (...) pushdown)
-* out   = hit ∪ (miss ⋈ fetch)
+* hit    = cache ⋉ batch-keys     (left_semi on the broadcast key set:
+           the cache is scanned, never shuffled)
+* missed = batch-keys ⋉̸ hit-keys  (left_anti, shuffled hash)
+* fetch  = store ⋉ missed-keys    (left_semi on a broadcast key set —
+           the JDBC/connector analogue is WHERE key IN (...) pushdown)
+* out    = batch ⋈ (hit ∪ fetch)  (inner, shuffled hash built on the
+           batch; hit and fetch keys are disjoint)
 * state: LRU last-seen upsert, eviction of keys older than the
   adaptive window, cache rebuild = (cache ∖ evicted) ∪ fetch
 
-Spark schedules the formerly-threaded stages from one DAG. STATE:
+Spark schedules the formerly-threaded stages from one DAG. Each pin
+is a checkpoint planned AQE-off; only the hit pin runs a job at its
+call (the key-set broadcast), so an ordinary batch runs three jobs:
+that broadcast, the fetch's one job (the pushdown key collect or the
+scan fetch's missed-key broadcast) and the combined action. STATE:
 streaming/lru_state.py (``CacheState``, shared with the similarity
 pipeline) owns the deferred-compaction cache/LRU, the batch's one
 combined action and every pin; this module builds the key set, the
@@ -130,63 +136,67 @@ class SemiStreamJoin(CachedPipeline):
         state; return the enriched output (hit ∪ miss-fetched).
 
         The previous batch's attribution walk (background, diagnostics
-        only) is joined before this batch launches its FIRST job: the
-        output localCheckpoint is planned with AQE on and runs its
-        shuffle stages as jobs at the call, and those jobs update the
-        shared cached-relation SQL-metric accumulators the walk reads,
-        so a later flush would race the walk against this batch's
-        execution. The walk still overlaps the previous
-        batch's tail. Callers that read ``controller.history``
-        directly after a bare process_batch must call
-        :meth:`flush_attribution`."""
+        only) is joined before this batch launches its FIRST job, the
+        broadcast at the matching-cache pin: a job of this batch that
+        scans the shared cached relations would update the SQL-metric
+        accumulators the walk reads. The walk still overlaps the
+        previous batch's tail. Callers that read
+        ``controller.history`` directly after a bare process_batch
+        must call :meth:`flush_attribution`."""
         k, state = self.key, self._state
         state.flush()
         with state.batch():
             batch_keys = state.pin_keys(batch)
             # hit/miss split, SCAN-SIDE: one semi-scan of the cache
-            # against the broadcast batch keys yields the (batch-bounded)
-            # matching cache rows; the batch then joins THOSE.
-            # The previous shape joined batch x cache directly and left
-            # the strategy to AQE — fine while the cache auto-broadcasts,
-            # but a store-scale cache (the q33_100x axis) falls to a
-            # sort-merge join that shuffles batch AND cache every batch.
-            # This shape scans the cache and shuffles nothing, whatever
-            # the cache size — the same shape as the similarity fetch.
-            # Only the hit KEY set is explicitly broadcast:
-            # it is ≤ the batch's distinct keys by construction, whereas
-            # cached_hit's ROWS are store-rows-per-batch-key — unbounded
-            # by batch row count for multi-row-per-key or wide-payload
-            # stores, and an explicit hint is honored even under AQE (no
-            # runtime fallback, so a large hit set was a driver-collect
-            # OOM). The hit join itself is left to AQE: both sides are
-            # batch-key-bounded, so the worst case is a shuffle of the
-            # actual hit volume, never of the cache.
-            cached_hit = self.cache.join(F.broadcast(batch_keys), k, "left_semi")
-            hit_keys = cached_hit.select(k).distinct()
-            hit = batch.join(cached_hit, k, "inner")
-            # the missed-key set is pinned as its own leaf: the fetch
-            # plan then embeds only a leaf scan, so the miss-detect
-            # work (cache semi scan + key distinct + anti) is attributed
+            # against the broadcast batch keys yields the matching
+            # cache rows, pinned; everything after joins THOSE, so the
+            # cache is scanned and never shuffled, whatever its size
+            # (a batch x cache join falls to a sort-merge join that
+            # shuffles the cache every batch once the cache outgrows
+            # the broadcast threshold, the q33_100x axis). This pin is
+            # the batch's one broadcast-bearing checkpoint: its call
+            # runs the broadcast job (streaming/checkpoint.py), and
+            # batch_keys is bounded by the batch's distinct keys.
+            cached_in = self.cache.join(F.broadcast(batch_keys), k, "left_semi")
+            cached_hit = state.pin(cached_in, cols=list(self.cache.columns))
+            # miss detect: batch keys minus the hit keys, both sides
+            # bounded by the batch's distinct keys, a shuffled hash
+            # anti-join built on the hit keys (no job at the pin call).
+            # It is pinned as its own leaf: the fetch plan then embeds
+            # only a leaf scan, so the miss-detect work is attributed
             # to the JOIN phase via the missed_in extra instead of
             # riding inside the fetch leaf and inflating fetch_s — the
             # controller signal a zero-miss batch must read ~0 on
             # (pinned by test_attributor_survives_aqe_pruned_fetch_branch)
-            missed_in = batch_keys.join(F.broadcast(hit_keys), k, "left_anti")
+            hit_keys = cached_hit.select(k).distinct()
+            missed_in = batch_keys.join(hit_keys.hint("shuffle_hash"), k, "left_anti")
             missed_keys = state.pin(missed_in, cols=[k])
-            miss = batch.join(F.broadcast(missed_keys), k, "left_semi")
             fetch_in = self._fetch(missed_keys)
             fetched = state.pin(fetch_in, cols=list(self.store.columns))
-            # the output is checkpointed per batch with a plain lazy
-            # localCheckpoint: its joins lean on AQE's runtime broadcast
-            # decisions, so it must NOT be planned AQE-off
-            out_in = hit.unionByName(miss.join(fetched, k, "inner"))
-            out = state.hold(out_in.localCheckpoint(eager=False))
+            # out = hit ∪ (miss ⋈ fetched) as ONE join: the cached and
+            # fetched rows carry disjoint keys (fetched keys are missed
+            # keys), so batch ⋈ (cached_hit ∪ fetched) is the same
+            # rows. Planned AQE-off like every pin, its build side is
+            # the batch (bounded by the batch's rows); the cached and
+            # fetched rows per key are bounded by the store's rows per
+            # batch key, never by the cache.
+            out_in = batch.hint("shuffle_hash").join(
+                cached_hit.unionByName(fetched), k, "inner"
+            )
+            # fresh expression ids, aliased BEFORE the pin so the output
+            # stays a bare checkpoint leaf: the join output carries the
+            # batch's own ids, and a caller comparing the output with a
+            # plan over the same stream (exceptAll) cannot re-alias a
+            # leaf that shares them
+            out_in = out_in.toDF(*out_in.columns)
+            out = state.pin(out_in)
             tail = hot = new_freq = None
             if self.admit_below_freq is not None:
                 tail, hot, new_freq = self._admission(batch_keys, fetched)
             state.commit(
                 batch_id, keys=batch_keys, missed=missed_keys,
-                fetched=fetched, out=out, join_extras=[out_in, missed_in],
+                fetched=fetched, out=out,
+                join_extras=[cached_in, out_in, missed_in],
                 fetch_extra=fetch_in, tail=tail, evict=hot, extra=new_freq,
             )
         return out

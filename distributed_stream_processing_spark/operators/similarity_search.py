@@ -21,6 +21,7 @@ from distributed_stream_processing_spark.functions.vectors import (  # noqa: F40
     dot,
     norm2,
 )
+from distributed_stream_processing_spark.streaming.checkpoint import bounded_collect
 
 # Per-pair cosine via per-ROW precomputed norms: higher-order folds
 # (aggregate/zip_with) evaluate interpreted, so folding each side's
@@ -31,6 +32,13 @@ from distributed_stream_processing_spark.functions.vectors import (  # noqa: F40
 # active SparkContext, which must not be an import-time dependency.)
 def _cos_normed():
     return F.col("_dot") / (F.col("q_norm") * F.col("c_norm"))
+
+
+# the brute-force query set is collected to the driver and shipped in
+# the scoring closure; each Arrow batch of corpus rows (10k by default)
+# scores against every query at once, in a few (rows x queries) double
+# blocks: at this bound each block is ~80 MB
+MAX_QUERY_ROWS = 1_024
 
 
 def _scored(queries: DataFrame, corpus: DataFrame) -> DataFrame:
@@ -48,12 +56,16 @@ def _scored(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     ``dot / (q_norm * c_norm)`` uses the same operand order — so cos
     is bit-identical and the JVM-side round(.,4) (and the DuckDB
     oracle) see unchanged doubles. Rounding and ranking stay in the
-    JVM."""
+    JVM. The query set is a bounded collect: above ``MAX_QUERY_ROWS``
+    the call raises ValueError instead of collecting an unbounded set
+    (use ``lsh_topk``/``ivf_topk`` for large query sets)."""
     import numpy as np
 
-    q_rows = queries.select(
-        F.col("vec_id").cast("bigint").alias("q_id"), "embedding"
-    ).collect()
+    q_rows = bounded_collect(
+        queries.select(F.col("vec_id").cast("bigint").alias("q_id"), "embedding"),
+        MAX_QUERY_ROWS,
+        "brute-force query set (MAX_QUERY_ROWS)",
+    )
     if not q_rows:
         return corpus.sparkSession.createDataFrame(
             [], "q_id long, vec_id long, cos double, cos4 double"

@@ -59,6 +59,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributed_stream_processing_spark.streaming.checkpoint import bounded_collect
+
 
 @dataclass
 class SemiScanFetcher:
@@ -82,11 +84,13 @@ class PushdownKeyedFetcher:
     per batch, independent of source size when the source is indexed
     or partition/row-group pruned on ``key``.
 
-    ``max_keys`` bounds the driver collect (the pipelines' miss sets
-    are batch-bounded by construction; a miss set above the bound is
-    a caller bug, and failing loudly beats an unbounded collect).
-    ``pushed_counts`` records each batch's key count for tests and
-    diagnostics."""
+    The key set reaches the driver through ``bounded_collect``: ONE
+    job over the missed-key leaf (a plain ``limit().collect()`` scans
+    one partition, then scales up, at up to three jobs a batch), and
+    ``max_keys`` bounds it (the pipelines' miss sets are batch-bounded
+    by construction; a miss set above the bound is a caller bug, and
+    failing loudly beats an unbounded collect). ``pushed_counts``
+    records each batch's key count for tests and diagnostics."""
 
     source: DataFrame
     key: str
@@ -94,12 +98,10 @@ class PushdownKeyedFetcher:
     pushed_counts: list = field(default_factory=list)
 
     def fetch(self, missed_keys: DataFrame) -> DataFrame:
-        rows = missed_keys.select(self.key).limit(self.max_keys + 1).collect()
-        if len(rows) > self.max_keys:
-            raise ValueError(
-                f"PushdownKeyedFetcher: miss set exceeds max_keys="
-                f"{self.max_keys} — not a batch-bounded key set"
-            )
+        rows = bounded_collect(
+            missed_keys.select(self.key), self.max_keys,
+            "PushdownKeyedFetcher miss set (max_keys)",
+        )
         keys = [r[0] for r in rows]
         self.pushed_counts.append(len(keys))
         if not keys:

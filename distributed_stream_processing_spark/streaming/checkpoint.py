@@ -15,13 +15,17 @@ start of every batch).
 no shuffle stage runs at the call and the state materializes inside
 the batch's single combined action, sharing the cluster with the
 output verify as designed (X8 lineage truncation, one action per
-batch). The call is not free of jobs, though: a static plan prepares
-its broadcast exchanges when the RDD is built, so every broadcast-
-hinted join in the checkpointed plan runs its broadcast job AT THE
-CALL (the missed-key checkpoint ran 2-6 jobs before the fetch). The
-state subplans lose nothing from static planning: every join in them
-carries an explicit broadcast hint, and their output partitioning is
-pinned by coalesce.
+batch). Which calls still run a job: a static plan prepares its
+broadcast exchanges when the RDD is built, so a checkpoint call runs
+one job per broadcast-hinted join in its plan, AT THE CALL, and runs
+no job otherwise. The semi-stream pipelines keep one such call per
+ordinary batch (the cache rows matching the batch key set); their
+other pins build a shuffled hash join on a batch-bounded side (an
+explicit ``shuffle_hash`` hint or ``bounded_broadcast``'s ladder —
+static planning picks sort-merge for unhinted joins with unknown
+stats) and run no job at the call. The scan-side fetch (the store
+semi-joined with the broadcast missed keys) adds one job, and a
+compaction adds one more, the stale-set broadcast into the cache.
 
 Leaves carry no constraints from their source plan. Spark 4 keeps a
 checkpoint leaf's (``LogicalRDD``) origin constraints, so a leaf built
@@ -33,11 +37,17 @@ each pending delta ran its own broadcast job, so per-batch job counts
 grew with the number of pending deltas (13 -> 21 jobs over five
 batches of perfbench's enrich_drift workload).
 The checkpoint is therefore planned with constraint propagation off as
-well. Both settings are scoped to the call and restored after it; the
-session's own settings never change.
+well. Both settings are scoped to the call and restored after it
+(``scoped_conf``); the session's own settings never change.
+
+``bounded_collect`` is the one size-gated driver collect: one job for
+an exchange-free plan (a checkpoint leaf, a filtered scan), and a
+ValueError instead of a collect above its row bound.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -58,14 +68,47 @@ _PLAN_OFF = (
     "spark.sql.constraintPropagation.enabled",
 )
 
+# a take() scans one partition first and scales up by 4x per extra job;
+# a first pass this wide scans every partition in one job
+_TAKE_ALL_PARTITIONS = {"spark.sql.limit.initialNumPartitions": str(2**31 - 1)}
+
+
+@contextmanager
+def scoped_conf(spark, settings: dict[str, str]):
+    """Session settings for the duration of one planning or action
+    call, restored after it. NOT safe under concurrent planning on the
+    same session (the settings are session-scoped); the semi-stream
+    pipelines run batches sequentially on the driver."""
+    prev = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def bounded_collect(df: DataFrame, max_rows: int, what: str) -> list:
+    """``df``'s rows on the driver, at most ``max_rows`` of them: more
+    raise ValueError (a set that is bounded by construction, a batch's
+    missed keys or a query set, has outgrown its bound, and failing
+    loudly beats an unbounded collect). One job when ``df`` has no
+    exchange: the take scans every partition in its first pass, each
+    keeping at most ``max_rows + 1`` rows."""
+    with scoped_conf(df.sparkSession, _TAKE_ALL_PARTITIONS):
+        rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(f"{what}: more than {max_rows} rows, above its bound")
+    return rows
+
 
 def lazy_local_checkpoint(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """NOT safe under concurrent planning on the same session (the
-    conf toggles are session-scoped); the semi-stream pipelines run
-    batches sequentially on the driver, which is the intended use.
-    Only checkpoint plans whose joins carry explicit broadcast hints
-    — static planning picks sort-merge for unhinted joins with
-    unknown stats.
+    """A checkpoint leaf of ``df``, planned AQE-off and without
+    constraint propagation (module docstring; ``scoped_conf``'s
+    concurrency caveat applies). Only checkpoint plans whose joins
+    carry explicit hints — static planning picks sort-merge for
+    unhinted joins with unknown stats.
 
     ``cols``: optional output column names (the ``toDF`` rename the
     pipelines apply so a leaf gets fresh expression ids), applied HERE
@@ -74,15 +117,8 @@ def lazy_local_checkpoint(df: DataFrame, cols: list[str] | None = None) -> DataF
     needs because ``DataFrame.unpersist()`` cannot release checkpoint
     blocks (they are RDD-level persisted, not CacheManager entries;
     ADVICE r15)."""
-    spark = df.sparkSession
-    prev = {k: spark.conf.get(k) for k in _PLAN_OFF}
-    for k in _PLAN_OFF:
-        spark.conf.set(k, "false")
-    try:
+    with scoped_conf(df.sparkSession, dict.fromkeys(_PLAN_OFF, "false")):
         out = df.localCheckpoint(eager=False)
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
     jrdd = checkpoint_rdd(out)
     if cols is not None:
         out = out.toDF(*cols)
@@ -96,7 +132,7 @@ def checkpoint_rdd(df: DataFrame):
     not a bare checkpoint leaf."""
     try:
         plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
+        if plan.nodeName() == "LogicalRDD":
             return plan.rdd()
     except Exception:
         pass

@@ -11,7 +11,7 @@ DEFERRED COMPACTION. The state is a base localCheckpoint of the cache
 and of the LRU ``(key, last_seen)`` plus one delta per pending batch,
 ``(batch_id, keys, fetched)``: the batch's pinned key set and its
 pinned fetch leaf. Between compactions the pipelines read flat
-append-only views over them (``state_views``: unions, no joins), so
+append-only views over them (``with_delta``: unions, no joins), so
 reading the state costs one scan and no extra job, and a batch's one
 action materializes only O(batch) rows. A batch compacts when
 ``len(pending) + 1 >= max(1, min(compact_every, window))``, with
@@ -25,9 +25,17 @@ per-delta chain of broadcast anti-joins (``lru.anti(keys_i) ∪
 keys_i``) runs one broadcast job per delta, and chaining those
 rewrites lazily batch after batch re-ran every prior batch's
 broadcast subqueries at each evaluation (14 -> 29 -> 66 jobs over
-three sf0.1 batches). Eviction between compactions is deferred, never
-lost: a key due for eviction over-stays at most window-1 batches, and
-window=1 keeps strict per-batch eviction. The LRU still holds exactly
+three sf0.1 batches). The fold also runs ONCE per compaction: it is
+pinned, the new LRU keeps the folded rows by filter
+(``last_seen >= batch_id - window``) and anti-joins only the extra
+table's evict set, and only the cache anti-joins the stale set. That
+broadcast's job, at its pin call, materializes the fold, and it is the
+compaction's one job outside the combined action (a stale-set
+broadcast into the LRU too would be a second job, and an unpinned fold
+would re-run in each job and in the LRU branch). Eviction between
+compactions is deferred, never lost: a key due for eviction over-stays
+at most window-1 batches, and window=1 keeps strict per-batch
+eviction. The LRU still holds exactly
 the keys whose store rows are cached or known absent, so the cache
 stays transparent. The eviction sets are only usually small (after a
 workload shift the stale set can be the whole cache), so their
@@ -39,7 +47,9 @@ count between them.
 THE COMBINED ACTION. Each batch runs one action: a union of tagged
 branches, each counting one pin, grouped by tag and collected. It
 materializes every pin of the batch together, so output and state
-maintenance share the cluster instead of serializing. Branches, in
+maintenance share the cluster instead of serializing. It is collected
+AQE-off, so it is ONE job (AQE runs the grouping's map stage as a job
+of its own, and the plan has no join for AQE to re-plan). Branches, in
 union order, with their phase:
 
     m  missed-key set      join       k  key set            join
@@ -52,9 +62,9 @@ state), which is join work, so m is a join branch. A background plan
 walk (``PlanTimeAttributor``) splits the action's SQL metrics into
 phases in the walk order k, m, x, c, l, f, o; the first walker owns a
 shared subtree, so the fetch phase owns exactly the store scan and
-fetch join the controller's window policy feeds on, and an AQE-pruned
-zero-miss fetch reads ~0. The leaves print as Scan ExistingRDD in the
-action, so the walk first reads the checkpoint INPUTS' plans: the
+fetch join the controller's window policy feeds on, and a zero-miss
+fetch (a scan of an empty leaf) reads ~0. The leaves print as Scan
+ExistingRDD in the action, so the walk first reads the checkpoint INPUTS' plans: the
 pipeline's join inputs, then its fetch input, then the compaction
 inputs. The walk is py4j-bound, so it runs in the background
 (``DeferredObservation``) and is joined by ``flush``, which runs
@@ -65,9 +75,8 @@ unamortized spike would shrink the window that sets the compaction
 cadence.
 
 PIN LIFE CYCLE. A batch runs inside ``with state.batch():`` and takes
-every checkpoint through ``pin`` (``hold`` for one the pipeline
-checkpointed itself). After the combined action the output stays
-pinned and belongs to the caller; the key set and fetch leaf become
+every checkpoint through ``pin``. After the combined action the output
+stays pinned and belongs to the caller; the key set and fetch leaf become
 the batch's pending delta or, on a compaction batch, are released with
 every pending delta and the previous base, which the new base
 checkpoints absorbed; every other pin of the batch is released. If the
@@ -93,9 +102,9 @@ from distributed_stream_processing_spark.streaming.cache_controller import (
     BatchTimings,
 )
 from distributed_stream_processing_spark.streaming.checkpoint import (
-    checkpoint_rdd,
     lazy_local_checkpoint,
     release_checkpoint,
+    scoped_conf,
 )
 from distributed_stream_processing_spark.streaming.plan_timing import (
     DeferredObservation,
@@ -111,18 +120,20 @@ _PHASES = {
 _WALK = list(_PHASES)
 
 
-def state_views(
-    base_cache: DataFrame, base_lru: DataFrame, deltas: list[tuple]
+def with_delta(
+    cache: DataFrame, lru: DataFrame, batch_id: int, keys: DataFrame,
+    fetched: DataFrame,
 ) -> tuple[DataFrame, DataFrame]:
-    """(cache, lru) as base ∪ every delta. A key probed in several
-    pending batches appears with several ``last_seen`` rows; every
-    pipeline read of the views is set membership (semi/anti joins),
-    and ``fold_lru`` resolves the duplicates at compaction."""
-    cache, lru = base_cache, base_lru
-    for batch_id, keys, fetched in deltas:
-        cache = cache.unionByName(fetched)
-        lru = lru.unionByName(keys.withColumn("last_seen", F.lit(batch_id)))
-    return cache, lru
+    """The (cache, lru) views with one more delta appended: unions, so
+    a key probed in several pending batches appears with several
+    ``last_seen`` rows. Every pipeline read of the views is set
+    membership (semi/anti joins), and ``fold_lru`` resolves the
+    duplicates at compaction. A batch appends its own delta, never
+    rebuilding the views from the base (O(1) plan calls a batch)."""
+    return (
+        cache.unionByName(fetched),
+        lru.unionByName(keys.withColumn("last_seen", F.lit(batch_id))),
+    )
 
 
 def fold_lru(lru_view: DataFrame, key: list[str]) -> DataFrame:
@@ -159,6 +170,10 @@ class CacheState:
         self._t0 = 0.0
         self._attributor = PlanTimeAttributor()
         self._deferred = DeferredObservation()
+        # the combined action's columns, built once (each is several
+        # py4j calls)
+        self._tag_cols = {t: F.lit(t).alias("t") for t in _PHASES}
+        self._count_col = F.count(F.lit(1)).alias("n")
 
     @contextmanager
     def batch(self):
@@ -193,18 +208,12 @@ class CacheState:
         """The batch's pinned key set. The state views reference it
         until the next compaction, so it must not recompute through
         the caller's batch. coalesce(8): it is batch-sized, and read
-        only by broadcasts and compaction folds, which 8 partitions
-        keep off the scheduling floor of empty batches."""
+        only by broadcasts, the miss-detect anti-join and compaction
+        folds, which 8 partitions keep off the scheduling floor of
+        empty batches."""
         return self.pin(
             rows.select(*self.key).distinct().coalesce(8), cols=self.key
         )
-
-    def hold(self, df: DataFrame) -> DataFrame:
-        """Count a localCheckpoint the pipeline made itself as a batch
-        pin (taking the RDD handle ``release_checkpoint`` needs)."""
-        df._ckpt_jrdd = checkpoint_rdd(df)
-        self._pins.append(df)
-        return df
 
     def flush(self) -> None:
         """Join the previous batch's background attribution walk (and
@@ -242,24 +251,33 @@ class CacheState:
         branches = {"m": missed, "k": keys, "x": fetched, "o": out}
         extras = [("join", df) for df in join_extras] + [("fetch", fetch_extra)]
         if compact:
-            cache_full, lru_view = state_views(
-                self._base[0],
-                self._base[1],
-                self.pend + [(batch_id, keys, fetched if tail is None else tail)],
+            cache_full, lru_view = with_delta(
+                self.cache, self.lru, batch_id, keys,
+                fetched if tail is None else tail,
             )
-            lru_full = fold_lru(lru_view, key)
+            # the fold runs ONCE: pinned (one shuffle, no job at the
+            # call), then read by the stale broadcast below, whose job
+            # materializes it, and by the l branch
+            fold_in = fold_lru(lru_view, key)
+            folded = self.pin(fold_in, cols=[*key, "last_seen"])
             # this batch's keys carry last_seen == batch_id, never stale
-            stale = lru_full.filter(
-                F.col("last_seen") < batch_id - window
-            ).select(*key)
+            fresh = F.col("last_seen") >= batch_id - window
+            lru_in = folded.filter(fresh)
+            stale = folded.filter(~fresh).select(*key)
             bound = self.lru_rows
             if evict is not None:
+                lru_in = lru_in.join(
+                    bounded_broadcast(evict, self.extra_rows), key, "left_anti"
+                )
                 stale, bound = stale.unionByName(evict), bound + self.extra_rows
-            stale = bounded_broadcast(stale, bound)
-            cache_in = cache_full.join(stale, key, "left_anti").coalesce(n_part)
-            lru_in = lru_full.join(stale, key, "left_anti").coalesce(n_part)
+            cache_in = cache_full.join(
+                bounded_broadcast(stale, bound), key, "left_anti"
+            ).coalesce(n_part)
+            lru_in = lru_in.coalesce(n_part)
             branches["c"], branches["l"] = self.pin(cache_in), self.pin(lru_in)
-            extras += [("maintain", cache_in), ("maintain", lru_in)]
+            extras += [
+                ("maintain", fold_in), ("maintain", cache_in), ("maintain", lru_in)
+            ]
             if extra is not None:
                 extra_in = extra.coalesce(n_part)
                 branches["f"] = self.pin(extra_in)
@@ -269,10 +287,14 @@ class CacheState:
         walk_order = sorted(range(len(tags)), key=lambda i: _WALK.index(tags[i]))
         tagged = reduce(
             DataFrame.unionAll,
-            [df.select(F.lit(t).alias("t")) for t, df in branches.items()],
+            [df.select(self._tag_cols[t]) for t, df in branches.items()],
         )
-        counts_df = tagged.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
-        counts = {r.t: r.n for r in counts_df.collect()}
+        counts_df = tagged.groupBy("t").agg(self._count_col)
+        # AQE-off: one job (an AQE plan runs its map stage as a job of
+        # its own); the plan has no join for AQE to re-plan
+        aqe_off = {"spark.sql.adaptive.enabled": "false"}
+        with scoped_conf(counts_df.sparkSession, aqe_off):
+            counts = {r.t: r.n for r in counts_df.collect()}
         total_s = time.monotonic() - self._t0
         n_miss, n_keys = int(counts.get("m", 0)), int(counts.get("k", 0))
 
@@ -296,8 +318,8 @@ class CacheState:
             self.pend.append((batch_id, keys, fetched))
             # upper bound: every batch key could be new to the LRU
             self.lru_rows += n_keys
-            self.cache, self.lru = state_views(
-                self._base[0], self._base[1], self.pend
+            self.cache, self.lru = with_delta(
+                self.cache, self.lru, batch_id, keys, fetched
             )
             kept = [out, keys, fetched]
         for df in pins:

@@ -15,6 +15,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from distributed_stream_processing_spark.operators.subsequence_match import (
+    _fixed_decimal,
+)
+
 
 def running_user_stats(
     events_stream: DataFrame, value_scale: int = 100
@@ -27,8 +31,10 @@ def running_user_stats(
     summation-order dependence — across batches, partitions, OR
     engines: the q55 gate reproduces the final totals in DuckDB
     bit-exactly. (A float accumulator would depend on pandas' pairwise
-    summation order, which no SQL engine replicates.)"""
-    import numpy as np
+    summation order, which no SQL engine replicates.) A value off the
+    ``value_scale`` grid fails the query (``_fixed_decimal``, the
+    contract of every ``value_scale`` path) instead of being rounded
+    onto it."""
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -38,9 +44,7 @@ def running_user_stats(
         for pdf in pdfs:
             n += len(pdf)
             cents += int(
-                np.rint(pdf["value"].to_numpy(dtype="float64") * value_scale)
-                .astype("int64")
-                .sum()
+                _fixed_decimal(pdf["value"], value_scale, "event value").sum()
             )
         state.update((n, cents))
         yield pd.DataFrame(

@@ -239,3 +239,39 @@ def test_similarity_deferred_fold_multi_delta_equivalence(spark):
     assert saw_multi_delta, "deferred pipeline never held 2+ pending deltas"
     a.close()
     b.close()
+
+
+def test_admission_compaction_evicts_hot_keys_from_cache_and_lru(spark):
+    """Frequency admission compacts every batch: the compaction keeps
+    the LRU's fresh rows by filter, anti-joins only the hot keys into
+    it, and evicts stale and hot keys from the cache. Keys cached while
+    cold leave BOTH the cache and the LRU once they turn hot, and every
+    batch's output equals the plain join."""
+    store = spark.range(0, 200).select(
+        F.col("id").alias("key"), (F.col("id") * 10).alias("payload")
+    )
+    j = SemiStreamJoin(
+        store=store, key="key", controller=_fixed_controller(50),
+        admit_below_freq=2,
+    )
+    hot = {0, 1, 2, 3, 4}
+    try:
+        for b in range(4):
+            batch = spark.range(0, 5).unionByName(
+                spark.range(50 + 20 * b, 60 + 20 * b)
+            ).withColumnRenamed("id", "key")
+            got = sorted(map(tuple, j.process_batch(batch, b).collect()))
+            want = sorted(map(tuple, batch.join(store, "key").collect()))
+            assert got == want, f"batch {b}: output != plain join"
+            assert not j._pend, "admission must compact every batch"
+            cached = {r.key for r in j.cache.select("key").collect()}
+            in_lru = {r.key for r in j.lru.select("key").collect()}
+            if b == 0:
+                # first sighting: still cold, admitted to both
+                assert hot <= cached and hot <= in_lru
+            else:
+                assert cached.isdisjoint(hot), f"batch {b}: hot keys cached"
+                assert in_lru.isdisjoint(hot), f"batch {b}: hot keys in LRU"
+                assert set(range(50 + 20 * b, 60 + 20 * b)) <= cached
+    finally:
+        j.close()

@@ -68,6 +68,36 @@ def test_pushdown_fetcher_empty_and_bounded(spark):
     assert sorted(r.v for r in got.collect()) == [3, 42]
 
 
+def test_bounded_collect_is_one_job(spark, count_jobs):
+    """The pushdown key collect is ONE job however many partitions the
+    missed-key leaf has (a plain take scans one partition, then scales
+    up), and ``max_keys`` holds on both sides."""
+    from distributed_stream_processing_spark.streaming.checkpoint import (
+        bounded_collect,
+        lazy_local_checkpoint,
+    )
+
+    def leaf(n):
+        out = lazy_local_checkpoint(
+            spark.range(0, n, numPartitions=5).withColumnRenamed("id", "k")
+        )
+        assert out.rdd.getNumPartitions() == 5
+        out.count()
+        return out
+
+    five, six = leaf(5), leaf(6)
+    rows: list = []
+    assert count_jobs(lambda: rows.extend(bounded_collect(five, 5, "keys"))) == 1
+    assert sorted(r.k for r in rows) == [0, 1, 2, 3, 4]
+    with pytest.raises(ValueError, match="keys: more than 5 rows"):
+        bounded_collect(six, 5, "keys")
+    f = PushdownKeyedFetcher(five.withColumn("v", F.col("k")), "k", max_keys=5)
+    assert count_jobs(lambda: f.fetch(five)) == 1
+    assert f.pushed_counts == [5]
+    with pytest.raises(ValueError, match="max_keys"):
+        f.fetch(six)
+
+
 def test_pipeline_transparent_through_pushdown_fetcher(spark, tmp_path):
     """The equi pipeline over a PushdownKeyedFetcher must stay
     cache-transparent (output == plain join) and push only per-batch

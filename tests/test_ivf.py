@@ -105,3 +105,21 @@ def test_ivf_rejects_mismatched_embedding_width(spark):
     q = emb.filter(F.col("vec_id") == 0)
     with pytest.raises(Exception, match="embedding width"):
         ivf_topk(q, emb, k=2, n_centroids=2, n_probe=2).collect()
+
+
+def test_brute_force_query_set_is_bounded(spark, sf_smoke, monkeypatch):
+    """The brute-force scorer collects its query set to the driver: a
+    set at MAX_QUERY_ROWS is scored, one row more raises instead of
+    collecting an unbounded set."""
+    import pytest
+
+    from distributed_stream_processing_spark.operators import similarity_search
+
+    emb = Catalog(spark, sf_smoke).embeddings
+    q = emb.filter(F.col("vec_id") % 50 == 0)
+    n = q.count()
+    monkeypatch.setattr(similarity_search, "MAX_QUERY_ROWS", n)
+    assert brute_force_topk(q, emb, k=5).count() == 5 * n
+    monkeypatch.setattr(similarity_search, "MAX_QUERY_ROWS", n - 1)
+    with pytest.raises(ValueError, match="MAX_QUERY_ROWS"):
+        brute_force_topk(q, emb, k=5)

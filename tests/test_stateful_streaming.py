@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_stream_processing_spark.catalog import Catalog
@@ -44,6 +45,34 @@ def test_running_state_converges_to_batch_totals(spark, sf_smoke):
     batch = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     assert w_latest.exceptAll(batch).count() == 0
     assert batch.exceptAll(w_latest).count() == 0
+
+
+def test_off_grid_value_fails_the_query(spark, tmp_path):
+    """Values accumulate on the value_scale grid; a 3-decimal value at
+    value_scale=100 fails the query with the fixed-decimal contract's
+    message instead of being rounded onto the grid."""
+    schema = "event_id long, user_id long, value double"
+    src = str(tmp_path / "events")
+    spark.createDataFrame(
+        [(1, 7, 1.25), (2, 7, 2.125)], schema
+    ).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = (
+        running_user_stats(stream)
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName("off_grid_stats")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(
+            Exception,
+            match="value_scale=100 but the event value is not fixed-decimal",
+        ):
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def test_progress_recorder_captures_batches(spark, sf_smoke):

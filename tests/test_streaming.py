@@ -91,14 +91,20 @@ def test_replay_batches_partition_stream(spark, sf_smoke):
     assert sum(b.count() for _, b in batches) == li.count()
 
 
-def _jobs_per_batch(spark, j, batches, rows: int | None = None) -> list[int]:
+def _jobs_per_batch(
+    spark, j, batches, rows: int | None = None, inside: list | None = None
+) -> list[int]:
     """Spark jobs launched by each process_batch call over ``batches``
-    (each output drained; ``rows``: its expected row count)."""
+    (each output drained; ``rows``: its expected row count). ``inside``
+    receives the jobs launched inside each process_batch call alone."""
     sc = spark.sparkContext
     jobs = []
     for b, batch in enumerate(batches):
         j0 = sc._jsc.sc().dagScheduler().nextJobId()
-        n = j.process_batch(batch, b).count()
+        out = j.process_batch(batch, b)
+        if inside is not None:
+            inside.append(sc._jsc.sc().dagScheduler().nextJobId() - j0)
+        n = out.count()
         assert rows is None or n == rows
         j.flush_attribution()
         jobs.append(sc._jsc.sc().dagScheduler().nextJobId() - j0)
@@ -127,6 +133,13 @@ def test_semi_stream_jobs_per_batch_bounded(spark, tmp_path):
 
     The similarity pipeline runs the same state code and is held to
     the same two bounds.
+
+    Absolute bounds on the equi pipeline, inside process_batch: at
+    most 3 jobs on an ordinary batch (the broadcast of the batch keys
+    against the cache, the fetch's one job — the pushdown key collect
+    or the scan fetch's missed-key broadcast — and the combined
+    action), and at most 4 on a compaction batch (plus the stale-set
+    broadcast). Every other pin is planned with no job at its call.
     """
     from fractions import Fraction
 
@@ -149,11 +162,13 @@ def test_semi_stream_jobs_per_batch_bounded(spark, tmp_path):
         ]
 
     # in-session store, no compaction: flat
+    inside: list[int] = []
     jobs = _jobs_per_batch(
         spark, SemiStreamJoin(store=store, key="k", compact_every=100),
-        key_batches(6), rows=1_000,
+        key_batches(6), rows=1_000, inside=inside,
     )
     assert len(set(jobs[1:])) == 1, f"per-batch job counts moved: {jobs}"
+    assert max(inside) <= 3, f"scan-fetch batches ran > 3 jobs: {inside}"
 
     def fixed() -> AdaptiveCacheController:
         return AdaptiveCacheController(
@@ -171,10 +186,15 @@ def test_semi_stream_jobs_per_batch_bounded(spark, tmp_path):
             controller=fixed(),
         )
 
-    jobs = _jobs_per_batch(spark, pushdown(7), key_batches(7), rows=1_000)
+    inside = []
+    jobs = _jobs_per_batch(
+        spark, pushdown(7), key_batches(7), rows=1_000, inside=inside
+    )
     assert len(set(jobs[1:6])) == 1, (
         f"per-batch job counts grew with pending deltas: {jobs}"
     )
+    assert max(inside[:6]) <= 3, f"pushdown batches ran > 3 jobs: {inside}"
+    assert inside[6] <= 4, f"the compaction batch ran > 4 jobs: {inside}"
     fold2 = _jobs_per_batch(spark, pushdown(3), key_batches(3), rows=1_000)[2]
     assert fold2 == jobs[6], (
         f"compaction jobs depend on the deltas folded: 2 -> {fold2}, "
