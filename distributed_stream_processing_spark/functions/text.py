@@ -172,9 +172,3 @@ def jaccard_parts(a_tokens: Column, b_tokens: Column) -> tuple[Column, Column]:
     inter = F.size(F.array_intersect(a_tokens, b_tokens))
     uni = F.size(a_tokens) + F.size(b_tokens) - inter
     return inter, uni
-
-
-def jaccard_ge(a_tokens: Column, b_tokens: Column, p: int, q: int) -> Column:
-    """Exact predicate J(a,b) >= p/q using integer arithmetic only."""
-    inter, uni = jaccard_parts(a_tokens, b_tokens)
-    return q * inter >= p * uni

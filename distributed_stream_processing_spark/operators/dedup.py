@@ -334,13 +334,6 @@ def simhash_halves(tokens_col) -> tuple[F.Column, F.Column]:
     return pack(32), pack(0)
 
 
-def simhash64(tokens_col):
-    """64-bit SimHash packed into one BIGINT (may be negative) — kept
-    for API compatibility; the join path uses simhash_halves."""
-    hi, lo = simhash_halves(tokens_col)
-    return F.shiftleft(hi, 32).bitwiseOR(lo)
-
-
 def simhash_halves_rows(df: DataFrame, id_col: str = "id") -> DataFrame:
     """(id, sh_hi, sh_lo) rows — same signatures as ``simhash_halves``
     but computed from exploded token rows with a 64-column sum

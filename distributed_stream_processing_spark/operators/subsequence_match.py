@@ -24,10 +24,22 @@ distributed:
   closed forms (float, or exact integer window sums with
   ``value_scale``).
 
-Every numpy pass runs through one chunk runner (``_run_chunks``: one
-mapInPandas behind one exchange on chunk id), and every
-``value_scale`` path through one fixed-decimal contract
-(``_fixed_decimal``: off-grid input raises ValueError).
+Every numpy pass runs through one chunk runner (``_run_chunks``), and
+every ``value_scale`` path through one fixed-decimal contract
+(``_fixed_decimal``: off-grid or non-finite input raises ValueError).
+
+The runner reads a stored series' chunk layout (``_series_layout``):
+its (pos, value, chunk_id) rows with the m-1 overlap, partitioned by
+chunk. The first pass over a series object at a given (m, chunk) builds
+the layout inside its own plan (one exchange, nothing pinned, so a
+series passed once, as every one-shot query does, holds nothing after
+its frame is read); the second pins it as a local checkpoint, and every
+later pass over the same series reads the pin: one narrow mapInPandas,
+one job and no exchange. The pin has no explicit release: it goes, as a
+checkpoint does, once the series object and every frame read from it
+are gone. A verify over a pinned layout collects its candidate starts
+(at most MAX_COLLECTED_STARTS) and ships them with the kernel; above
+the cap the candidates go through an exchange with the layout rows.
 
 Positions are 0-based window starts; a window of width m covers
 [start, start+m-1].
@@ -42,6 +54,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from distributed_stream_processing_spark.session import session_key
+from distributed_stream_processing_spark.streaming.checkpoint import (
+    collect_at_most,
+    lazy_local_checkpoint,
+)
 
 DEFAULT_WIDTHS = (25, 50, 100, 200, 400)
 _GRID = 0.5  # KV-match half-integer mean rounding (MeanIntervalUtils.java:51-60)
@@ -60,13 +78,18 @@ def _fixed_decimal(
 
     Exactness is data-dependent, so a value more than 1e-6 off the
     scaled grid raises ValueError instead of being quantized to a
-    different problem. ``against`` is the scaled query (1-D) or queries
-    (2-D, one per row) these values are matched against: the squared
-    distance of a width-m window, an int64 sum later read as a double,
-    is exact only below 2^53, so a bound that could reach it raises
-    too."""
+    different problem, and so does a value the int64 grid cannot hold:
+    NaN, ±inf or a scaled magnitude of 2^63 or more (each would cast to
+    INT64_MIN). ``against`` is the scaled query (1-D) or queries (2-D,
+    one per row) these values are matched against: the squared distance
+    of a width-m window, an int64 sum later read as a double, is exact
+    only below 2^53, so a bound that could reach it raises too."""
     sv = np.asarray(values, dtype=np.float64) * value_scale
-    if sv.size and float(np.abs(sv - np.rint(sv)).max()) > 1e-6:
+    # NaN fails the magnitude test (every comparison with NaN is false)
+    if sv.size and not (
+        bool((np.abs(sv) < 2.0**63).all())
+        and float(np.abs(sv - np.rint(sv)).max()) <= 1e-6
+    ):
         raise ValueError(
             f"value_scale={value_scale} but the {what} is not "
             "fixed-decimal at that scale"
@@ -87,17 +110,71 @@ def _chunked(series: DataFrame, m: int, chunk: int) -> DataFrame:
     """(pos, value, chunk_id) rows of ``series`` in one scan, so that
     chunk c holds every width-``m`` window starting in [c*chunk,
     (c+1)*chunk): a row within m-1 of its chunk's start is exploded
-    into its own chunk and the preceding one."""
-    pos = F.col("pos").cast("bigint")
-    cid = F.floor(pos / chunk).cast("bigint")
-    spill = (F.pmod(pos, F.lit(chunk)) < m - 1) & (pos >= chunk)
-    return series.select(
-        pos.alias("pos"),
-        F.col("value").cast("double").alias("value"),
-        F.explode(
-            F.when(spill, F.array(cid, cid - 1)).otherwise(F.array(cid))
-        ).alias("chunk_id"),
+    into its own chunk and the preceding one. One SQL projection, so
+    the plan costs a few JVM calls, not one per Column node."""
+    pos = "CAST(pos AS BIGINT)"
+    cid = f"CAST(floor({pos} / {chunk}) AS BIGINT)"
+    return series.selectExpr(
+        f"{pos} AS pos",
+        "CAST(value AS DOUBLE) AS value",
+        f"explode(IF(pmod({pos}, {chunk}) < {m - 1} AND {pos} >= {chunk}, "
+        f"array({cid}, {cid} - 1), array({cid}))) AS chunk_id",
     )
+
+
+# a verify over a pinned layout collects at most this many candidate
+# starts and ships them with its kernel (8 bytes each in the task
+# closure); above it the candidates take the exchange with the layout
+MAX_COLLECTED_STARTS = 16_384
+
+
+def _layout_partitions(series: DataFrame, chunk: int) -> int:
+    """Partition count of a pinned layout. The pin is planned static
+    (no AQE coalescing), so it is chosen here: one partition per chunk
+    of the series' row count where the plan knows it (a materialized
+    cache), at most spark.sql.shuffle.partitions and the default
+    parallelism, and that cap where it does not."""
+    spark = series.sparkSession
+    cap = max(
+        1,
+        min(
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            spark.sparkContext.defaultParallelism,
+        ),
+    )
+    rows = series._jdf.queryExecution().optimizedPlan().stats().rowCount()
+    if not rows.isDefined():
+        return cap
+    return max(1, min(cap, -(-int(rows.get()) // chunk)))
+
+
+def _series_layout(series: DataFrame, m: int, chunk: int) -> DataFrame | None:
+    """The pinned chunk layout of ``series`` for width-``m`` windows,
+    or None on the first pass over this series object at (m, chunk),
+    which builds the layout inside its own plan.
+
+    The second pass pins ``_chunked(series)`` partitioned by chunk_id
+    as a local checkpoint planned AQE-off (lazy_local_checkpoint: no
+    job at the call; the first job that reads it materializes it), and
+    every later pass reads that pin. Held by the series object, not
+    keyed by its plan, so a different series never reuses a layout;
+    keyed by the session, m and chunk. The pinned blocks go with the
+    last of the series object and the frames that can read them."""
+    key = (session_key(series.sparkSession), m, chunk)
+    # {key: pinned layout, or None after the first pass}, kept on the
+    # series object so it goes with it (__dict__ directly: a missing
+    # DataFrame attribute is looked up as a column, a JVM call)
+    seen = series.__dict__.setdefault("_chunk_layouts", {})
+    if key not in seen:
+        seen[key] = None
+        return None
+    if seen[key] is None:
+        seen[key] = lazy_local_checkpoint(
+            _chunked(series, m, chunk).repartition(
+                _layout_partitions(series, chunk), "chunk_id"
+            )
+        )
+    return seen[key]
 
 
 def _owned_rows(pos: np.ndarray, base: int, chunk: int, w: int) -> np.ndarray:
@@ -122,7 +199,7 @@ def _aligned_rows(pos: np.ndarray, starts: np.ndarray, w: int) -> np.ndarray:
     return s[(pos[s] == starts) & (pos[s + w - 1] == starts + w - 1)]
 
 
-def _partition_chunks(batches, m: int, chunk: int):
+def _partition_chunks(batches, m: int, chunk: int, starts: np.ndarray | None = None):
     """Yield ``(base, pos, val, rows)`` for every chunk of one
     mapInPandas partition, pos ascending; ``rows`` are the row offsets
     of the width-``m`` windows to score.
@@ -130,31 +207,37 @@ def _partition_chunks(batches, m: int, chunk: int):
     A chunk's rows can arrive in several Arrow record batches
     (spark.sql.execution.arrow.maxRecordsPerBatch), and a window that
     straddles two of them is never scored if each batch is scored on
-    its own, so the partition's batches are gathered first. When the
-    rows carry a ``start`` column (_run_chunks' union of series rows
-    and candidate rows), ``rows`` align the chunk's candidate starts
-    and chunks without candidates are skipped; otherwise ``rows`` are
-    every window the chunk owns."""
+    its own, so the partition's batches are gathered first. Candidate
+    starts come as rows with a ``start`` column (_run_chunks' union of
+    layout rows and candidate rows) or as ``starts``, the sorted
+    collected set; either way ``rows`` align the chunk's candidate
+    starts and chunks without candidates are skipped. Otherwise
+    ``rows`` are every window the chunk owns."""
     pdfs = list(batches)
     if not pdfs:
         return
     pdf = pd.concat(pdfs, ignore_index=True)
     with_starts = "start" in pdf.columns
     for cid, grp in pdf.groupby("chunk_id"):
+        base = int(cid) * chunk
+        own = None
         if with_starts:
             is_cand = grp["start"].notna()
-            if not is_cand.any():
-                continue
-            starts = np.unique(grp.loc[is_cand, "start"].to_numpy(np.int64))
+            own = np.unique(grp.loc[is_cand, "start"].to_numpy(np.int64))
             grp = grp[~is_cand]
+        elif starts is not None:
+            own = starts[
+                np.searchsorted(starts, base) : np.searchsorted(starts, base + chunk)
+            ]
+        if own is not None and not len(own):
+            continue
         pos = grp["pos"].to_numpy(np.int64)
         order = np.argsort(pos, kind="stable")
         pos, val = pos[order], grp["value"].to_numpy(np.float64)[order]
-        base = int(cid) * chunk
         rows = (
-            _aligned_rows(pos, starts, m)
-            if with_starts
-            else _owned_rows(pos, base, chunk, m)
+            _owned_rows(pos, base, chunk, m)
+            if own is None
+            else _aligned_rows(pos, own, m)
         )
         yield base, pos, val, rows
 
@@ -166,36 +249,55 @@ def _run_chunks(
     kernel,
     schema: str,
     candidates: DataFrame | None = None,
+    reuse: bool = True,
 ) -> DataFrame:
     """The one per-chunk driver of every numpy pass: ``kernel`` maps
     the ``(base, pos, val, rows)`` chunks of one partition
     (_partition_chunks) to pandas frames of ``schema``, in ONE
-    mapInPandas behind ONE exchange on chunk_id. No global sort, and
-    no stage holds the whole series in one task.
+    mapInPandas over the series' chunk layout. No global sort, and no
+    stage holds the whole series in one task.
+
+    The layout (_series_layout) is built inside this plan on the first
+    pass over a series object, behind one exchange on chunk_id; from
+    the second pass on it is a pinned leaf and the pass has no exchange
+    (one job). ``reuse=False`` (the one-time index build) always builds
+    it inside the plan and records nothing.
 
     With ``candidates`` (a ``start`` column), ``rows`` are only those
-    window starts: series rows (``start`` null) and candidate rows
-    (``pos`` and ``value`` null) are unioned and sent through the same
-    exchange (a cogroup of the two sides shuffled each side on its own:
-    one exchange more), so a probe that prunes translates directly into
-    chunks that verify fewer or zero windows. Starts are owned by
-    floor(start/chunk); the overlap replication of _chunked guarantees
-    the owning chunk holds the full window."""
-    rows = _chunked(series, m, chunk)
-    if candidates is not None:
-        rows = rows.withColumn("start", F.lit(None).cast("bigint")).unionByName(
-            candidates.select(
-                F.lit(None).cast("bigint").alias("pos"),
-                F.lit(None).cast("double").alias("value"),
-                F.floor(F.col("start") / chunk).cast("bigint").alias("chunk_id"),
-                F.col("start").cast("bigint").alias("start"),
+    window starts, owned by floor(start/chunk); the overlap replication
+    of _chunked guarantees the owning chunk holds the full window, so a
+    probe that prunes translates directly into chunks that verify fewer
+    or zero windows. Over a pinned layout the starts are collected at
+    this call (one job, at most MAX_COLLECTED_STARTS of them) and
+    shipped with the kernel. Otherwise, and above that cap, layout rows
+    (``start`` null) and candidate rows (``pos`` and ``value`` null)
+    are unioned and sent through one exchange (a cogroup of the two
+    sides shuffled each side on its own: one exchange more)."""
+    pinned = _series_layout(series, m, chunk) if reuse else None
+    starts = None
+    if candidates is not None and pinned is not None:
+        got = collect_at_most(candidates.select("start"), MAX_COLLECTED_STARTS)
+        if got is not None:
+            starts = np.unique(np.array([r.start for r in got], dtype=np.int64))
+    rows = pinned if pinned is not None else _chunked(series, m, chunk)
+    if candidates is not None and starts is None:
+        rows = rows.selectExpr(
+            "pos", "value", "chunk_id", "CAST(NULL AS BIGINT) AS start"
+        ).unionByName(
+            candidates.selectExpr(
+                "CAST(NULL AS BIGINT) AS pos",
+                "CAST(NULL AS DOUBLE) AS value",
+                f"CAST(floor(start / {chunk}) AS BIGINT) AS chunk_id",
+                "CAST(start AS BIGINT) AS start",
             )
         )
+    if rows is not pinned:
+        rows = rows.repartition("chunk_id")
 
     def gen(batches):
-        yield from kernel(_partition_chunks(batches, m, chunk))
+        yield from kernel(_partition_chunks(batches, m, chunk, starts))
 
-    return rows.repartition("chunk_id").mapInPandas(gen, schema=schema)
+    return rows.mapInPandas(gen, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -267,6 +369,7 @@ def _index_runs(
         chunk,
         kernel,
         "w int, mr double, pos_start long, pos_end long",
+        reuse=False,
     )
 
 
@@ -531,6 +634,13 @@ def truncate_segments_cost(
     return kept
 
 
+def _sql_double(x: float) -> str:
+    """``x`` as an exact Spark SQL DOUBLE literal (repr round-trips a
+    float; a bare decimal literal would parse as DECIMAL)."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
 def probe_index_ranges(
     index: DataFrame,
     probes: list[tuple[int, int, float, float]],
@@ -575,53 +685,34 @@ def probe_index_ranges(
             "matching widths or pass widths= to the match call"
         )
     k = len(probes)
-    # ONE index scan for ALL probes: each row tests the probe-literal
-    # array and explodes its matches into clamped start-ranges (the
-    # union-of-k-filtered-scans shape paid k passes over the index —
-    # and the sweep needs the events twice, so 2 passes here vs 2k)
-    parr = F.array(
-        *[
-            F.struct(
-                F.lit(int(w)).cast("int").alias("pw"),
-                F.lit(int(offset)).cast("long").alias("off"),
-                # full-grid (not half) slack: mr is a floor rounding,
-                # so the true mean lies in [mr, mr + grid) — keeps
-                # completeness
-                F.lit(float(lo - grid)).alias("lo"),
-                F.lit(float(hi + grid)).alias("hi"),
-            )
-            for w, offset, lo, hi in probes
-        ]
+    # ONE index scan for ALL probes, in ONE projection: each row tests
+    # the probe-literal array and maps its matches to clamped, non-empty
+    # start-ranges (s, e) (the union-of-k-filtered-scans shape paid k
+    # passes over the index; the sweep's two events per range come from
+    # the same pass). Written as SQL text, as sources.fetcher.in_predicate
+    # does: the JVM parses one expression where Column calls cost one
+    # py4j round trip per node (about 300 per probe plan), and each
+    # further DataFrame step costs one more analysis. Full-grid (not
+    # half) slack: mr is a floor rounding, so the true mean lies in
+    # [mr, mr + grid) — keeps completeness
+    parr = ", ".join(
+        f"named_struct('pw', {int(w)}, 'off', CAST({int(offset)} AS BIGINT), "
+        f"'lo', {_sql_double(lo - grid)}, 'hi', {_sql_double(hi + grid)})"
+        for w, offset, lo, hi in probes
     )
     ranges = (
-        index.select(
-            "pos_start",
-            "pos_end",
-            F.explode(
-                F.filter(
-                    parr,
-                    lambda p: (p.pw == F.col("w"))
-                    & (F.col("mr") >= p.lo)
-                    & (F.col("mr") <= p.hi),
-                )
-            ).alias("p"),
-        )
-        .select(
-            F.greatest(F.lit(0), F.col("pos_start") - F.col("p.off")).alias("s"),
-            F.least(
-                F.lit(max_start), F.col("pos_end") - F.col("p.off")
-            ).alias("e"),
-        )
-        .filter(F.col("e") >= F.col("s"))
+        "filter(transform("
+        f"filter(array({parr}), p -> p.pw = w AND mr >= p.lo AND mr <= p.hi), "
+        "p -> named_struct('s', greatest(0, pos_start - p.off), "
+        f"'e', least({max_start}, pos_end - p.off))), r -> r.e >= r.s)"
     )
     if k == 1:
         # single-segment queries need no intersection: one probe's
         # clamped index intervals are disjoint, so their positions are
         # the candidate set — no events, no stats, no sweep
-        return ranges.select(F.explode(F.sequence("s", "e")).alias("start"))
-    ev = ranges.select(F.col("s").alias("pos"), F.lit(1).alias("d")).unionAll(
-        ranges.select((F.col("e") + 1).alias("pos"), F.lit(-1).alias("d"))
-    )
+        return index.selectExpr(
+            f"explode(flatten(transform({ranges}, r -> sequence(r.s, r.e)))) AS start"
+        )
     spark = index.sparkSession
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # deterministic range buckets over the KNOWN position domain —
@@ -631,15 +722,16 @@ def probe_index_ranges(
     # this is two small jobs over the raw events: B-row stats, then
     # one bucket-grouped sweep)
     span = max_start + 2  # event positions land in [0, max_start + 1]
-    bcol = (
-        F.least(
-            F.lit(n_parts - 1),
-            F.floor(F.col("pos") * n_parts / F.lit(span)),
-        )
-        .cast("int")
-        .alias("b")
+
+    def event(pos: str, d: int) -> str:
+        b = f"CAST(least({n_parts - 1}, floor(({pos}) * {n_parts} / {span})) AS INT)"
+        return f"named_struct('b', {b}, 'pos', {pos}, 'd', {d})"
+
+    # a +1 event at each range's start and a -1 event past its end
+    evb = index.selectExpr(
+        f"inline(flatten(transform({ranges}, "
+        f"r -> array({event('r.s', 1)}, {event('r.e + 1', -1)}))))"
     )
-    evb = ev.select(bcol, "pos", "d")
     # per-bucket (net delta, first boundary): map-side combined B-row
     # aggregate; the driver turns it into entry coverage per bucket
     # (prefix sums) and each bucket's successor boundary
@@ -694,9 +786,9 @@ def probe_index_ranges(
         )
 
     covered = evb.groupBy("b").applyInPandas(sweep, schema="cs long, ce long")
-    return covered.select(
-        F.explode(F.sequence("cs", "ce")).alias("start")
-    ).filter((F.col("start") >= 0) & (F.col("start") <= max_start))
+    return covered.selectExpr("explode(sequence(cs, ce)) AS start").where(
+        f"start >= 0 AND start <= {max_start}"
+    )
 
 
 def probe_index(
@@ -830,6 +922,13 @@ def verify_ed_ints(
     scales with candidate count at numpy constants. Output identical
     contract: (start BIGINT, dist ROUND6) with dist = sqrt(d2)/scale,
     bit-reproducible in DuckDB via the same integer cents sums.
+
+    It reads the series' chunk layout for width len(query), the one a
+    best match over the same series and width reads (_run_chunks):
+    once that layout is pinned, the candidate starts are collected at
+    this call, up to MAX_COLLECTED_STARTS, and the verify has no
+    exchange; above the cap, and before the pin, candidates and layout
+    rows share one exchange.
     """
     m = len(query)
     q = _fixed_decimal(query, value_scale, "query")

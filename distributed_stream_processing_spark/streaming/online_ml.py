@@ -9,13 +9,14 @@ then predict + warm-start-train an SGD linear model
 (StreamingLinearRegressionWithSGD_dsl.scala:153-173).
 
 Engine mapping: the per-window best-match search runs DISTRIBUTED in
-one pass over chunked stored-series windows (numpy inside
-mapInPandas, all query windows scored per chunk; each partition keeps
-its per-window minimum and the driver merges those, at most one row
-per window per partition); the reference instead ran a single-node
-Java engine on the driver (S3M's acknowledged inversion). The SGD
-model itself is tiny (dim ~ window+pred) and stays driver-side like
-the reference's.
+one pass over the stored series' chunk layout, pinned from its second
+use on, as the reference loads its stored series into KV-match once
+(numpy inside mapInPandas, all query windows scored per chunk; each
+partition keeps its per-window minimum and the driver merges those, at
+most one row per window per partition); the reference instead ran a
+single-node Java engine on the driver (S3M's acknowledged inversion).
+The SGD model itself is tiny (dim ~ window+pred) and stays driver-side
+like the reference's.
 """
 
 from __future__ import annotations
@@ -40,16 +41,24 @@ def batch_best_match(
     value_scale: int | None = None,
 ) -> dict[int, tuple[int, float, float]]:
     """Best (ED) match offset in ``series`` for every query window:
-    one distributed pass with ONE exchange (the series by chunk); all
-    windows are scored per chunk.
+    one distributed pass over the series' chunk layout; all windows
+    are scored per chunk.
+
+    The layout (operators.subsequence_match._series_layout) is the
+    stored series cut into overlapping chunks and partitioned by chunk.
+    The first call on a series object builds it inside its plan (ONE
+    exchange: a shuffle-map job plus the result job); from the second
+    call on it is a pinned leaf, and a call is one narrow mapInPandas:
+    one job and no exchange. A verify over the same series and window
+    width (operators.subsequence_match.verify_ed_ints) reads the same
+    layout.
 
     The merge runs in two steps, with no aggregation exchange: each
     partition emits one row per window, its (d2, pos) minimum over the
     partition's chunks, and the driver merges those rows. At most P·W
-    rows reach the driver, where P is the chunk exchange's partition
-    count (spark.sql.shuffle.partitions, or fewer after AQE
-    coalescing) and W = len(windows), which the caller already holds
-    on the driver. Ties go to the lowest position.
+    rows reach the driver, where P is the layout's partition count and
+    W = len(windows), which the caller already holds on the driver.
+    Ties go to the lowest position.
 
     With ``value_scale`` (fixed-decimal data, e.g. 100 for 2-decimal
     values), squared distances are EXACT int64 sums of scaled values —

@@ -292,11 +292,15 @@ def test_batch_best_match_window_straddles_record_batches(
         assert got[wid][0] == int(np.argmin(((X - q) ** 2).sum(axis=1)))
 
 
-def test_batch_best_match_one_exchange(spark, count_jobs):
+def test_batch_best_match_one_exchange(spark, count_jobs, monkeypatch):
     """The per-window minimum is merged per partition and then on the
-    driver, with no aggregation exchange: one shuffle-map job for the
-    chunk exchange plus the result job. The merge keeps every window's
-    argmin over all partitions, and ties go to the lowest position."""
+    driver, with no aggregation exchange: on the first call, one
+    shuffle-map job for the chunk exchange plus the result job. From
+    the second call on, the series' chunk layout is pinned: one job
+    and no exchange. The merge keeps every window's argmin over all
+    partitions, and ties go to the lowest position."""
+    from distributed_stream_processing_spark.streaming import online_ml
+
     rng = np.random.default_rng(5)
     vals = np.round(rng.normal(0, 1, 6_000).cumsum(), 2)
     vals[4_000:4_064] = vals[100:164]  # an exact tie at 100 and 4000
@@ -317,6 +321,24 @@ def test_batch_best_match_one_exchange(spark, count_jobs):
         assert got[wid][0] == int(np.argmin(d2))
         assert got[wid][2] == float(d2.min())
     assert got[0][0] == 100
+    # repeat calls read the pinned layout: the frame each call collects
+    # is recorded to read its executed plan
+    passes = []
+    run_chunks = online_ml._run_chunks
+    monkeypatch.setattr(
+        online_ml,
+        "_run_chunks",
+        lambda *a, **k: passes.append(run_chunks(*a, **k)) or passes[-1],
+    )
+    for _ in range(2):
+        again = {}
+        n_jobs = count_jobs(
+            lambda: again.update(batch_best_match(df, w, chunk=512, value_scale=100))
+        )
+        assert n_jobs == 1
+        assert again == got
+        plan = passes[-1]._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
     df.unpersist()
 
 

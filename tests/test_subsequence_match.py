@@ -659,9 +659,12 @@ def test_indexed_verify_window_straddles_record_batches(
 
 
 def test_indexed_ed_one_exchange(spark, series, count_jobs):
-    """An indexed ED range query verifies its candidates through ONE
-    exchange (series rows and candidate starts unioned): one
-    shuffle-map job plus the result job."""
+    """An indexed ED range query verifies its candidates in two jobs.
+    Before the series' chunk layout is pinned, layout rows and
+    candidate starts go through ONE exchange: a shuffle-map job plus
+    the result job. Once it is pinned (an earlier pass over this
+    module's series at the same width pins it), the candidate collect
+    plus the result job."""
     df, arr = series
     idx = build_kv_index(df, widths=(25, 50), value_scale=100).cache()
     idx.count()
@@ -678,6 +681,151 @@ def test_indexed_ed_one_exchange(spark, series, count_jobs):
     assert n_jobs == 2
     assert sorted((r.start, r.dist) for r in rows) == brute_force_ed(arr, q, 1.0)
     idx.unpersist()
+
+
+def _cached_series(spark, vals):
+    """A fresh cached series object: its chunk layouts start unbuilt."""
+    df = spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
+    ).cache()
+    df.count()
+    return df
+
+
+@pytest.mark.parametrize("bad", [math.nan, math.inf, -math.inf, 1e17])
+def test_fixed_decimal_refuses_unrepresentable_values(bad):
+    """NaN, ±inf and a value whose scaled magnitude overflows int64 each
+    cast to INT64_MIN; the contract refuses them instead."""
+    from distributed_stream_processing_spark.operators.subsequence_match import (
+        _fixed_decimal,
+    )
+
+    with pytest.raises(ValueError, match="series is not fixed-decimal"):
+        _fixed_decimal([1.25, bad], 100, "series")
+
+
+def test_best_match_and_verify_share_one_layout(spark, series, count_jobs):
+    """A best match and an ED verify over the same series and window
+    width read one chunk layout: the best match builds it inside its
+    plan, the verify pins it, and a later best match reads the pin in
+    one job. The index build records no layout."""
+    from distributed_stream_processing_spark.operators import subsequence_match as sm
+    from distributed_stream_processing_spark.session import session_key
+    from distributed_stream_processing_spark.streaming.online_ml import (
+        batch_best_match,
+    )
+
+    _, arr = series
+    df = _cached_series(spark, arr)
+    q = arr[500 : 500 + M]
+    windows = {0: q, 1: arr[2000 : 2000 + M]}
+    first = batch_best_match(df, windows, chunk=CHUNK, value_scale=100)
+    idx = build_kv_index(df, widths=(25, 50), value_scale=100)
+    cands = sm.probe_index(
+        idx, plan_segments(q.tolist(), (25, 50)), 1.0, N, M,
+        available_widths={25, 50},
+    )
+    got = sm.verify_ed_ints(df, cands, q.tolist(), 1.0, 100, chunk=CHUNK)
+    assert sorted((r.start, r.dist) for r in got.collect()) == brute_force_ed(
+        arr, q, 1.0
+    )
+    layouts = df.__dict__["_chunk_layouts"]
+    assert list(layouts) == [(session_key(spark), M, CHUNK)]
+    assert all(v is not None for v in layouts.values())
+    again = {}
+    n_jobs = count_jobs(
+        lambda: again.update(
+            batch_best_match(df, windows, chunk=CHUNK, value_scale=100)
+        )
+    )
+    assert n_jobs == 1 and again == first
+    df.unpersist()
+
+
+def test_second_series_never_reuses_a_layout(spark, series, count_jobs):
+    """Layouts are keyed by the series object: a second series of the
+    same schema and size builds its own on its first call (the
+    unpinned two-job plan), and its matches are its own."""
+    from distributed_stream_processing_spark.streaming.online_ml import (
+        batch_best_match,
+    )
+
+    _, arr = series
+    a = _cached_series(spark, arr)
+    other = arr[::-1].copy()
+    b = _cached_series(spark, other)
+    windows = {0: arr[500 : 500 + M]}
+    for _ in range(2):
+        assert batch_best_match(a, windows, chunk=CHUNK, value_scale=100)[0][2] == 0
+    got = {}
+    n_jobs = count_jobs(
+        lambda: got.update(batch_best_match(b, windows, chunk=CHUNK, value_scale=100))
+    )
+    assert n_jobs == 2
+    X = np.lib.stride_tricks.sliding_window_view(np.rint(other * 100), M)
+    d2 = ((X - np.rint(windows[0] * 100)) ** 2).sum(axis=1)
+    assert got[0][0] == int(np.argmin(d2)) and got[0][2] == float(d2.min())
+    a.unpersist()
+    b.unpersist()
+
+
+def test_returned_frame_outlives_its_series(spark, series):
+    """A pinned layout has no explicit release: a frame read from it
+    stays readable after its series object, which holds the layout, is
+    dropped."""
+    import gc
+    import time
+    import weakref
+
+    _, arr = series
+    df = _cached_series(spark, arr)
+    q = arr[700 : 700 + M].tolist()
+    subsequence_match_znorm(df, q, 0.5, chunk=CHUNK).collect()
+    out = subsequence_match_znorm(df, q, 0.5, chunk=CHUNK)  # reads the pin
+    first = sorted(out.collect())
+    assert (700, 0.0) in first
+    ref = weakref.ref(df)
+    df.unpersist()
+    del df
+    gc.collect()
+    assert ref() is None
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(0.5)
+    assert sorted(out.collect()) == first
+
+
+def test_candidate_cap_both_sides(spark, series, monkeypatch):
+    """Over a pinned layout, a verify ships its candidate starts with
+    the kernel up to MAX_COLLECTED_STARTS (no exchange); one start more
+    takes the exchange of candidates and layout rows, with exactly the
+    same result."""
+    from distributed_stream_processing_spark.operators import subsequence_match as sm
+
+    _, arr = series
+    df = _cached_series(spark, arr)
+    idx = build_kv_index(df, widths=(25, 50), value_scale=100).cache()
+    idx.count()
+    q = arr[500 : 500 + M].tolist()
+    cands = sm.probe_index(
+        idx, plan_segments(q, (25, 50)), 2.0, N, M, available_widths={25, 50}
+    )
+    n_cands = cands.count()
+    assert n_cands > 1
+
+    def verify():
+        return sm.verify_ed_ints(df, cands, q, 2.0, 100, chunk=CHUNK)
+
+    verify().collect()  # builds the layout in its plan; the next call pins it
+    results = []
+    for cap, exchange in ((n_cands, False), (n_cands - 1, True)):
+        monkeypatch.setattr(sm, "MAX_COLLECTED_STARTS", cap)
+        out = verify()
+        results.append(sorted((r.start, r.dist) for r in out.collect()))
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("Exchange" in plan) == exchange
+    assert results[0] == results[1] == brute_force_ed(arr, q, 2.0)
+    idx.unpersist()
+    df.unpersist()
 
 
 def test_znorm_affine_copy_distance_is_zero(spark, series):
