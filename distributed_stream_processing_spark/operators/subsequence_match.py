@@ -31,15 +31,14 @@ every ``value_scale`` path through one fixed-decimal contract
 The runner reads a stored series' chunk layout (``_series_layout``):
 its (pos, value, chunk_id) rows with the m-1 overlap, partitioned by
 chunk. The first pass over a series object at a given (m, chunk) builds
-the layout inside its own plan (one exchange, nothing pinned, so a
-series passed once, as every one-shot query does, holds nothing after
-its frame is read); the second pins it as a local checkpoint, and every
-later pass over the same series reads the pin: one narrow mapInPandas,
-one job and no exchange. The pin has no explicit release: it goes, as a
-checkpoint does, once the series object and every frame read from it
-are gone. A verify over a pinned layout collects its candidate starts
-(at most MAX_COLLECTED_STARTS) and ships them with the kernel; above
-the cap the candidates go through an exchange with the layout rows.
+the layout inside its own plan (one exchange, nothing kept, so a series
+passed once, as every one-shot query does, holds nothing after its
+frame is read); the second keeps that shuffle, and every later pass
+over the same series reads it: one narrow mapInPandas, one job and no
+exchange. No block is persisted for it: the shuffle files stay while a
+frame that reads them exists and go, as every shuffle's do, with the
+last of them; a lost file is recomputed from the lineage. A verify's
+candidate starts go through one exchange with the layout rows.
 
 Positions are 0-based window starts; a window of width m covers
 [start, start+m-1].
@@ -56,10 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from distributed_stream_processing_spark.session import session_key
-from distributed_stream_processing_spark.streaming.checkpoint import (
-    collect_at_most,
-    lazy_local_checkpoint,
-)
+from distributed_stream_processing_spark.streaming.checkpoint import scoped_conf
 
 DEFAULT_WIDTHS = (25, 50, 100, 200, 400)
 _GRID = 0.5  # KV-match half-integer mean rounding (MeanIntervalUtils.java:51-60)
@@ -122,14 +118,8 @@ def _chunked(series: DataFrame, m: int, chunk: int) -> DataFrame:
     )
 
 
-# a verify over a pinned layout collects at most this many candidate
-# starts and ships them with its kernel (8 bytes each in the task
-# closure); above it the candidates take the exchange with the layout
-MAX_COLLECTED_STARTS = 16_384
-
-
 def _layout_partitions(series: DataFrame, chunk: int) -> int:
-    """Partition count of a pinned layout. The pin is planned static
+    """Partition count of a kept layout. Its shuffle is planned static
     (no AQE coalescing), so it is chosen here: one partition per chunk
     of the series' row count where the plan knows it (a materialized
     cache), at most spark.sql.shuffle.partitions and the default
@@ -149,30 +139,38 @@ def _layout_partitions(series: DataFrame, chunk: int) -> int:
 
 
 def _series_layout(series: DataFrame, m: int, chunk: int) -> DataFrame | None:
-    """The pinned chunk layout of ``series`` for width-``m`` windows,
-    or None on the first pass over this series object at (m, chunk),
+    """The kept chunk layout of ``series`` for width-``m`` windows, or
+    None on the first pass over this series object at (m, chunk),
     which builds the layout inside its own plan.
 
-    The second pass pins ``_chunked(series)`` partitioned by chunk_id
-    as a local checkpoint planned AQE-off (lazy_local_checkpoint: no
-    job at the call; the first job that reads it materializes it), and
-    every later pass reads that pin. Held by the series object, not
-    keyed by its plan, so a different series never reuses a layout;
-    keyed by the session, m and chunk. The pinned blocks go with the
-    last of the series object and the frames that can read them."""
+    The second pass keeps ``_chunked(series)`` partitioned by chunk_id
+    as a leaf over the RDD of that shuffle, planned AQE-off (so no job
+    runs at the call): the first job that reads the leaf runs the
+    shuffle's map stage, and every later job skips it. No block is
+    persisted. The shuffle files stay while a frame that can read them
+    exists (the memo, or a frame a pass returned), go with the last of
+    them as every shuffle's do, and a lost file is recomputed from the
+    lineage. Held by the series object, not keyed by its plan, so a
+    different series never reuses a layout; keyed by the session, m
+    and chunk."""
     key = (session_key(series.sparkSession), m, chunk)
-    # {key: pinned layout, or None after the first pass}, kept on the
-    # series object so it goes with it (__dict__ directly: a missing
-    # DataFrame attribute is looked up as a column, a JVM call)
+    # {key: kept layout, or None after the first pass}, kept on the series
+    # object so it goes with it (__dict__ directly: a missing DataFrame
+    # attribute is looked up as a column, a JVM call)
     seen = series.__dict__.setdefault("_chunk_layouts", {})
     if key not in seen:
         seen[key] = None
         return None
     if seen[key] is None:
-        seen[key] = lazy_local_checkpoint(
-            _chunked(series, m, chunk).repartition(
-                _layout_partitions(series, chunk), "chunk_id"
-            )
+        spark = series.sparkSession
+        shuffled = _chunked(series, m, chunk).repartition(
+            _layout_partitions(series, chunk), "chunk_id"
+        )
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            jrdd = shuffled._jdf.javaRDD()
+        jschema = spark._jsparkSession.parseDataType(shuffled.schema.json())
+        seen[key] = DataFrame(
+            spark._jsparkSession.createDataFrame(jrdd, jschema), spark
         )
     return seen[key]
 
@@ -199,7 +197,7 @@ def _aligned_rows(pos: np.ndarray, starts: np.ndarray, w: int) -> np.ndarray:
     return s[(pos[s] == starts) & (pos[s + w - 1] == starts + w - 1)]
 
 
-def _partition_chunks(batches, m: int, chunk: int, starts: np.ndarray | None = None):
+def _partition_chunks(batches, m: int, chunk: int):
     """Yield ``(base, pos, val, rows)`` for every chunk of one
     mapInPandas partition, pos ascending; ``rows`` are the row offsets
     of the width-``m`` windows to score.
@@ -207,37 +205,31 @@ def _partition_chunks(batches, m: int, chunk: int, starts: np.ndarray | None = N
     A chunk's rows can arrive in several Arrow record batches
     (spark.sql.execution.arrow.maxRecordsPerBatch), and a window that
     straddles two of them is never scored if each batch is scored on
-    its own, so the partition's batches are gathered first. Candidate
-    starts come as rows with a ``start`` column (_run_chunks' union of
-    layout rows and candidate rows) or as ``starts``, the sorted
-    collected set; either way ``rows`` align the chunk's candidate
-    starts and chunks without candidates are skipped. Otherwise
-    ``rows`` are every window the chunk owns."""
+    its own, so the partition's batches are gathered first. When the
+    rows carry a ``start`` column (_run_chunks' union of series rows
+    and candidate rows), ``rows`` align the chunk's candidate starts
+    and chunks without candidates are skipped; otherwise ``rows`` are
+    every window the chunk owns."""
     pdfs = list(batches)
     if not pdfs:
         return
     pdf = pd.concat(pdfs, ignore_index=True)
     with_starts = "start" in pdf.columns
     for cid, grp in pdf.groupby("chunk_id"):
-        base = int(cid) * chunk
-        own = None
         if with_starts:
             is_cand = grp["start"].notna()
-            own = np.unique(grp.loc[is_cand, "start"].to_numpy(np.int64))
+            if not is_cand.any():
+                continue
+            starts = np.unique(grp.loc[is_cand, "start"].to_numpy(np.int64))
             grp = grp[~is_cand]
-        elif starts is not None:
-            own = starts[
-                np.searchsorted(starts, base) : np.searchsorted(starts, base + chunk)
-            ]
-        if own is not None and not len(own):
-            continue
         pos = grp["pos"].to_numpy(np.int64)
         order = np.argsort(pos, kind="stable")
         pos, val = pos[order], grp["value"].to_numpy(np.float64)[order]
+        base = int(cid) * chunk
         rows = (
-            _owned_rows(pos, base, chunk, m)
-            if own is None
-            else _aligned_rows(pos, own, m)
+            _aligned_rows(pos, starts, m)
+            if with_starts
+            else _owned_rows(pos, base, chunk, m)
         )
         yield base, pos, val, rows
 
@@ -259,7 +251,7 @@ def _run_chunks(
 
     The layout (_series_layout) is built inside this plan on the first
     pass over a series object, behind one exchange on chunk_id; from
-    the second pass on it is a pinned leaf and the pass has no exchange
+    the second pass on it is a kept leaf and the pass has no exchange
     (one job). ``reuse=False`` (the one-time index build) always builds
     it inside the plan and records nothing.
 
@@ -267,20 +259,13 @@ def _run_chunks(
     window starts, owned by floor(start/chunk); the overlap replication
     of _chunked guarantees the owning chunk holds the full window, so a
     probe that prunes translates directly into chunks that verify fewer
-    or zero windows. Over a pinned layout the starts are collected at
-    this call (one job, at most MAX_COLLECTED_STARTS of them) and
-    shipped with the kernel. Otherwise, and above that cap, layout rows
-    (``start`` null) and candidate rows (``pos`` and ``value`` null)
-    are unioned and sent through one exchange (a cogroup of the two
-    sides shuffled each side on its own: one exchange more)."""
-    pinned = _series_layout(series, m, chunk) if reuse else None
-    starts = None
-    if candidates is not None and pinned is not None:
-        got = collect_at_most(candidates.select("start"), MAX_COLLECTED_STARTS)
-        if got is not None:
-            starts = np.unique(np.array([r.start for r in got], dtype=np.int64))
-    rows = pinned if pinned is not None else _chunked(series, m, chunk)
-    if candidates is not None and starts is None:
+    or zero windows. Layout rows (``start`` null) and candidate rows
+    (``pos`` and ``value`` null) are unioned and sent through one
+    exchange (a cogroup of the two sides shuffled each side on its own:
+    one exchange more)."""
+    layout = _series_layout(series, m, chunk) if reuse else None
+    rows = layout if layout is not None else _chunked(series, m, chunk)
+    if candidates is not None:
         rows = rows.selectExpr(
             "pos", "value", "chunk_id", "CAST(NULL AS BIGINT) AS start"
         ).unionByName(
@@ -291,11 +276,11 @@ def _run_chunks(
                 "CAST(start AS BIGINT) AS start",
             )
         )
-    if rows is not pinned:
+    if rows is not layout:
         rows = rows.repartition("chunk_id")
 
     def gen(batches):
-        yield from kernel(_partition_chunks(batches, m, chunk, starts))
+        yield from kernel(_partition_chunks(batches, m, chunk))
 
     return rows.mapInPandas(gen, schema=schema)
 
@@ -924,11 +909,8 @@ def verify_ed_ints(
     bit-reproducible in DuckDB via the same integer cents sums.
 
     It reads the series' chunk layout for width len(query), the one a
-    best match over the same series and width reads (_run_chunks):
-    once that layout is pinned, the candidate starts are collected at
-    this call, up to MAX_COLLECTED_STARTS, and the verify has no
-    exchange; above the cap, and before the pin, candidates and layout
-    rows share one exchange.
+    best match over the same series and width reads (_run_chunks), and
+    sends the candidates through one exchange with the layout rows.
     """
     m = len(query)
     q = _fixed_decimal(query, value_scale, "query")

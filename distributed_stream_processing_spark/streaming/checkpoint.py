@@ -40,10 +40,9 @@ The checkpoint is therefore planned with constraint propagation off as
 well. Both settings are scoped to the call and restored after it
 (``scoped_conf``); the session's own settings never change.
 
-``collect_at_most`` is the one size-gated driver collect: one job for
-an exchange-free plan (a checkpoint leaf, a filtered scan), and None
-instead of a collect above its row bound, so the caller can take a
-correct distributed path; ``bounded_collect`` raises there instead.
+``bounded_collect`` is the one size-gated driver collect: one job for
+an exchange-free plan (a checkpoint leaf, a filtered scan), and a
+ValueError instead of a collect above its row bound.
 """
 
 from __future__ import annotations
@@ -90,22 +89,16 @@ def scoped_conf(spark, settings: dict[str, str]):
             spark.conf.set(k, v)
 
 
-def collect_at_most(df: DataFrame, max_rows: int) -> list | None:
-    """``df``'s rows on the driver, or None when it has more than
-    ``max_rows`` (the caller takes its unbounded path instead). One job
-    when ``df`` has no exchange: the take scans every partition in its
-    first pass, each keeping at most ``max_rows + 1`` rows."""
+def bounded_collect(df: DataFrame, max_rows: int, what: str) -> list:
+    """``df``'s rows on the driver, at most ``max_rows`` of them: more
+    raise ValueError (a set that is bounded by construction, a batch's
+    missed keys or a query set, has outgrown its bound, and failing
+    loudly beats an unbounded collect). One job when ``df`` has no
+    exchange: the take scans every partition in its first pass, each
+    keeping at most ``max_rows + 1`` rows."""
     with scoped_conf(df.sparkSession, _TAKE_ALL_PARTITIONS):
         rows = df.limit(max_rows + 1).collect()
-    return rows if len(rows) <= max_rows else None
-
-
-def bounded_collect(df: DataFrame, max_rows: int, what: str) -> list:
-    """``collect_at_most`` for a set that is bounded by construction (a
-    batch's missed keys, a query set): above ``max_rows`` it has
-    outgrown its bound, and a ValueError beats an unbounded collect."""
-    rows = collect_at_most(df, max_rows)
-    if rows is None:
+    if len(rows) > max_rows:
         raise ValueError(f"{what}: more than {max_rows} rows, above its bound")
     return rows
 

@@ -9,7 +9,7 @@ then predict + warm-start-train an SGD linear model
 (StreamingLinearRegressionWithSGD_dsl.scala:153-173).
 
 Engine mapping: the per-window best-match search runs DISTRIBUTED in
-one pass over the stored series' chunk layout, pinned from its second
+one pass over the stored series' chunk layout, kept from its second
 use on, as the reference loads its stored series into KV-match once
 (numpy inside mapInPandas, all query windows scored per chunk; each
 partition keeps its per-window minimum and the driver merges those, at
@@ -48,7 +48,7 @@ def batch_best_match(
     stored series cut into overlapping chunks and partitioned by chunk.
     The first call on a series object builds it inside its plan (ONE
     exchange: a shuffle-map job plus the result job); from the second
-    call on it is a pinned leaf, and a call is one narrow mapInPandas:
+    call on it is a kept leaf, and a call is one narrow mapInPandas:
     one job and no exchange. A verify over the same series and window
     width (operators.subsequence_match.verify_ed_ints) reads the same
     layout.

@@ -296,7 +296,7 @@ def test_batch_best_match_one_exchange(spark, count_jobs, monkeypatch):
     """The per-window minimum is merged per partition and then on the
     driver, with no aggregation exchange: on the first call, one
     shuffle-map job for the chunk exchange plus the result job. From
-    the second call on, the series' chunk layout is pinned: one job
+    the second call on, the series' chunk layout is kept: one job
     and no exchange. The merge keeps every window's argmin over all
     partitions, and ties go to the lowest position."""
     from distributed_stream_processing_spark.streaming import online_ml
@@ -321,7 +321,7 @@ def test_batch_best_match_one_exchange(spark, count_jobs, monkeypatch):
         assert got[wid][0] == int(np.argmin(d2))
         assert got[wid][2] == float(d2.min())
     assert got[0][0] == 100
-    # repeat calls read the pinned layout: the frame each call collects
+    # repeat calls read the kept layout: the frame each call collects
     # is recorded to read its executed plan
     passes = []
     run_chunks = online_ml._run_chunks

@@ -659,28 +659,34 @@ def test_indexed_verify_window_straddles_record_batches(
 
 
 def test_indexed_ed_one_exchange(spark, series, count_jobs):
-    """An indexed ED range query verifies its candidates in two jobs.
-    Before the series' chunk layout is pinned, layout rows and
-    candidate starts go through ONE exchange: a shuffle-map job plus
-    the result job. Once it is pinned (an earlier pass over this
-    module's series at the same width pins it), the candidate collect
-    plus the result job."""
-    df, arr = series
+    """An indexed ED range query verifies its candidates through ONE
+    exchange (layout rows and candidate starts unioned): one
+    shuffle-map job plus the result job. That holds on the first pass
+    over a fresh series object, whose plan explodes the series into its
+    chunk layout, and on the later passes, which read the kept layout
+    (its leaf is in the plan) instead."""
+    import re
+
+    _, arr = series
+    df = _cached_series(spark, arr)
     idx = build_kv_index(df, widths=(25, 50), value_scale=100).cache()
     idx.count()
     q = arr[500 : 500 + M]
-    rows = []
-    n_jobs = count_jobs(
-        lambda: rows.extend(
-            subsequence_match_ed(
-                df, q.tolist(), 1.0, widths=(25, 50), index=idx,
-                n_positions=N, value_scale=100, available_widths={25, 50},
-            ).collect()
+    kept_leaf = re.compile(r"Scan ExistingRDD\[pos#\d+L,value#\d+,chunk_id#\d+L\]")
+    for kept in (False, True, True):
+        rows = []
+        out = subsequence_match_ed(
+            df, q.tolist(), 1.0, widths=(25, 50), index=idx,
+            n_positions=N, value_scale=100, available_widths={25, 50},
         )
-    )
-    assert n_jobs == 2
-    assert sorted((r.start, r.dist) for r in rows) == brute_force_ed(arr, q, 1.0)
+        n_jobs = count_jobs(lambda: rows.extend(out.collect()))
+        assert n_jobs == 2
+        assert sorted((r.start, r.dist) for r in rows) == brute_force_ed(arr, q, 1.0)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" in plan
+        assert bool(kept_leaf.search(plan)) == kept
     idx.unpersist()
+    df.unpersist()
 
 
 def _cached_series(spark, vals):
@@ -707,7 +713,7 @@ def test_fixed_decimal_refuses_unrepresentable_values(bad):
 def test_best_match_and_verify_share_one_layout(spark, series, count_jobs):
     """A best match and an ED verify over the same series and window
     width read one chunk layout: the best match builds it inside its
-    plan, the verify pins it, and a later best match reads the pin in
+    plan, the verify keeps it, and a later best match reads it in
     one job. The index build records no layout."""
     from distributed_stream_processing_spark.operators import subsequence_match as sm
     from distributed_stream_processing_spark.session import session_key
@@ -745,7 +751,7 @@ def test_best_match_and_verify_share_one_layout(spark, series, count_jobs):
 def test_second_series_never_reuses_a_layout(spark, series, count_jobs):
     """Layouts are keyed by the series object: a second series of the
     same schema and size builds its own on its first call (the
-    unpinned two-job plan), and its matches are its own."""
+    two-job plan that builds it), and its matches are its own."""
     from distributed_stream_processing_spark.streaming.online_ml import (
         batch_best_match,
     )
@@ -770,9 +776,8 @@ def test_second_series_never_reuses_a_layout(spark, series, count_jobs):
 
 
 def test_returned_frame_outlives_its_series(spark, series):
-    """A pinned layout has no explicit release: a frame read from it
-    stays readable after its series object, which holds the layout, is
-    dropped."""
+    """A frame read from a kept layout stays readable after its series
+    object, which holds the layout, is dropped."""
     import gc
     import time
     import weakref
@@ -781,7 +786,7 @@ def test_returned_frame_outlives_its_series(spark, series):
     df = _cached_series(spark, arr)
     q = arr[700 : 700 + M].tolist()
     subsequence_match_znorm(df, q, 0.5, chunk=CHUNK).collect()
-    out = subsequence_match_znorm(df, q, 0.5, chunk=CHUNK)  # reads the pin
+    out = subsequence_match_znorm(df, q, 0.5, chunk=CHUNK)  # keeps the layout
     first = sorted(out.collect())
     assert (700, 0.0) in first
     ref = weakref.ref(df)
@@ -794,38 +799,61 @@ def test_returned_frame_outlives_its_series(spark, series):
     assert sorted(out.collect()) == first
 
 
-def test_candidate_cap_both_sides(spark, series, monkeypatch):
-    """Over a pinned layout, a verify ships its candidate starts with
-    the kernel up to MAX_COLLECTED_STARTS (no exchange); one start more
-    takes the exchange of candidates and layout rows, with exactly the
-    same result."""
-    from distributed_stream_processing_spark.operators import subsequence_match as sm
+def _shuffle_id(df) -> int:
+    """The id of the shuffle a kept layout's leaf reads."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    while True:
+        dep = rdd.dependencies().head()
+        if dep.getClass().getSimpleName() == "ShuffleDependency":
+            return dep.shuffleId()
+        rdd = dep.rdd()
+
+
+def test_kept_layout_persists_no_block(spark, series, count_jobs):
+    """A kept layout is a kept shuffle, not a persisted block: the only
+    persistent RDD the passes add is the series' own cache, so
+    unpersisting the series frees every block. The passes after that
+    still read the shuffle files (one job each), and when those files
+    are lost, as with a lost executor, the next pass recomputes them
+    from the lineage. Every pass returns the same best match."""
+    from distributed_stream_processing_spark.operators.subsequence_match import (
+        _series_layout,
+    )
+    from distributed_stream_processing_spark.streaming.online_ml import (
+        batch_best_match,
+    )
+
+    sc = spark.sparkContext
+
+    def persistent() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet())
 
     _, arr = series
+    before = persistent()
     df = _cached_series(spark, arr)
-    idx = build_kv_index(df, widths=(25, 50), value_scale=100).cache()
-    idx.count()
-    q = arr[500 : 500 + M].tolist()
-    cands = sm.probe_index(
-        idx, plan_segments(q, (25, 50)), 2.0, N, M, available_widths={25, 50}
-    )
-    n_cands = cands.count()
-    assert n_cands > 1
+    windows = {0: arr[500 : 500 + M], 1: arr[2000 : 2000 + M]}
 
-    def verify():
-        return sm.verify_ed_ints(df, cands, q, 2.0, 100, chunk=CHUNK)
+    def best():
+        return batch_best_match(df, windows, chunk=CHUNK, value_scale=100)
 
-    verify().collect()  # builds the layout in its plan; the next call pins it
-    results = []
-    for cap, exchange in ((n_cands, False), (n_cands - 1, True)):
-        monkeypatch.setattr(sm, "MAX_COLLECTED_STARTS", cap)
-        out = verify()
-        results.append(sorted((r.start, r.dist) for r in out.collect()))
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert ("Exchange" in plan) == exchange
-    assert results[0] == results[1] == brute_force_ed(arr, q, 2.0)
-    idx.unpersist()
+    results = [best() for _ in range(3)]
+    assert len(persistent() - before) == 1  # the series' cache
     df.unpersist()
+    assert not persistent() - before
+    assert count_jobs(lambda: results.append(best())) == 1
+    shuffle = _shuffle_id(_series_layout(df, M, CHUNK))
+    disk = sc._jsc.sc().env().blockManager().diskBlockManager().getAllFiles()
+    lost = [
+        f
+        for f in (disk.apply(i) for i in range(disk.size()))
+        if f.getName().startswith(f"shuffle_{shuffle}_")
+    ]
+    assert lost
+    for f in lost:
+        f.delete()
+    results.append(best())
+    assert all(r == results[0] for r in results)
+    assert results[0][0][2] == 0 and results[0][1][2] == 0
 
 
 def test_znorm_affine_copy_distance_is_zero(spark, series):
