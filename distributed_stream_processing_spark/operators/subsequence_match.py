@@ -17,7 +17,8 @@ distributed:
   slack), then an interval sweep-line intersects the segments'
   candidate start-ranges;
 * ED verify    = for fixed-decimal data (``value_scale``), exact int64
-  distances in a numpy pass over the candidates' chunks; otherwise an
+  distances in a numpy pass over the candidates' chunks (over every
+  window of a kept layout: no probe); otherwise an
   equi-join of candidates x series with a deterministic left-to-right
   fold (bit-reproducible vs the DuckDB oracle); DTW = the LB_Kim /
   LB_Keogh cascade with early abandon, and zNorm / cNSM = batched
@@ -28,17 +29,25 @@ Every numpy pass runs through one chunk runner (``_run_chunks``), and
 every ``value_scale`` path through one fixed-decimal contract
 (``_fixed_decimal``: off-grid or non-finite input raises ValueError).
 
-The runner reads a stored series' chunk layout (``_series_layout``):
-its (pos, value, chunk_id) rows with the m-1 overlap, partitioned by
-chunk. The first pass over a series object at a given (m, chunk) builds
+Each pass looks a stored series' chunk layout up once
+(``_series_layout``) and the runner reads it: its (pos, value,
+chunk_id) rows with the m-1 overlap, partitioned by chunk (so a window
+may be at most chunk + 1 points long; a longer one raises ValueError).
+The first pass over a series object at a given (m, chunk) builds
 the layout inside its own plan (one exchange, nothing kept, so a series
 passed once, as every one-shot query does, holds nothing after its
 frame is read); the second keeps that shuffle, and every later pass
 over the same series reads it: one narrow mapInPandas, one job and no
 exchange. No block is persisted for it: the shuffle files stay while a
 frame that reads them exists and go, as every shuffle's do, with the
-last of them; a lost file is recomputed from the lineage. A verify's
-candidate starts go through one exchange with the layout rows.
+last of them; a lost file is recomputed from the lineage.
+
+An ED range query over fixed-decimal data (``value_scale``) looks the
+layout up before any job. On a first pass it probes the index, and the
+candidate starts go through the layout's one exchange. Over a kept
+layout it scores every window in that one narrow pass instead: the
+verify reads every layout row either way, so a probe would add an index
+scan and an exchange and save only numpy work.
 
 Positions are 0-based window starts; a window of width m covers
 [start, start+m-1].
@@ -58,6 +67,9 @@ from distributed_stream_processing_spark.session import session_key
 from distributed_stream_processing_spark.streaming.checkpoint import scoped_conf
 
 DEFAULT_WIDTHS = (25, 50, 100, 200, 400)
+# points per chunk of a stored series' layout; a best match and a range
+# query share a kept layout only when they read it at the same chunk
+DEFAULT_CHUNK = 8192
 _GRID = 0.5  # KV-match half-integer mean rounding (MeanIntervalUtils.java:51-60)
 
 
@@ -107,7 +119,17 @@ def _chunked(series: DataFrame, m: int, chunk: int) -> DataFrame:
     chunk c holds every width-``m`` window starting in [c*chunk,
     (c+1)*chunk): a row within m-1 of its chunk's start is exploded
     into its own chunk and the preceding one. One SQL projection, so
-    the plan costs a few JVM calls, not one per Column node."""
+    the plan costs a few JVM calls, not one per Column node.
+
+    The replication reaches exactly one chunk back, so a window longer
+    than chunk + 1 points, which reaches two chunk boundaries, would be
+    in no chunk and silently go unscored; every layout is built here,
+    so such a width raises ValueError before any layout is kept."""
+    if m - 1 > chunk:
+        raise ValueError(
+            f"window width {m} exceeds the chunk overlap bound "
+            f"(chunk={chunk}); raise chunk= to at least width-1"
+        )
     pos = "CAST(pos AS BIGINT)"
     cid = f"CAST(floor({pos} / {chunk}) AS BIGINT)"
     return series.selectExpr(
@@ -240,8 +262,8 @@ def _run_chunks(
     chunk: int,
     kernel,
     schema: str,
+    layout: DataFrame | None,
     candidates: DataFrame | None = None,
-    reuse: bool = True,
 ) -> DataFrame:
     """The one per-chunk driver of every numpy pass: ``kernel`` maps
     the ``(base, pos, val, rows)`` chunks of one partition
@@ -249,21 +271,22 @@ def _run_chunks(
     mapInPandas over the series' chunk layout. No global sort, and no
     stage holds the whole series in one task.
 
-    The layout (_series_layout) is built inside this plan on the first
-    pass over a series object, behind one exchange on chunk_id; from
-    the second pass on it is a kept leaf and the pass has no exchange
-    (one job). ``reuse=False`` (the one-time index build) always builds
-    it inside the plan and records nothing.
+    ``layout`` is what the caller's one _series_layout lookup for
+    (series, m, chunk) returned. A kept layout is read as a leaf: the
+    pass has no exchange (one job). None builds the layout inside this
+    plan, behind one exchange on chunk_id: the first pass over a series
+    object, and the one-time index build, which looks nothing up and
+    records nothing.
 
+    Without ``candidates``, ``rows`` are every window a chunk owns.
     With ``candidates`` (a ``start`` column), ``rows`` are only those
     window starts, owned by floor(start/chunk); the overlap replication
-    of _chunked guarantees the owning chunk holds the full window, so a
-    probe that prunes translates directly into chunks that verify fewer
-    or zero windows. Layout rows (``start`` null) and candidate rows
-    (``pos`` and ``value`` null) are unioned and sent through one
-    exchange (a cogroup of the two sides shuffled each side on its own:
-    one exchange more)."""
-    layout = _series_layout(series, m, chunk) if reuse else None
+    of _chunked guarantees the owning chunk holds the full window.
+    Layout rows (``start`` null) and candidate rows (``pos`` and
+    ``value`` null) are unioned and sent through one exchange (a
+    cogroup of the two sides shuffled each side on its own: one
+    exchange more), kept layout or not. The ED range query sends
+    candidates only on a first pass (subsequence_match_ed)."""
     rows = layout if layout is not None else _chunked(series, m, chunk)
     if candidates is not None:
         rows = rows.selectExpr(
@@ -294,7 +317,7 @@ def _index_runs(
     series: DataFrame,
     widths: tuple[int, ...],
     value_scale: int | None,
-    chunk: int = 8192,
+    chunk: int = DEFAULT_CHUNK,
 ) -> DataFrame:
     """(w, mr, pos_start, pos_end) runs of equal grid-rounded mean for
     EVERY width in one pass: the series is scanned once (_chunked:
@@ -307,15 +330,6 @@ def _index_runs(
     over a local file). Runs that span a chunk boundary come out
     split and are re-joined by the caller's merge_intervals pass."""
     widths = tuple(sorted(set(widths)))
-    if max(widths) - 1 > chunk:
-        # the overlap replication reaches exactly ONE chunk back, so a
-        # window spanning >1 boundary would silently fail the
-        # contiguity mask and its runs would be MISSING from the index
-        # (breaking the probe's exactness guarantee) — refuse loudly
-        raise ValueError(
-            f"index width {max(widths)} exceeds the chunk overlap bound "
-            f"(chunk={chunk}); raise chunk= to at least width-1"
-        )
 
     def kernel(chunks):
         for base, pos, val, _rows in chunks:
@@ -354,7 +368,7 @@ def _index_runs(
         chunk,
         kernel,
         "w int, mr double, pos_start long, pos_end long",
-        reuse=False,
+        None,
     )
 
 
@@ -380,14 +394,13 @@ def build_kv_index(
     chunk back, so the chunk is auto-sized to cover the widest window
     (max(default, 2*max(widths)) — VERDICT r12 task 5): a user asking
     for w=16384 gets the one-pass build without tuning anything. The
-    width>chunk guard inside _index_runs stays as the internal
-    invariant.
+    width>chunk guard of _chunked stays as the internal invariant.
     """
     from distributed_stream_processing_spark.operators.interval import (
         merge_intervals,
     )
 
-    chunk = max(8192, 2 * max(widths))
+    chunk = max(DEFAULT_CHUNK, 2 * max(widths))
     runs = _index_runs(series, widths, value_scale, chunk=chunk)
     # within-chunk runs are maximal, so only integer-adjacent same-mr
     # runs (chunk boundaries) can merge under gap=1
@@ -891,11 +904,12 @@ def verify_ed(
 
 def verify_ed_ints(
     series: DataFrame,
-    candidates: DataFrame,
+    candidates: DataFrame | None,
     query: list[float],
     epsilon: float,
     value_scale: int,
-    chunk: int = 8192,
+    layout: DataFrame | None,
+    chunk: int = DEFAULT_CHUNK,
 ) -> DataFrame:
     """Exact ED verify for FIXED-DECIMAL series: d2 is an int64 sum of
     scaled squared diffs — order-independent, so it needs no ordered
@@ -908,9 +922,14 @@ def verify_ed_ints(
     contract: (start BIGINT, dist ROUND6) with dist = sqrt(d2)/scale,
     bit-reproducible in DuckDB via the same integer cents sums.
 
-    It reads the series' chunk layout for width len(query), the one a
-    best match over the same series and width reads (_run_chunks), and
-    sends the candidates through one exchange with the layout rows.
+    ``layout`` is the caller's _series_layout lookup for (series,
+    len(query), chunk), the layout a best match over the same series
+    and width reads (_run_chunks). With ``candidates`` (a first pass,
+    ``layout`` None), the candidates go through the layout's one
+    exchange. With ``candidates`` None, every window the layout holds
+    is scored: over a kept layout, one narrow pass, one job and no
+    exchange. The kernel and the epsilon filter are the same either
+    way.
     """
     m = len(query)
     q = _fixed_decimal(query, value_scale, "query")
@@ -934,7 +953,7 @@ def verify_ed_ints(
             )
 
     return _run_chunks(
-        series, m, chunk, kernel, "start long, dist double", candidates
+        series, m, chunk, kernel, "start long, dist double", layout, candidates
     )
 
 
@@ -963,9 +982,27 @@ def subsequence_match_ed(
     materialization. Without ``index`` the call builds one (its shuffle
     stages run at the call) and pins it as a local checkpoint whose
     blocks go with the returned frame.
+
+    With ``value_scale``, the series' chunk layout for len(query) is
+    looked up first (_series_layout), before any job. A first pass
+    over a series object, which every one-shot query takes, probes the
+    index as above and builds the layout inside the verify's plan.
+    Once the layout is kept (a later pass, or a best match over the
+    same series and width), the verify would read every layout row
+    anyway, so the call scores every window of it instead
+    (verify_ed_ints with no candidates): one job, with no count, no
+    index build or scan, and no exchange; ``index``, ``n_positions``
+    and the segmentation go unused.
     """
     if not query:
         raise ValueError("empty query")
+    layout = (
+        _series_layout(series, len(query), DEFAULT_CHUNK)
+        if value_scale is not None
+        else None
+    )
+    if layout is not None:
+        return verify_ed_ints(series, None, query, epsilon, value_scale, layout)
     if n_positions is None:
         n_positions = series.count()
     # greedy segmentation is query-only: plan first, then build ONLY
@@ -1014,7 +1051,7 @@ def subsequence_match_ed(
         # fixed-decimal data: exact int64 verify over the candidates' chunks
         # (order-independent sums need no fold join; scales with
         # candidates at numpy constants — the 10x stress shape)
-        return verify_ed_ints(series, cands, query, epsilon, value_scale)
+        return verify_ed_ints(series, cands, query, epsilon, value_scale, None)
     return verify_ed(series, cands, query, epsilon)
 
 
@@ -1315,7 +1352,7 @@ def subsequence_match_dtw(
     query: list[float],
     epsilon: float,
     rho: int,
-    chunk: int = 8192,
+    chunk: int = DEFAULT_CHUNK,
     index: DataFrame | None = None,
     n_positions: int | None = None,
     widths: tuple[int, ...] = DEFAULT_WIDTHS,
@@ -1387,14 +1424,17 @@ def subsequence_match_dtw(
             grid=index_grid,
             available_widths=available_widths,
         )
-    return _run_chunks(series, m, chunk, kernel, "start long, dist double", cands)
+    layout = _series_layout(series, m, chunk)
+    return _run_chunks(
+        series, m, chunk, kernel, "start long, dist double", layout, cands
+    )
 
 
 def subsequence_match_znorm(
     series: DataFrame,
     query: list[float],
     epsilon: float,
-    chunk: int = 8192,
+    chunk: int = DEFAULT_CHUNK,
     value_scale: int | None = None,
 ) -> DataFrame:
     """NSM: ED between z-normalized window and z-normalized query
@@ -1464,7 +1504,8 @@ def subsequence_match_znorm(
                 {"start": pos[rows][hit], "dist": np.round(np.sqrt(d2[hit]), 6)}
             )
 
-    return _run_chunks(series, m, chunk, kernel, "start long, dist double")
+    layout = _series_layout(series, m, chunk)
+    return _run_chunks(series, m, chunk, kernel, "start long, dist double", layout)
 
 
 def subsequence_match_cnsm(
@@ -1473,7 +1514,7 @@ def subsequence_match_cnsm(
     epsilon: float,
     alpha: float = 2.0,
     beta: float = 10.0,
-    chunk: int = 8192,
+    chunk: int = DEFAULT_CHUNK,
     value_scale: int | None = None,
 ) -> DataFrame:
     """cNSM (NormQueryEngine.java semantics): windows x matching the
@@ -1575,6 +1616,7 @@ def subsequence_match_cnsm(
         chunk,
         kernel,
         "start long, dist double, alpha double, beta double",
+        _series_layout(series, m, chunk),
     )
 
 
@@ -1588,7 +1630,7 @@ def window_int_sums(
     series: DataFrame,
     query: list[float],
     value_scale: int,
-    chunk: int = 8192,
+    chunk: int = DEFAULT_CHUNK,
     prune=None,
 ) -> DataFrame:
     """(start, sx, sxx, sxq) for every complete width-m window, where
@@ -1635,8 +1677,9 @@ def window_int_sums(
                 {"start": pos[rows], "sx": sx, "sxx": sxx, "sxq": sxq}
             )
 
+    layout = _series_layout(series, m, chunk)
     return _run_chunks(
-        series, m, chunk, kernel, "start long, sx long, sxx long, sxq long"
+        series, m, chunk, kernel, "start long, sx long, sxx long, sxq long", layout
     )
 
 

@@ -13,8 +13,10 @@ one pass over the stored series' chunk layout, kept from its second
 use on, as the reference loads its stored series into KV-match once
 (numpy inside mapInPandas, all query windows scored per chunk; each
 partition keeps its per-window minimum and the driver merges those, at
-most one row per window per partition); the reference instead ran a
-single-node Java engine on the driver (S3M's acknowledged inversion).
+most one row per window per partition). An ED range query of the same
+width reads that kept layout too and scores every window of it, with
+no index probe. The reference instead ran a single-node Java engine on
+the driver (S3M's acknowledged inversion).
 The SGD model itself is tiny (dim ~ window+pred) and stays driver-side
 like the reference's.
 """
@@ -29,15 +31,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from distributed_stream_processing_spark.operators.subsequence_match import (
+    DEFAULT_CHUNK,
     _fixed_decimal,
     _run_chunks,
+    _series_layout,
 )
 
 
 def batch_best_match(
     series: DataFrame,
     windows: dict[int, np.ndarray],
-    chunk: int = 8192,
+    chunk: int = DEFAULT_CHUNK,
     value_scale: int | None = None,
 ) -> dict[int, tuple[int, float, float]]:
     """Best (ED) match offset in ``series`` for every query window:
@@ -49,9 +53,14 @@ def batch_best_match(
     The first call on a series object builds it inside its plan (ONE
     exchange: a shuffle-map job plus the result job); from the second
     call on it is a kept leaf, and a call is one narrow mapInPandas:
-    one job and no exchange. A verify over the same series and window
-    width (operators.subsequence_match.verify_ed_ints) reads the same
-    layout.
+    one job and no exchange. An ED range query over the same series
+    and window width at the default chunk
+    (operators.subsequence_match.subsequence_match_ed with
+    ``value_scale``) reads the same layout: a best match followed by a
+    range query keeps it on the query, which then scores every window
+    of it in one job instead of probing an index. A window longer than
+    ``chunk`` + 1 points raises ValueError (the overlap reaches one
+    chunk back).
 
     The merge runs in two steps, with no aggregation exchange: each
     partition emits one row per window, its (d2, pos) minimum over the
@@ -99,8 +108,9 @@ def batch_best_match(
             pdf = pd.DataFrame(found, columns=["window_id", "pos", "d2"])
             yield pdf.sort_values(["d2", "pos"]).drop_duplicates("window_id")
 
+    layout = _series_layout(series, m, chunk)
     rows = _run_chunks(
-        series, m, chunk, kernel, "window_id long, pos long, d2 double"
+        series, m, chunk, kernel, "window_id long, pos long, d2 double", layout
     ).collect()
     # driver merge of the per-partition minima: the first row per
     # window in (d2, pos) order, so ties go to the lowest position

@@ -42,6 +42,15 @@ def series(spark):
     return df, arr
 
 
+def _fresh_series(spark, vals):
+    """A new series object, so its ED range query takes the first-pass
+    plan that probes the index (over a kept layout, every window is
+    scored instead)."""
+    return spark.createDataFrame(
+        [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
+    )
+
+
 def test_index_covers_all_positions(spark, series):
     df, _ = series
     idx = build_kv_index(df, widths=(25, 50), value_scale=100)
@@ -54,7 +63,8 @@ def test_index_covers_all_positions(spark, series):
 
 
 def test_ed_match_equals_brute_force(spark, series):
-    df, arr = series
+    _, arr = series
+    df = _fresh_series(spark, arr)
     q = arr[500 : 500 + M].tolist()
     eps = 1.0  # catches the exact match and the planted noisy copy
     got = sorted((r.start, r.dist) for r in
@@ -68,7 +78,8 @@ def test_ed_match_equals_brute_force(spark, series):
 
 def test_ed_match_wide_epsilon(spark, series):
     """Larger eps: pruning keeps every brute-force hit (completeness)."""
-    df, arr = series
+    _, arr = series
+    df = _fresh_series(spark, arr)
     q = arr[700 : 700 + M].tolist()
     eps = 8.0
     got = {r.start for r in
@@ -236,19 +247,20 @@ def test_znorm_exact_equals_numpy_path(spark, series):
 def test_dp_segmenter_equals_greedy_results(spark, series):
     """DP segmentation is a cost optimization only — match results
     must be identical to the greedy segmentation (both complete)."""
-    df, arr = series
+    _, arr = series
     q = arr[700 : 700 + M].tolist()
     eps = 8.0
     greedy = {
         (r.start, r.dist)
         for r in subsequence_match_ed(
-            df, q, eps, widths=(25, 50), value_scale=100
+            _fresh_series(spark, arr), q, eps, widths=(25, 50), value_scale=100
         ).collect()
     }
     dp = {
         (r.start, r.dist)
         for r in subsequence_match_ed(
-            df, q, eps, widths=(25, 50), value_scale=100, segmenter="dp"
+            _fresh_series(spark, arr), q, eps, widths=(25, 50), value_scale=100,
+            segmenter="dp",
         ).collect()
     }
     assert dp == greedy and len(greedy) > 0
@@ -441,7 +453,8 @@ def test_t11_truncation_cost_model():
 def test_t11_early_stop_keeps_results_exact(spark, series):
     """The dp path's T11 segment truncation may only widen the
     candidate superset — the verified output must equal brute force."""
-    df, arr = series
+    _, arr = series
+    df = _fresh_series(spark, arr)
     q = arr[300 : 300 + M]
     eps = 8.0
     got = sorted(
@@ -506,18 +519,36 @@ def test_index_wide_width_autosizes_chunk(spark):
 
 
 def test_index_width_exceeding_chunk_overlap_raises(spark, series):
-    """The internal invariant stays loud: _index_runs called with a
-    chunk smaller than the widest window must refuse (a window
-    spanning >1 boundary would silently drop runs)."""
+    """A window longer than chunk + 1 points reaches two chunk
+    boundaries, and the overlap replication reaches one chunk back, so
+    no chunk holds it whole. Every pass refuses it instead of silently
+    skipping it: the index build (its runs would be missing), best
+    match (it returned another window) and the range query's verify
+    (it returned nothing). No layout is kept for it, and chunk + 1
+    points is the longest window a chunk holds."""
     from distributed_stream_processing_spark.operators.subsequence_match import (
         _index_runs,
+        verify_ed_ints,
+    )
+    from distributed_stream_processing_spark.streaming.online_ml import (
+        batch_best_match,
     )
 
-    df, _ = series
-    import pytest
-
+    df, arr = series
     with pytest.raises(ValueError, match="chunk overlap bound"):
         _index_runs(df, (25, 8194), 100, chunk=8192).count()
+    df = _fresh_series(spark, arr)
+    q = arr[1500:2100]
+    cands = spark.range(1500, 1501).selectExpr("id AS start")
+    for _ in range(2):  # the first pass over the series, then the keep
+        with pytest.raises(ValueError, match="chunk overlap bound"):
+            batch_best_match(df, {0: q}, chunk=CHUNK, value_scale=100)
+        with pytest.raises(ValueError, match="chunk overlap bound"):
+            verify_ed_ints(df, cands, q.tolist(), 0.5, 100, None, chunk=CHUNK)
+    assert all(v is None for v in df.__dict__["_chunk_layouts"].values())
+    q = arr[1500 : 1500 + CHUNK + 1]
+    got = batch_best_match(df, {0: q}, chunk=CHUNK, value_scale=100)
+    assert got[0][:2] == (1500, 0.0)
 
 
 # ---------------- chunked numpy seams: Arrow record-batch straddle ----------------
@@ -659,12 +690,13 @@ def test_indexed_verify_window_straddles_record_batches(
 
 
 def test_indexed_ed_one_exchange(spark, series, count_jobs):
-    """An indexed ED range query verifies its candidates through ONE
-    exchange (layout rows and candidate starts unioned): one
-    shuffle-map job plus the result job. That holds on the first pass
-    over a fresh series object, whose plan explodes the series into its
-    chunk layout, and on the later passes, which read the kept layout
-    (its leaf is in the plan) instead."""
+    """An indexed ED range query's first pass over a fresh series object
+    verifies its candidates through ONE exchange (layout rows and
+    candidate starts unioned): one shuffle-map job plus the result job,
+    with the series exploded into its chunk layout inside the plan. The
+    later passes read the kept layout (its leaf is in the plan) and
+    score every window of it: one job, with no exchange and no index
+    scan."""
     import re
 
     _, arr = series
@@ -680,10 +712,11 @@ def test_indexed_ed_one_exchange(spark, series, count_jobs):
             n_positions=N, value_scale=100, available_widths={25, 50},
         )
         n_jobs = count_jobs(lambda: rows.extend(out.collect()))
-        assert n_jobs == 2
+        assert n_jobs == (1 if kept else 2)
         assert sorted((r.start, r.dist) for r in rows) == brute_force_ed(arr, q, 1.0)
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan
+        assert ("Exchange" in plan) != kept
+        assert ("pos_start" in plan) != kept  # the index scan
         assert bool(kept_leaf.search(plan)) == kept
     idx.unpersist()
     df.unpersist()
@@ -691,9 +724,7 @@ def test_indexed_ed_one_exchange(spark, series, count_jobs):
 
 def _cached_series(spark, vals):
     """A fresh cached series object: its chunk layouts start unbuilt."""
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
-    ).cache()
+    df = _fresh_series(spark, vals).cache()
     df.count()
     return df
 
@@ -731,7 +762,10 @@ def test_best_match_and_verify_share_one_layout(spark, series, count_jobs):
         idx, plan_segments(q.tolist(), (25, 50)), 1.0, N, M,
         available_widths={25, 50},
     )
-    got = sm.verify_ed_ints(df, cands, q.tolist(), 1.0, 100, chunk=CHUNK)
+    got = sm.verify_ed_ints(
+        df, cands, q.tolist(), 1.0, 100, sm._series_layout(df, M, CHUNK),
+        chunk=CHUNK,
+    )
     assert sorted((r.start, r.dist) for r in got.collect()) == brute_force_ed(
         arr, q, 1.0
     )
@@ -815,8 +849,12 @@ def test_kept_layout_persists_no_block(spark, series, count_jobs):
     unpersisting the series frees every block. The passes after that
     still read the shuffle files (one job each), and when those files
     are lost, as with a lost executor, the next pass recomputes them
-    from the lineage. Every pass returns the same best match."""
+    from the lineage. Two inputs read kept layouts: a best match and an
+    ED range query (which scores every window of its layout), and
+    every pass returns the same best match and the brute-force range
+    result."""
     from distributed_stream_processing_spark.operators.subsequence_match import (
+        DEFAULT_CHUNK,
         _series_layout,
     )
     from distributed_stream_processing_spark.streaming.online_ml import (
@@ -832,28 +870,94 @@ def test_kept_layout_persists_no_block(spark, series, count_jobs):
     before = persistent()
     df = _cached_series(spark, arr)
     windows = {0: arr[500 : 500 + M], 1: arr[2000 : 2000 + M]}
+    idx = build_kv_index(df, widths=(25, 50), value_scale=100)  # not persisted
 
-    def best():
-        return batch_best_match(df, windows, chunk=CHUNK, value_scale=100)
+    def passes():
+        best = batch_best_match(df, windows, chunk=CHUNK, value_scale=100)
+        ranged = subsequence_match_ed(
+            df, windows[0].tolist(), 1.0, widths=(25, 50), index=idx,
+            n_positions=N, value_scale=100, available_widths={25, 50},
+        ).collect()
+        return best, sorted((r.start, r.dist) for r in ranged)
 
-    results = [best() for _ in range(3)]
+    results = [passes() for _ in range(3)]
     assert len(persistent() - before) == 1  # the series' cache
     df.unpersist()
     assert not persistent() - before
-    assert count_jobs(lambda: results.append(best())) == 1
-    shuffle = _shuffle_id(_series_layout(df, M, CHUNK))
+    assert count_jobs(lambda: results.append(passes())) == 2  # one per input
     disk = sc._jsc.sc().env().blockManager().diskBlockManager().getAllFiles()
-    lost = [
-        f
-        for f in (disk.apply(i) for i in range(disk.size()))
-        if f.getName().startswith(f"shuffle_{shuffle}_")
-    ]
-    assert lost
-    for f in lost:
-        f.delete()
-    results.append(best())
+    files = [disk.apply(i) for i in range(disk.size())]
+    for chunk in (CHUNK, DEFAULT_CHUNK):
+        shuffle = _shuffle_id(_series_layout(df, M, chunk))
+        lost = [f for f in files if f.getName().startswith(f"shuffle_{shuffle}_")]
+        assert lost
+        for f in lost:
+            f.delete()
+    results.append(passes())
     assert all(r == results[0] for r in results)
-    assert results[0][0][2] == 0 and results[0][1][2] == 0
+    best, ranged = results[0]
+    assert best[0][2] == 0 and best[1][2] == 0
+    assert ranged == brute_force_ed(arr, windows[0], 1.0)
+
+
+def test_kept_layout_range_query_both_sides_of_the_probe(spark, series):
+    """Over a kept layout the ED range query scores every window with
+    no probe. A query the probe prunes hard and one whose every window
+    is a probe candidate each equal brute force."""
+    from distributed_stream_processing_spark.operators.subsequence_match import (
+        probe_index,
+    )
+    from distributed_stream_processing_spark.streaming.online_ml import (
+        batch_best_match,
+    )
+
+    _, arr = series
+    df = _cached_series(spark, arr)
+    idx = build_kv_index(df, widths=(25, 50), value_scale=100).cache()
+    windows = N - M + 1
+    batch_best_match(df, {0: arr[:M]}, value_scale=100)  # the first pass
+    for start, eps, pruned in ((500, 1.0, True), (700, 1500.0, False)):
+        q = arr[start : start + M]
+        n_cands = probe_index(
+            idx, plan_segments(q.tolist(), (25, 50)), eps, N, M,
+            available_widths={25, 50},
+        ).count()
+        assert (n_cands < windows // 10) if pruned else (n_cands == windows)
+        for _ in range(2):
+            out = subsequence_match_ed(
+                df, q.tolist(), eps, widths=(25, 50), index=idx,
+                n_positions=N, value_scale=100, available_widths={25, 50},
+            )
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "pos_start" not in plan  # no probe
+            got = sorted((r.start, r.dist) for r in out.collect())
+            want = brute_force_ed(arr, q, eps)
+            assert got == want and want
+    idx.unpersist()
+    df.unpersist()
+
+
+@pytest.mark.parametrize("segmenter", ["greedy", "dp"])
+def test_kept_layout_range_query_runs_one_job(spark, series, count_jobs, segmenter):
+    """A repeat ED range query over a kept layout, given no index and
+    no n_positions, runs one job in all: no count, no index build, no
+    probe statistics."""
+    _, arr = series
+    df = _cached_series(spark, arr)
+    q = arr[500 : 500 + M].tolist()
+
+    def run():
+        return sorted(
+            (r.start, r.dist)
+            for r in subsequence_match_ed(
+                df, q, 1.0, widths=(25, 50), value_scale=100, segmenter=segmenter
+            ).collect()
+        )
+
+    results = [run(), run()]  # builds the layout in its plan, then keeps it
+    assert count_jobs(lambda: results.append(run())) == 1
+    assert all(r == brute_force_ed(arr, np.array(q), 1.0) for r in results)
+    df.unpersist()
 
 
 def test_znorm_affine_copy_distance_is_zero(spark, series):
@@ -880,14 +984,12 @@ def test_self_built_index_leaves_no_cache_entry(spark, series):
     CacheManager entry behind (a .cache() entry lived until the session
     ended), on the greedy and on the dp path."""
     _, arr = series
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(arr)], "pos long, value double"
-    )
     q = arr[500 : 500 + M]
     spark.catalog.clearCache()
     for segmenter in ("greedy", "dp"):
         got = subsequence_match_ed(
-            df, q.tolist(), 1.0, widths=(25, 50), value_scale=100,
+            _fresh_series(spark, arr), q.tolist(), 1.0, widths=(25, 50),
+            value_scale=100,
             segmenter=segmenter,
         ).collect()
         assert sorted(r.start for r in got) == [
