@@ -17,8 +17,9 @@ distributed:
   slack), then an interval sweep-line intersects the segments'
   candidate start-ranges;
 * ED verify    = for fixed-decimal data (``value_scale``), exact int64
-  distances in a numpy pass over the candidates' chunks (over every
-  window of a kept layout: no probe); otherwise an
+  distances from prefix sums and one correlation with the query, in a
+  numpy pass over the candidates' chunks (over every window of a kept
+  layout: no probe); otherwise an
   equi-join of candidates x series with a deterministic left-to-right
   fold (bit-reproducible vs the DuckDB oracle); DTW = the LB_Kim /
   LB_Keogh cascade with early abandon, and zNorm / cNSM = batched
@@ -29,8 +30,8 @@ Every numpy pass runs through one chunk runner (``_run_chunks``), and
 every ``value_scale`` path through one fixed-decimal contract
 (``_fixed_decimal``: off-grid or non-finite input raises ValueError).
 
-Each pass looks a stored series' chunk layout up once
-(``_series_layout``) and the runner reads it: its (pos, value,
+The runner looks a stored series' chunk layout up once per pass
+(``_series_layout``) and reads it: its (pos, value,
 chunk_id) rows with the m-1 overlap, partitioned by chunk (so a window
 may be at most chunk + 1 points long; a longer one raises ValueError).
 The first pass over a series object at a given (m, chunk) builds
@@ -70,6 +71,8 @@ DEFAULT_WIDTHS = (25, 50, 100, 200, 400)
 # points per chunk of a stored series' layout; a best match and a range
 # query share a kept layout only when they read it at the same chunk
 DEFAULT_CHUNK = 8192
+# _run_chunks' default layout: look the series' layout up there
+_LOOK_UP = object()
 _GRID = 0.5  # KV-match half-integer mean rounding (MeanIntervalUtils.java:51-60)
 
 
@@ -262,8 +265,8 @@ def _run_chunks(
     chunk: int,
     kernel,
     schema: str,
-    layout: DataFrame | None,
     candidates: DataFrame | None = None,
+    layout=_LOOK_UP,
 ) -> DataFrame:
     """The one per-chunk driver of every numpy pass: ``kernel`` maps
     the ``(base, pos, val, rows)`` chunks of one partition
@@ -271,12 +274,12 @@ def _run_chunks(
     mapInPandas over the series' chunk layout. No global sort, and no
     stage holds the whole series in one task.
 
-    ``layout`` is what the caller's one _series_layout lookup for
-    (series, m, chunk) returned. A kept layout is read as a leaf: the
-    pass has no exchange (one job). None builds the layout inside this
-    plan, behind one exchange on chunk_id: the first pass over a series
-    object, and the one-time index build, which looks nothing up and
-    records nothing.
+    The layout is looked up here (_series_layout) unless the caller
+    passes the result of its own lookup (``layout``): the ED range
+    query, which looks it up before any job, and the one-time index
+    build, which passes None and so records nothing. A kept layout is
+    read as a leaf: the pass has no exchange (one job). None builds the
+    layout inside this plan, behind one exchange on chunk_id.
 
     Without ``candidates``, ``rows`` are every window a chunk owns.
     With ``candidates`` (a ``start`` column), ``rows`` are only those
@@ -287,6 +290,8 @@ def _run_chunks(
     cogroup of the two sides shuffled each side on its own: one
     exchange more), kept layout or not. The ED range query sends
     candidates only on a first pass (subsequence_match_ed)."""
+    if layout is _LOOK_UP:
+        layout = _series_layout(series, m, chunk)
     rows = layout if layout is not None else _chunked(series, m, chunk)
     if candidates is not None:
         rows = rows.selectExpr(
@@ -368,7 +373,7 @@ def _index_runs(
         chunk,
         kernel,
         "w int, mr double, pos_start long, pos_end long",
-        None,
+        layout=None,
     )
 
 
@@ -908,8 +913,8 @@ def verify_ed_ints(
     query: list[float],
     epsilon: float,
     value_scale: int,
-    layout: DataFrame | None,
     chunk: int = DEFAULT_CHUNK,
+    layout=_LOOK_UP,
 ) -> DataFrame:
     """Exact ED verify for FIXED-DECIMAL series: d2 is an int64 sum of
     scaled squared diffs — order-independent, so it needs no ordered
@@ -918,30 +923,40 @@ def verify_ed_ints(
     verify_ed's exploded (start, qoff) join. At 10x bench scale the
     explode shape shuffles ~100M rows through a fixed-width exchange
     and went superlinear (the stress bench caught it); this pass
-    scales with candidate count at numpy constants. Output identical
+    scales with the chunks that hold candidates at numpy constants.
+    Output identical
     contract: (start BIGINT, dist ROUND6) with dist = sqrt(d2)/scale,
     bit-reproducible in DuckDB via the same integer cents sums.
 
-    ``layout`` is the caller's _series_layout lookup for (series,
-    len(query), chunk), the layout a best match over the same series
-    and width reads (_run_chunks). With ``candidates`` (a first pass,
-    ``layout`` None), the candidates go through the layout's one
-    exchange. With ``candidates`` None, every window the layout holds
-    is scored: over a kept layout, one narrow pass, one job and no
-    exchange. The kernel and the epsilon filter are the same either
-    way.
+    It reads the series' chunk layout for width len(query), the one a
+    best match over the same series and width reads (_run_chunks;
+    ``layout`` passes a lookup the caller made). With ``candidates``,
+    the candidates go through one exchange with the layout rows. With
+    ``candidates`` None, every window the layout holds is scored: over
+    a kept layout, one narrow pass, one job and no exchange. The kernel
+    and the epsilon filter are the same either way. A chunk's sums
+    come from prefix sums and one correlation with the query, so a
+    task's memory grows with the chunk, not with chunk x len(query).
     """
     m = len(query)
     q = _fixed_decimal(query, value_scale, "query")
     eps2 = float(epsilon * value_scale) ** 2  # int64 d2 < 2^53 is exact
+
+    qf, qq = q.astype(np.float64), int((q * q).sum())
 
     def kernel(chunks):
         for _base, pos, val, rows in chunks:
             if not len(rows):
                 continue
             cents = _fixed_decimal(val, value_scale, "series", against=q)
-            X = np.lib.stride_tricks.sliding_window_view(cents, m)[rows]
-            d2 = ((X - q) ** 2).sum(axis=1)
+            # d2 = sum x^2 - 2 sum xq + sum q^2, in O(chunk) memory. Each
+            # product and partial sum of sum xq is an integer below 2^53
+            # (the ``against`` bound), so the float64 correlation is
+            # exact; the int64 prefix sums may wrap, their differences
+            # (below 2^53) do not
+            sq = np.concatenate(([0], np.cumsum(cents * cents)))
+            sxq = np.correlate(cents.astype(np.float64), qf, "valid")[rows]
+            d2 = sq[rows + m] - sq[rows] - 2 * sxq.astype(np.int64) + qq
             keep = d2 <= eps2
             yield pd.DataFrame(
                 {
@@ -953,7 +968,7 @@ def verify_ed_ints(
             )
 
     return _run_chunks(
-        series, m, chunk, kernel, "start long, dist double", layout, candidates
+        series, m, chunk, kernel, "start long, dist double", candidates, layout
     )
 
 
@@ -1002,7 +1017,9 @@ def subsequence_match_ed(
         else None
     )
     if layout is not None:
-        return verify_ed_ints(series, None, query, epsilon, value_scale, layout)
+        return verify_ed_ints(
+            series, None, query, epsilon, value_scale, layout=layout
+        )
     if n_positions is None:
         n_positions = series.count()
     # greedy segmentation is query-only: plan first, then build ONLY
@@ -1051,7 +1068,9 @@ def subsequence_match_ed(
         # fixed-decimal data: exact int64 verify over the candidates' chunks
         # (order-independent sums need no fold join; scales with
         # candidates at numpy constants — the 10x stress shape)
-        return verify_ed_ints(series, cands, query, epsilon, value_scale, None)
+        return verify_ed_ints(
+            series, cands, query, epsilon, value_scale, layout=None
+        )
     return verify_ed(series, cands, query, epsilon)
 
 
@@ -1424,10 +1443,7 @@ def subsequence_match_dtw(
             grid=index_grid,
             available_widths=available_widths,
         )
-    layout = _series_layout(series, m, chunk)
-    return _run_chunks(
-        series, m, chunk, kernel, "start long, dist double", layout, cands
-    )
+    return _run_chunks(series, m, chunk, kernel, "start long, dist double", cands)
 
 
 def subsequence_match_znorm(
@@ -1504,8 +1520,7 @@ def subsequence_match_znorm(
                 {"start": pos[rows][hit], "dist": np.round(np.sqrt(d2[hit]), 6)}
             )
 
-    layout = _series_layout(series, m, chunk)
-    return _run_chunks(series, m, chunk, kernel, "start long, dist double", layout)
+    return _run_chunks(series, m, chunk, kernel, "start long, dist double")
 
 
 def subsequence_match_cnsm(
@@ -1616,7 +1631,6 @@ def subsequence_match_cnsm(
         chunk,
         kernel,
         "start long, dist double, alpha double, beta double",
-        _series_layout(series, m, chunk),
     )
 
 
@@ -1677,9 +1691,8 @@ def window_int_sums(
                 {"start": pos[rows], "sx": sx, "sxx": sxx, "sxq": sxq}
             )
 
-    layout = _series_layout(series, m, chunk)
     return _run_chunks(
-        series, m, chunk, kernel, "start long, sx long, sxx long, sxq long", layout
+        series, m, chunk, kernel, "start long, sx long, sxx long, sxq long"
     )
 
 

@@ -34,7 +34,6 @@ from distributed_stream_processing_spark.operators.subsequence_match import (
     DEFAULT_CHUNK,
     _fixed_decimal,
     _run_chunks,
-    _series_layout,
 )
 
 
@@ -108,9 +107,8 @@ def batch_best_match(
             pdf = pd.DataFrame(found, columns=["window_id", "pos", "d2"])
             yield pdf.sort_values(["d2", "pos"]).drop_duplicates("window_id")
 
-    layout = _series_layout(series, m, chunk)
     rows = _run_chunks(
-        series, m, chunk, kernel, "window_id long, pos long, d2 double", layout
+        series, m, chunk, kernel, "window_id long, pos long, d2 double"
     ).collect()
     # driver merge of the per-partition minima: the first row per
     # window in (d2, pos) order, so ties go to the lowest position

@@ -544,7 +544,7 @@ def test_index_width_exceeding_chunk_overlap_raises(spark, series):
         with pytest.raises(ValueError, match="chunk overlap bound"):
             batch_best_match(df, {0: q}, chunk=CHUNK, value_scale=100)
         with pytest.raises(ValueError, match="chunk overlap bound"):
-            verify_ed_ints(df, cands, q.tolist(), 0.5, 100, None, chunk=CHUNK)
+            verify_ed_ints(df, cands, q.tolist(), 0.5, 100, chunk=CHUNK)
     assert all(v is None for v in df.__dict__["_chunk_layouts"].values())
     q = arr[1500 : 1500 + CHUNK + 1]
     got = batch_best_match(df, {0: q}, chunk=CHUNK, value_scale=100)
@@ -675,18 +675,21 @@ def test_indexed_verify_window_straddles_record_batches(
 ):
     """The candidate verify (_run_chunks with candidates: series rows
     and candidate starts through one exchange) gathers each partition
-    too."""
-    df, vals = straddle_series
+    too, and so does the scan over a kept layout. A fresh series object
+    takes the probe on its first query and keeps its layout on the
+    second, which scores every window (the DTW/znorm/cnsm tests above
+    keep the fixture series' layout at this width, so a query over it
+    would never probe)."""
+    _, vals = straddle_series
     q, dist, eps = _straddle_case(
         vals, lambda X, q: np.sqrt(((X - q) ** 2).sum(axis=1))
     )
-    got = {
-        r.start: r.dist
-        for r in subsequence_match_ed(
-            df, q.tolist(), eps, widths=(25,), value_scale=100
-        ).collect()
-    }
-    _assert_matches(got, dist, eps)
+    df = _fresh_series(spark, vals)
+    for probed in (True, False):
+        out = subsequence_match_ed(df, q.tolist(), eps, widths=(25,), value_scale=100)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("pos_start" in plan) == probed  # the index scan
+        _assert_matches({r.start: r.dist for r in out.collect()}, dist, eps)
 
 
 def test_indexed_ed_one_exchange(spark, series, count_jobs):
@@ -762,10 +765,7 @@ def test_best_match_and_verify_share_one_layout(spark, series, count_jobs):
         idx, plan_segments(q.tolist(), (25, 50)), 1.0, N, M,
         available_widths={25, 50},
     )
-    got = sm.verify_ed_ints(
-        df, cands, q.tolist(), 1.0, 100, sm._series_layout(df, M, CHUNK),
-        chunk=CHUNK,
-    )
+    got = sm.verify_ed_ints(df, cands, q.tolist(), 1.0, 100, chunk=CHUNK)
     assert sorted((r.start, r.dist) for r in got.collect()) == brute_force_ed(
         arr, q, 1.0
     )
@@ -996,6 +996,32 @@ def test_self_built_index_leaves_no_cache_entry(spark, series):
             s for s, _ in brute_force_ed(arr, q, 1.0)
         ]
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_verify_ed_ints_exact_when_prefix_sums_wrap(spark):
+    """The fixed-decimal verify sums each window's x^2 as a difference
+    of int64 prefix sums. With values near the contract's bound the
+    prefix sums of one chunk pass 2^63 and wrap, and every distance
+    still equals the exact integer one."""
+    from distributed_stream_processing_spark.operators.subsequence_match import (
+        verify_ed_ints,
+    )
+
+    n = 40_000
+    rng = np.random.default_rng(4)
+    cents = rng.integers(-(2**25), 2**25, n)
+    assert sum(int(c) * int(c) for c in cents) >= 2**63  # the sums wrap
+    df = _fresh_series(spark, cents / 100)
+    q = int(cents[7_000])
+    d2 = (cents - q) ** 2
+    eps = math.sqrt(float(np.sort(d2)[50])) / 100
+    want = sorted(
+        (s, float(np.round(math.sqrt(float(d)) / 100, 6)))
+        for s, d in enumerate(d2)
+        if d <= (eps * 100) ** 2
+    )
+    got = verify_ed_ints(df, None, [q / 100], eps, 100, chunk=n, layout=None)
+    assert sorted((r.start, r.dist) for r in got.collect()) == want
 
 
 def test_value_scale_refuses_off_grid_input(spark, series):
