@@ -30,7 +30,7 @@ HEADLINE = [
     "q16_similarity_self_join",   # Jaccard prefix join (DSim-Join)
     "q21_dedup_minhash_lsh",      # MinHash LSH dedup
     "q26_ann_topk",               # brute-force cosine top-k
-    "q29_subseq_match_ed",        # KV-match ED (index build + probe + verify)
+    "q29_subseq_match_ed",        # KV-match ED range query (every window scored)
     "q33_semi_stream_cached_join",  # DS-Join cached pipeline, 4 batches
     "q34_stream_minute_rollup",   # Structured Streaming rollup
     "q48_semi_stream_similarity",  # DSim cached similarity pipeline, 3 batches

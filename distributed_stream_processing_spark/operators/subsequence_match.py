@@ -18,8 +18,8 @@ distributed:
   candidate start-ranges;
 * ED verify    = for fixed-decimal data (``value_scale``), exact int64
   distances from prefix sums and one correlation with the query, in a
-  numpy pass over the candidates' chunks (over every window of a kept
-  layout: no probe); otherwise an
+  numpy pass over every window of the series' chunk layout: no index
+  and no probe; otherwise an
   equi-join of candidates x series with a deterministic left-to-right
   fold (bit-reproducible vs the DuckDB oracle); DTW = the LB_Kim /
   LB_Keogh cascade with early abandon, and zNorm / cNSM = batched
@@ -40,15 +40,15 @@ passed once, as every one-shot query does, holds nothing after its
 frame is read); the second keeps that shuffle, and every later pass
 over the same series reads it: one narrow mapInPandas, one job and no
 exchange. No block is persisted for it: the shuffle files stay while a
-frame that reads them exists and go, as every shuffle's do, with the
+frame that can read them exists and go, as every shuffle's do, with the
 last of them; a lost file is recomputed from the lineage.
 
-An ED range query over fixed-decimal data (``value_scale``) looks the
-layout up before any job. On a first pass it probes the index, and the
-candidate starts go through the layout's one exchange. Over a kept
-layout it scores every window in that one narrow pass instead: the
-verify reads every layout row either way, so a probe would add an index
-scan and an exchange and save only numpy work.
+The fixed-decimal ED range query has one plan on every pass: the
+verify reads every layout row anyway, so an index probe would add an
+index build or scan, a count and an exchange, and save only numpy
+work. It lost every measurement taken, on the first pass and over a
+kept layout. The index probe serves the float ED verify and the DTW
+verify, the only paths for their inputs.
 
 Positions are 0-based window starts; a window of width m covers
 [start, start+m-1].
@@ -71,8 +71,6 @@ DEFAULT_WIDTHS = (25, 50, 100, 200, 400)
 # points per chunk of a stored series' layout; a best match and a range
 # query share a kept layout only when they read it at the same chunk
 DEFAULT_CHUNK = 8192
-# _run_chunks' default layout: look the series' layout up there
-_LOOK_UP = object()
 _GRID = 0.5  # KV-match half-integer mean rounding (MeanIntervalUtils.java:51-60)
 
 
@@ -266,7 +264,7 @@ def _run_chunks(
     kernel,
     schema: str,
     candidates: DataFrame | None = None,
-    layout=_LOOK_UP,
+    reuse: bool = True,
 ) -> DataFrame:
     """The one per-chunk driver of every numpy pass: ``kernel`` maps
     the ``(base, pos, val, rows)`` chunks of one partition
@@ -274,24 +272,21 @@ def _run_chunks(
     mapInPandas over the series' chunk layout. No global sort, and no
     stage holds the whole series in one task.
 
-    The layout is looked up here (_series_layout) unless the caller
-    passes the result of its own lookup (``layout``): the ED range
-    query, which looks it up before any job, and the one-time index
-    build, which passes None and so records nothing. A kept layout is
-    read as a leaf: the pass has no exchange (one job). None builds the
-    layout inside this plan, behind one exchange on chunk_id.
+    The layout is looked up here (_series_layout): a kept layout is
+    read as a leaf, so the pass has no exchange (one job); otherwise
+    the layout is built inside this plan, behind one exchange on
+    chunk_id. ``reuse=False`` (the one-time index build) always builds
+    it in the plan and records nothing.
 
     Without ``candidates``, ``rows`` are every window a chunk owns.
-    With ``candidates`` (a ``start`` column), ``rows`` are only those
-    window starts, owned by floor(start/chunk); the overlap replication
-    of _chunked guarantees the owning chunk holds the full window.
-    Layout rows (``start`` null) and candidate rows (``pos`` and
-    ``value`` null) are unioned and sent through one exchange (a
-    cogroup of the two sides shuffled each side on its own: one
-    exchange more), kept layout or not. The ED range query sends
-    candidates only on a first pass (subsequence_match_ed)."""
-    if layout is _LOOK_UP:
-        layout = _series_layout(series, m, chunk)
+    With ``candidates`` (a ``start`` column; the indexed DTW verify),
+    ``rows`` are only those window starts, owned by floor(start/chunk);
+    the overlap replication of _chunked guarantees the owning chunk
+    holds the full window. Layout rows (``start`` null) and candidate
+    rows (``pos`` and ``value`` null) are unioned and sent through one
+    exchange (a cogroup of the two sides shuffled each side on its own:
+    one exchange more), kept layout or not."""
+    layout = _series_layout(series, m, chunk) if reuse else None
     rows = layout if layout is not None else _chunked(series, m, chunk)
     if candidates is not None:
         rows = rows.selectExpr(
@@ -373,7 +368,7 @@ def _index_runs(
         chunk,
         kernel,
         "w int, mr double, pos_start long, pos_end long",
-        layout=None,
+        reuse=False,
     )
 
 
@@ -489,152 +484,6 @@ def plan_segments(query: list[float], widths: tuple[int, ...] = DEFAULT_WIDTHS) 
         segs.append(Segment(off, w, float(np.mean(query[off : off + w]))))
         off += w
     return segs
-
-
-def index_stats(index: DataFrame, bucket: float = 2.0) -> dict[int, list[tuple[float, int]]]:
-    """Per-width histogram of candidate volume: mr bucketed to a
-    coarse grid -> total covered positions. Small (hundreds of rows),
-    collected driver-side to feed the DP segment planner — the
-    engine's analogue of the reference's index statistics block
-    (IndexFileOperator.java:127-170)."""
-    rows = (
-        index.groupBy(
-            "w", (F.floor(F.col("mr") / bucket) * bucket).alias("mb")
-        )
-        .agg(F.sum(F.col("pos_end") - F.col("pos_start") + 1).alias("span"))
-        .collect()
-    )
-    out: dict[int, list[tuple[float, int]]] = {}
-    for r in rows:
-        out.setdefault(r.w, []).append((float(r.mb), int(r.span)))
-    for w in out:
-        out[w].sort()
-    return out
-
-
-def plan_segments_dp(
-    query: list[float],
-    widths: tuple[int, ...],
-    stats: dict[int, list[tuple[float, int]]],
-    epsilon: float,
-    bucket: float = 2.0,
-) -> list[Segment]:
-    """Statistics-driven DP segmentation (QueryEngine.java:337-416
-    re-derived): choose disjoint consecutive segments minimizing the
-    total estimated candidate volume, where a segment's cost is the
-    covered-position count of index buckets within its mean range."""
-    m = len(query)
-    usable = sorted(w for w in widths if w <= m and w in stats)
-    if not usable:
-        return plan_segments(query, widths)
-    prefix = np.concatenate(([0.0], np.cumsum(np.asarray(query, dtype=np.float64))))
-
-    def seg_cost(off: int, w: int) -> float:
-        mu = (prefix[off + w] - prefix[off]) / w
-        slack = epsilon / math.sqrt(w) + _GRID + bucket
-        return float(
-            sum(span for mb, span in stats[w] if mu - slack <= mb <= mu + slack)
-        )
-
-    INF = float("inf")
-    dp = [INF] * (m + 1)
-    choice: list[tuple[int, int] | None] = [None] * (m + 1)
-    dp[0] = 0.0
-    for i in range(m + 1):
-        if dp[i] is INF:
-            continue
-        for w in usable:
-            j = i + w
-            if j > m:
-                continue
-            c = dp[i] + seg_cost(i, w)
-            if c < dp[j]:
-                dp[j], choice[j] = c, (i, w)
-    # best endpoint leaving a tail shorter than the smallest width
-    best_end = max(
-        (j for j in range(m + 1) if dp[j] < INF and m - j < usable[0]),
-        default=None,
-        key=lambda j: j,
-    )
-    if best_end is None or best_end == 0:
-        return plan_segments(query, widths)
-    segs: list[Segment] = []
-    j = best_end
-    while j > 0:
-        i, w = choice[j]
-        segs.append(
-            Segment(i, w, float((prefix[i + w] - prefix[i]) / w))
-        )
-        j = i
-    segs.reverse()
-    return segs
-
-
-# Phase-2 cost-model constants published in the reference
-# (kvmatch/NormQueryEngine.java:49-51): A ms per candidate window
-# verified, B ms per 1e5 covered offsets scanned during the probe.
-_COST_A_MS = 9.72
-_COST_B_MS = 0.0107
-
-
-def truncate_segments_cost(
-    segments: list[Segment],
-    stats: dict[int, list[tuple[float, int]]],
-    epsilon: float,
-    n_positions: int,
-    bucket: float = 2.0,
-    a_ms: float = _COST_A_MS,
-    b_ms: float = _COST_B_MS,
-) -> list[Segment]:
-    """Early probe termination (T11, QueryEngine.java:228-239): stop
-    adding probe segments when the estimated marginal candidate
-    reduction no longer pays for the extra index scan.
-
-    The reference probes segments sequentially and compares measured
-    phase-1 time so far against the phase-2 cost model over the LIVE
-    candidate count; the engine probes all chosen segments in one
-    batch, so the same decision moves to plan time over the index
-    statistics: segments are ordered most-selective first, expected
-    candidates after k segments are modeled as n_positions times the
-    product of per-segment selectivities (covered-positions / total),
-    and segment k+1 is kept only while
-    a_ms * est_k * (1 - sel_{k+1}) > b_ms * covered_{k+1} / 1e5 —
-    marginal verify savings vs its probe cost, with the reference's
-    published constants. Dropping segments only WIDENS the candidate
-    superset (each segment's range filter is complete), so phase-2
-    verification keeps the result exact; this is purely a cost trade.
-    """
-    if len(segments) <= 1:
-        return segments
-
-    def covered(seg: Segment) -> float:
-        w = seg.width
-        if w not in stats:
-            return float(n_positions)
-        slack = epsilon / math.sqrt(w) + _GRID + bucket
-        return float(
-            sum(
-                span
-                for mb, span in stats[w]
-                if seg.mean - slack <= mb <= seg.mean + slack
-            )
-        )
-
-    ordered = sorted(segments, key=covered)
-    kept = [ordered[0]]
-    est = max(1.0, covered(ordered[0]))
-    for seg in ordered[1:]:
-        cov = covered(seg)
-        sel = min(1.0, cov / max(1, n_positions))
-        gain_ms = a_ms * est * (1.0 - sel)
-        probe_ms = b_ms * cov / 1e5
-        if gain_ms <= probe_ms:
-            break  # ordered by selectivity: later segments gain less
-        kept.append(seg)
-        est = max(1.0, est * sel)
-    # probe offsets must stay sorted for the interval-shift intersect
-    kept.sort(key=lambda s: s.offset)
-    return kept
 
 
 def _sql_double(x: float) -> str:
@@ -909,34 +758,27 @@ def verify_ed(
 
 def verify_ed_ints(
     series: DataFrame,
-    candidates: DataFrame | None,
     query: list[float],
     epsilon: float,
     value_scale: int,
     chunk: int = DEFAULT_CHUNK,
-    layout=_LOOK_UP,
 ) -> DataFrame:
-    """Exact ED verify for FIXED-DECIMAL series: d2 is an int64 sum of
-    scaled squared diffs — order-independent, so it needs no ordered
-    fold and runs as a vectorized numpy pass over the candidates' chunks
-    (the same candidate-pruned shape as the DTW verify) instead of
-    verify_ed's exploded (start, qoff) join. At 10x bench scale the
-    explode shape shuffles ~100M rows through a fixed-width exchange
-    and went superlinear (the stress bench caught it); this pass
-    scales with the chunks that hold candidates at numpy constants.
-    Output identical
-    contract: (start BIGINT, dist ROUND6) with dist = sqrt(d2)/scale,
-    bit-reproducible in DuckDB via the same integer cents sums.
+    """Exact ED range query for FIXED-DECIMAL series: every window of
+    the series' chunk layout is scored, in one numpy pass per chunk.
+    d2 is an int64 sum of scaled squared diffs, order-independent, so
+    it needs no ordered fold (verify_ed's exploded (start, qoff) join,
+    which at 10x bench scale shuffled ~100M rows through a fixed-width
+    exchange and went superlinear). Output contract: (start BIGINT,
+    dist ROUND6) with dist = sqrt(d2)/scale, bit-reproducible in DuckDB
+    via the same integer cents sums.
 
     It reads the series' chunk layout for width len(query), the one a
-    best match over the same series and width reads (_run_chunks;
-    ``layout`` passes a lookup the caller made). With ``candidates``,
-    the candidates go through one exchange with the layout rows. With
-    ``candidates`` None, every window the layout holds is scored: over
-    a kept layout, one narrow pass, one job and no exchange. The kernel
-    and the epsilon filter are the same either way. A chunk's sums
-    come from prefix sums and one correlation with the query, so a
-    task's memory grows with the chunk, not with chunk x len(query).
+    best match over the same series and width reads (_run_chunks): on
+    a first pass over a series object the layout is built inside the
+    plan (one exchange), and over a kept layout the pass is one narrow
+    mapInPandas, one job and no exchange. A chunk's sums come from
+    prefix sums and one correlation with the query, so a task's memory
+    grows with the chunk, not with chunk x len(query).
     """
     m = len(query)
     q = _fixed_decimal(query, value_scale, "query")
@@ -967,9 +809,7 @@ def verify_ed_ints(
                 }
             )
 
-    return _run_chunks(
-        series, m, chunk, kernel, "start long, dist double", candidates, layout
-    )
+    return _run_chunks(series, m, chunk, kernel, "start long, dist double")
 
 
 def subsequence_match_ed(
@@ -981,57 +821,37 @@ def subsequence_match_ed(
     n_positions: int | None = None,
     value_scale: int | None = None,
     index_grid: float = _GRID,
-    segmenter: str = "greedy",
     available_widths: set[int] | None = None,
 ) -> DataFrame:
     """RSM with ED: all window starts within ``epsilon`` of ``query``.
 
-    Exact: phase-1 mean-range pruning is complete (Cauchy-Schwarz),
-    phase-2 verification is exact. Pass ``index_grid`` when probing a
-    compacted index (factor * default grid); ``segmenter="dp"``
-    plans segments from index statistics (minimum estimated candidate
-    volume) instead of greedily, then applies the T11 cost-model
-    segment budget (truncate_segments_cost) on the same statistics.
-    ``available_widths`` declares the widths a caller-supplied
-    ``index`` holds, skipping the probe's distinct-widths
-    materialization. Without ``index`` the call builds one (its shuffle
-    stages run at the call) and pins it as a local checkpoint whose
-    blocks go with the returned frame.
+    With ``value_scale`` (fixed-decimal data), every pass scores every
+    window of the series' chunk layout (verify_ed_ints): no index, no
+    count and no probe, so ``widths``, ``index``, ``n_positions``,
+    ``index_grid`` and ``available_widths`` go unused.
 
-    With ``value_scale``, the series' chunk layout for len(query) is
-    looked up first (_series_layout), before any job. A first pass
-    over a series object, which every one-shot query takes, probes the
-    index as above and builds the layout inside the verify's plan.
-    Once the layout is kept (a later pass, or a best match over the
-    same series and width), the verify would read every layout row
-    anyway, so the call scores every window of it instead
-    (verify_ed_ints with no candidates): one job, with no count, no
-    index build or scan, and no exchange; ``index``, ``n_positions``
-    and the segmentation go unused.
+    Without it, the float path probes the index and verifies the
+    candidates with the ordered fold (verify_ed). Exact: the
+    mean-range pruning is complete (Cauchy-Schwarz) and the
+    verification is exact. Pass ``index_grid`` when probing a
+    compacted index (factor * default grid). ``available_widths``
+    declares the widths a caller-supplied ``index`` holds, skipping
+    the probe's distinct-widths materialization. Without ``index`` the
+    call builds one (its shuffle stages run at the call) and pins it
+    as a local checkpoint whose blocks go with the returned frame.
     """
     if not query:
         raise ValueError("empty query")
-    layout = (
-        _series_layout(series, len(query), DEFAULT_CHUNK)
-        if value_scale is not None
-        else None
-    )
-    if layout is not None:
-        return verify_ed_ints(
-            series, None, query, epsilon, value_scale, layout=layout
-        )
+    if value_scale is not None:
+        return verify_ed_ints(series, query, epsilon, value_scale)
     if n_positions is None:
         n_positions = series.count()
     # greedy segmentation is query-only: plan first, then build ONLY
     # the widths it selected (round 2 built all three widths for a
     # single-width segmentation — 3x the work)
-    segments = plan_segments(query, widths) if segmenter != "dp" else None
+    segments = plan_segments(query, widths)
     if index is None:
-        if segments is None:
-            # DP needs index statistics over every usable width
-            built = tuple(w for w in widths if w <= len(query)) or (min(widths),)
-        else:
-            built = tuple(sorted({s.width for s in segments}, reverse=True))
+        built = tuple(sorted({s.width for s in segments}, reverse=True))
         # pinned so the probe's scans share one build; a checkpoint is
         # no CacheManager entry, so nothing outlives the returned frame.
         # Planned under the session's AQE, which runs the build's
@@ -1039,22 +859,8 @@ def subsequence_match_ed(
         # plan gives every build shuffle spark.sql.shuffle.partitions
         # tasks (200 Python tasks on a stock session; measured at
         # local[3]: 23-27 s per 6,000-point query against ~2 s here)
-        index = build_kv_index(
-            series, built, value_scale=value_scale
-        ).localCheckpoint(eager=False)
+        index = build_kv_index(series, built).localCheckpoint(eager=False)
         available_widths = set(built)
-    if segments is None:
-        # T11 early probe termination over the same statistics the DP
-        # planner used: drop segments whose marginal candidate cut no
-        # longer pays for their index scan (result stays exact — the
-        # probe superset only widens)
-        stats = index_stats(index)
-        segments = truncate_segments_cost(
-            plan_segments_dp(query, widths, stats, epsilon),
-            stats,
-            epsilon,
-            n_positions,
-        )
     cands = probe_index(
         index,
         segments,
@@ -1064,13 +870,6 @@ def subsequence_match_ed(
         grid=index_grid,
         available_widths=available_widths,
     )
-    if value_scale is not None:
-        # fixed-decimal data: exact int64 verify over the candidates' chunks
-        # (order-independent sums need no fold join; scales with
-        # candidates at numpy constants — the 10x stress shape)
-        return verify_ed_ints(
-            series, cands, query, epsilon, value_scale, layout=None
-        )
     return verify_ed(series, cands, query, epsilon)
 
 

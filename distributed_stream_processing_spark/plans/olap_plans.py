@@ -182,18 +182,10 @@ def _load_or_build_sim_store(spark: SparkSession, sf_dir: str, stored, t):
     if os.path.isdir(os.path.join(path, "groups")):
         try:
             arts = load_similarity_artifacts(spark, path, t)
-            # the saved store's FLAT signature collection doubles as
-            # the keyed external-fetch source for the live crossover
-            # policy (AutoFetcher): prefer an sk-clustered copy when
-            # one exists beside the store (tools/exp_fetch_pushdown
-            # builds one), else the plain sigs table (the policy's
-            # clustered check then answers False and keeps the scan)
-            sorted_sigs = os.path.join(sf_dir, "q48store_sorted_sk")
-            flat = (
-                sorted_sigs
-                if os.path.isdir(sorted_sigs)
-                else os.path.join(path, "sigs")
-            )
+            # the saved store's own FLAT signature collection doubles
+            # as the keyed external-fetch source for the live crossover
+            # policy (AutoFetcher); nothing beside the store is read
+            flat = os.path.join(path, "sigs")
             arts.flat_sig_path = flat if os.path.isdir(flat) else None
             return arts
         except Exception as e:

@@ -114,9 +114,9 @@ def q02_stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct missed keys (O5) — of the q33/q48 cached-pipeline gates,
 # which exercise the identical joins per batch under a transparency
 # oracle. The freed rows put the three newest LLM-pipeline queries
-# (q56/q57/q58) and the DP-segmenter gate (q59) inside the driver's
-# 50-row correctness card. The functions remain for the hit/miss
-# partition unit test below.
+# (q56/q57/q58) and the DP-segmenter gate (q59, since retired behind
+# q29) inside the driver's 50-row correctness card. The functions
+# remain for the hit/miss partition unit test below.
 def _retired_q03_cache_hit_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cache-hit detection = left semi join (ref cogroup filter streaming.scala:235)."""
     cat = _cat(spark, sf_dir)

@@ -85,34 +85,10 @@ def _query_values(spark: SparkSession, sf_dir: str) -> tuple[list[float], int]:
     return _QUERY_MEMO[key]
 
 
-# Build-once/probe-many (IndexFileOperator.java:127-170): q29 and q31
-# probe the same width-100 index (greedy segmentation of a 100-point
-# query selects exactly one width-100 segment), so one cached build
-# serves both. Keyed per (session, sf_dir); cache() stands in for the
-# reference's on-disk index file — save_kv_index/load_kv_index are the
-# durable twin (tests/test_subsequence_match.py round-trip).
-_INDEX_MEMO: dict[tuple[str, str, tuple[int, ...]], DataFrame] = {}
-
-
-def shared_index(
-    spark: SparkSession, sf_dir: str, widths: tuple[int, ...] = (100,)
-) -> DataFrame:
-    sk = session_key(spark)
-    evict_stale_sessions(_INDEX_MEMO, sk)
-    key = (sk, sf_dir, widths)
-    if key not in _INDEX_MEMO:
-        _INDEX_MEMO[key] = build_kv_index(
-            series_df(spark, sf_dir), widths, value_scale=100
-        ).cache()
-    return _INDEX_MEMO[key]
-
-
 # exact integer cents sums on BOTH sides (2-decimal data): d2 is
 # order-independent int64, so the engine verifies with a chunked
 # numpy pass (verify_ed_ints) and the oracle needs no ordered-list
-# fold — sum() reproduces it bit-exactly. Shared by q29 (greedy
-# segmenter) and q59 (DP segmenter + T11 budget): both are exact, so
-# one oracle gates both plan paths.
+# fold — sum() reproduces it bit-exactly.
 _ED_ORACLE = f"""
     WITH s AS (SELECT event_id AS pos,
                       CAST(round(value * 100) AS BIGINT) AS cx FROM events),
@@ -137,66 +113,26 @@ _ED_ORACLE = f"""
     "q29_subseq_match_ed",
     oracle=_ED_ORACLE,
     doc=(
-        "KV-match RSM/ED: all windows within eps of the query via "
-        "index probe (mean-range, Cauchy-Schwarz-complete) + exact "
-        "integer-cents verification (order-independent int64 sums; "
-        "chunked numpy verify since r5 — the 10x stress bench caught "
-        "the exploded fold join going superlinear). Exact result."
+        "KV-match RSM/ED: all windows within eps of the query, every "
+        "window of the series' chunk layout scored with exact "
+        "integer-cents distances (order-independent int64 sums from "
+        "prefix sums and one correlation per chunk; no index probe, "
+        "which lost to the scan on every measured series). Exact "
+        "result."
     ),
 )
 def q29_subseq_match_ed(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = series_df(spark, sf_dir)
-    qv, n = _query_values(spark, sf_dir)
-    return subsequence_match_ed(
-        s,
-        qv,
-        EPS_ED,
-        widths=(25, 50, 100),
-        value_scale=100,
-        index=shared_index(spark, sf_dir),
-        n_positions=n,
-        available_widths={100},
-    )
+    qv, _n = _query_values(spark, sf_dir)
+    return subsequence_match_ed(s, qv, EPS_ED, value_scale=100)
 
 
-@query(
-    "q59_subseq_match_dp",
-    oracle=_ED_ORACLE,
-    doc=(
-        "q29's ED search through the statistics-driven DP segmenter "
-        "(QueryEngine.java:337-416) + T11 early probe termination "
-        "(cost-model segment budget, QueryEngine.java:228-239, "
-        "reference constants A/B): the planner minimizes estimated "
-        "candidate volume over a multi-width index (25/50/100) and "
-        "drops segments whose marginal candidate cut no longer pays "
-        "for their index scan. Dropping segments only widens the "
-        "verified candidate superset, so the result — and the oracle "
-        "— are identical to q29's. Gates plan_segments_dp + "
-        "truncate_segments_cost, which q29/q31's greedy path never "
-        "enters."
-    ),
-)
-def q59_subseq_match_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = series_df(spark, sf_dir)
-    qv, n = _query_values(spark, sf_dir)
-    # no 100-wide index: the 100-point query NEEDS >= 2 segments, so
-    # the DP weighs real alternatives (2x50 / 4x25 / mixed) and T11's
-    # marginal-cost loop sees a multi-segment list (with a single
-    # width-100 index both collapse to the trivial one-segment case)
-    widths = (25, 50)
-    return subsequence_match_ed(
-        s,
-        qv,
-        EPS_ED,
-        widths=widths,
-        value_scale=100,
-        # a genuinely multi-width index so the DP has real choices;
-        # memoized like q29/q31's single-width one (build-once)
-        index=shared_index(spark, sf_dir, widths=widths),
-        n_positions=n,
-        available_widths=set(widths),
-        segmenter="dp",
-    )
+# q59_subseq_match_dp (q29's search through the statistics-driven DP
+# segmenter and the T11 cost-model segment budget) is retired: with the
+# fixed-decimal range query scoring every window on every pass, it
+# computed exactly q29's result through q29's plan under q29's oracle,
+# and the DP and T11 planners it gated went with the probe that needed
+# them. Survivor: q29_subseq_match_ed.
 
 
 @query(
@@ -318,8 +254,11 @@ def _dtw_oracle(rho: int = DTW_RHO, eps: float = EPS_DTW) -> str:
 def q31_subseq_match_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = series_df(spark, sf_dir)
     qv, n = _query_values(spark, sf_dir)
+    # greedy segmentation of the 100-point query is one width-100
+    # segment, so the k = 1 probe reads this index once
     return subsequence_match_dtw(
-        s, qv, epsilon=EPS_DTW, rho=DTW_RHO, index=shared_index(spark, sf_dir),
+        s, qv, epsilon=EPS_DTW, rho=DTW_RHO,
+        index=build_kv_index(s, (100,), value_scale=100),
         n_positions=n, widths=(25, 50, 100), available_widths={100},
     )
 

@@ -13,10 +13,10 @@ one pass over the stored series' chunk layout, kept from its second
 use on, as the reference loads its stored series into KV-match once
 (numpy inside mapInPandas, all query windows scored per chunk; each
 partition keeps its per-window minimum and the driver merges those, at
-most one row per window per partition). An ED range query of the same
-width reads that kept layout too and scores every window of it, with
-no index probe. The reference instead ran a single-node Java engine on
-the driver (S3M's acknowledged inversion).
+most one row per window per partition). A fixed-decimal ED range
+query of the same width reads that kept layout too and scores every
+window of it, as it does on every pass. The reference instead ran a
+single-node Java engine on the driver (S3M's acknowledged inversion).
 The SGD model itself is tiny (dim ~ window+pred) and stays driver-side
 like the reference's.
 """
@@ -57,7 +57,7 @@ def batch_best_match(
     (operators.subsequence_match.subsequence_match_ed with
     ``value_scale``) reads the same layout: a best match followed by a
     range query keeps it on the query, which then scores every window
-    of it in one job instead of probing an index. A window longer than
+    of it in one job with no exchange. A window longer than
     ``chunk`` + 1 points raises ValueError (the overlap reaches one
     chunk back).
 

@@ -116,25 +116,27 @@ def test_no_global_sort_or_cartesian_in_headline_plan(spark, specs, name):
     assert not _global_sorts(plan), f"{name} gained a global sort"
 
 
-def test_q59_per_run_plan_bounded(spark, specs):
-    """q59's DP probe is ONE sweep over the cached multi-width index:
-    its PER-RUN plan (cached-build subtrees and AQE initial plans
-    excluded — r11's '27 exchanges / 18 scans' was the string counter
-    descending those) carries no cartesian/sort-merge/global sort and
-    a bounded exchange count. The width branches' unions/windows live
-    in the InMemoryRelation build, executed once at cache time."""
-    from tools.explain_plans import plan_texts
+def test_q29_plan_reads_no_index(spark, specs):
+    """q29 scores every window of the series' chunk layout: its
+    executed plan holds no index scan (``pos_start``) and reads no
+    cached relation."""
+    plan = _plan(specs["q29_subseq_match_ed"].fn(spark, SF))
+    assert "pos_start" not in plan
+    assert "InMemoryTableScan" not in plan
+    assert "MapInPandas" in plan
 
-    df = specs["q59_subseq_match_dp"].fn(spark, SF)
-    per_run, cached = plan_texts(df)
-    assert "SortMergeJoin" not in per_run
-    assert "CartesianProduct" not in per_run
-    assert per_run.count("Exchange") <= 4, per_run
-    # the probe scans the CACHED index (build plan routed separately);
-    # a vanished InMemoryTableScan means the index stopped being
-    # build-once and every batch would pay the multi-width window plan
-    assert "InMemoryTableScan" in per_run
-    assert cached, "q59 lost its cached index"
+
+def test_q31_leaves_no_cache_entry(spark, specs, tmp_path):
+    """q31 builds its width-100 index inside its own plan: a collect
+    leaves no CacheManager entry behind. Run over a data directory of
+    its own, so no earlier query in the session has touched it."""
+    import os
+
+    os.symlink(os.path.join(SF, "events.parquet"), tmp_path / "events.parquet")
+    spark.catalog.clearCache()
+    rows = specs["q31_subseq_match_dtw"].fn(spark, str(tmp_path)).collect()
+    assert rows
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @pytest.mark.parametrize(

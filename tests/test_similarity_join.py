@@ -793,6 +793,30 @@ def test_orphaned_build_dirs_are_swept_by_age(spark, corpus, tmp_path):
     assert os.path.isdir(young_tmp), "live-aged temp must not be touched"
 
 
+def test_stale_sorted_sibling_is_never_read(spark, corpus, tmp_path):
+    """A saved store's keyed-fetch source is its own flat ``sigs``
+    table. A ``q48store_sorted_sk`` directory beside it (the copy the
+    fetch experiments write, never checked against the live store) is
+    not read, even when it holds rows of the right schema."""
+    import os
+
+    from distributed_stream_processing_spark.plans.olap_plans import (
+        _load_or_build_sim_store,
+    )
+
+    stored = corpus.filter(F.col("id") >= 30)
+    sf_dir = str(tmp_path)
+    _load_or_build_sim_store(spark, sf_dir, stored, T)  # builds and saves
+    path = os.path.join(sf_dir, "q48store")
+    assert os.path.isdir(os.path.join(path, "groups"))
+    stale = os.path.join(sf_dir, "q48store_sorted_sk")
+    spark.range(3).selectExpr(
+        "id AS sk", "id AS b_id", "1 AS b_sz", "0 AS b_kind"
+    ).write.parquet(stale)
+    loaded = _load_or_build_sim_store(spark, sf_dir, stored, T)
+    assert loaded.flat_sig_path == os.path.join(path, "sigs")
+
+
 def test_driver_data_dir_never_receives_a_persisted_store(spark, corpus):
     """The driver's /root/testdata is a dr-xr-xr-x tree, but the
     engine runs as root, where os.access(dir, W_OK) is TRUE anyway —

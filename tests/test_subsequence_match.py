@@ -43,9 +43,7 @@ def series(spark):
 
 
 def _fresh_series(spark, vals):
-    """A new series object, so its ED range query takes the first-pass
-    plan that probes the index (over a kept layout, every window is
-    scored instead)."""
+    """A new series object: its chunk layouts start unbuilt."""
     return spark.createDataFrame(
         [(i, float(v)) for i, v in enumerate(vals)], "pos long, value double"
     )
@@ -63,12 +61,13 @@ def test_index_covers_all_positions(spark, series):
 
 
 def test_ed_match_equals_brute_force(spark, series):
-    _, arr = series
-    df = _fresh_series(spark, arr)
+    """Unscaled (float) ED: the index probe and the ordered-fold
+    verify."""
+    df, arr = series
     q = arr[500 : 500 + M].tolist()
     eps = 1.0  # catches the exact match and the planted noisy copy
     got = sorted((r.start, r.dist) for r in
-                 subsequence_match_ed(df, q, eps, widths=(25, 50), value_scale=100).collect())
+                 subsequence_match_ed(df, q, eps, widths=(25, 50)).collect())
     want = brute_force_ed(arr, np.array(q), eps)
     assert [g[0] for g in got] == [w[0] for w in want]
     for (gs, gd), (ws, wd) in zip(got, want):
@@ -77,13 +76,13 @@ def test_ed_match_equals_brute_force(spark, series):
 
 
 def test_ed_match_wide_epsilon(spark, series):
-    """Larger eps: pruning keeps every brute-force hit (completeness)."""
-    _, arr = series
-    df = _fresh_series(spark, arr)
+    """Larger eps: the float path's pruning keeps every brute-force hit
+    (completeness)."""
+    df, arr = series
     q = arr[700 : 700 + M].tolist()
     eps = 8.0
     got = {r.start for r in
-           subsequence_match_ed(df, q, eps, widths=(25, 50), value_scale=100).collect()}
+           subsequence_match_ed(df, q, eps, widths=(25, 50)).collect()}
     want = {s for s, _ in brute_force_ed(arr, np.array(q), eps)}
     assert got == want and len(want) > 1
 
@@ -244,47 +243,6 @@ def test_znorm_exact_equals_numpy_path(spark, series):
         assert math.isclose(exact[s], base[s], abs_tol=1e-5)
 
 
-def test_dp_segmenter_equals_greedy_results(spark, series):
-    """DP segmentation is a cost optimization only — match results
-    must be identical to the greedy segmentation (both complete)."""
-    _, arr = series
-    q = arr[700 : 700 + M].tolist()
-    eps = 8.0
-    greedy = {
-        (r.start, r.dist)
-        for r in subsequence_match_ed(
-            _fresh_series(spark, arr), q, eps, widths=(25, 50), value_scale=100
-        ).collect()
-    }
-    dp = {
-        (r.start, r.dist)
-        for r in subsequence_match_ed(
-            _fresh_series(spark, arr), q, eps, widths=(25, 50), value_scale=100,
-            segmenter="dp",
-        ).collect()
-    }
-    assert dp == greedy and len(greedy) > 0
-
-
-def test_dp_segments_cover_disjointly(spark, series):
-    from distributed_stream_processing_spark.operators.subsequence_match import (
-        build_kv_index,
-        index_stats,
-        plan_segments_dp,
-    )
-
-    df, arr = series
-    idx = build_kv_index(df, widths=(25, 50), value_scale=100)
-    stats = index_stats(idx)
-    q = arr[100:220].tolist()
-    segs = plan_segments_dp(q, (25, 50), stats, epsilon=5.0)
-    spans = [(s.offset, s.offset + s.width) for s in segs]
-    assert spans[0][0] == 0
-    for (a, b), (c, d) in zip(spans, spans[1:]):
-        assert c == b
-    assert 120 - spans[-1][1] < 25
-
-
 def test_cnsm_equals_brute_force(spark, series):
     from distributed_stream_processing_spark.operators.subsequence_match import (
         subsequence_match_cnsm,
@@ -418,57 +376,6 @@ def test_probe_equals_numpy_candidates(spark, series, probe_reference):
     idx.unpersist()
 
 
-def test_t11_truncation_cost_model():
-    """T11 early probe termination: useless segments (covering the
-    whole series — zero marginal pruning) are dropped, selective
-    segments are kept, at least one probe always survives, and the
-    kept probes stay offset-ordered."""
-    from distributed_stream_processing_spark.operators.subsequence_match import (
-        Segment,
-        truncate_segments_cost,
-    )
-
-    n = 100_000
-    # stats: width 25 has one bucket covering EVERYTHING (useless
-    # probes) except around mean 0 where coverage is tiny (selective)
-    stats = {25: [(-2.0, 50), (0.0, 50), (2.0, 50), (40.0, n)]}
-    segs = [
-        Segment(0, 25, 40.0),   # useless: covers ~all positions
-        Segment(25, 25, 0.0),   # selective: ~150 positions
-        Segment(50, 25, 40.0),  # useless again
-    ]
-    kept = truncate_segments_cost(segs, stats, epsilon=5.0, n_positions=n)
-    assert [s.offset for s in kept] == [25]  # only the selective probe pays
-    # all-selective: every added probe keeps paying -> all kept
-    stats2 = {25: [(0.0, 2000), (2.0, 2000)]}
-    segs2 = [Segment(0, 25, 0.0), Segment(25, 25, 2.0), Segment(50, 25, 0.0)]
-    kept2 = truncate_segments_cost(segs2, stats2, epsilon=5.0, n_positions=n)
-    assert [s.offset for s in kept2] == [0, 25, 50]
-    # never empty
-    assert truncate_segments_cost(
-        [Segment(0, 25, 40.0)], stats, 5.0, n
-    ) == [Segment(0, 25, 40.0)]
-
-
-def test_t11_early_stop_keeps_results_exact(spark, series):
-    """The dp path's T11 segment truncation may only widen the
-    candidate superset — the verified output must equal brute force."""
-    _, arr = series
-    df = _fresh_series(spark, arr)
-    q = arr[300 : 300 + M]
-    eps = 8.0
-    got = sorted(
-        (r.start, r.dist)
-        for r in subsequence_match_ed(
-            df, q.tolist(), eps, widths=(25, 50), value_scale=100, segmenter="dp",
-        ).collect()
-    )
-    want = brute_force_ed(arr, q, eps)
-    assert [g[0] for g in got] == [w[0] for w in want] and want
-    for (_, gd), (_, wd) in zip(got, want):
-        assert math.isclose(gd, wd, abs_tol=1e-6)
-
-
 def test_index_mr_values_match_numpy(spark, series):
     """The one-pass multi-width kernel's grid assignment must equal a
     global numpy reference per width (positions are covered by
@@ -539,12 +446,11 @@ def test_index_width_exceeding_chunk_overlap_raises(spark, series):
         _index_runs(df, (25, 8194), 100, chunk=8192).count()
     df = _fresh_series(spark, arr)
     q = arr[1500:2100]
-    cands = spark.range(1500, 1501).selectExpr("id AS start")
     for _ in range(2):  # the first pass over the series, then the keep
         with pytest.raises(ValueError, match="chunk overlap bound"):
             batch_best_match(df, {0: q}, chunk=CHUNK, value_scale=100)
         with pytest.raises(ValueError, match="chunk overlap bound"):
-            verify_ed_ints(df, cands, q.tolist(), 0.5, 100, chunk=CHUNK)
+            verify_ed_ints(df, q.tolist(), 0.5, 100, chunk=CHUNK)
     assert all(v is None for v in df.__dict__["_chunk_layouts"].values())
     q = arr[1500 : 1500 + CHUNK + 1]
     got = batch_best_match(df, {0: q}, chunk=CHUNK, value_scale=100)
@@ -673,33 +579,33 @@ def test_cnsm_window_straddles_record_batches(
 def test_indexed_verify_window_straddles_record_batches(
     spark, straddle_series, small_arrow_batches
 ):
-    """The candidate verify (_run_chunks with candidates: series rows
+    """The candidate verify (_run_chunks with candidates: layout rows
     and candidate starts through one exchange) gathers each partition
-    too, and so does the scan over a kept layout. A fresh series object
-    takes the probe on its first query and keeps its layout on the
-    second, which scores every window (the DTW/znorm/cnsm tests above
-    keep the fixture series' layout at this width, so a query over it
-    would never probe)."""
+    too. The indexed DTW verify sends its probe's candidates on the
+    first pass over a fresh series object, which builds the layout in
+    its plan, and on the second, which keeps it."""
     _, vals = straddle_series
-    q, dist, eps = _straddle_case(
-        vals, lambda X, q: np.sqrt(((X - q) ** 2).sum(axis=1))
-    )
+    rho = 3
+    q, dist, eps = _straddle_case(vals, lambda X, q: _dtw_all(X, q, rho))
     df = _fresh_series(spark, vals)
-    for probed in (True, False):
-        out = subsequence_match_ed(df, q.tolist(), eps, widths=(25,), value_scale=100)
+    idx = build_kv_index(df, widths=(25,))
+    for _ in range(2):
+        out = subsequence_match_dtw(
+            df, q.tolist(), eps, rho, index=idx, n_positions=len(vals),
+            widths=(25,), available_widths={25},
+        )
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert ("pos_start" in plan) == probed  # the index scan
+        assert "pos_start" in plan  # the index scan
         _assert_matches({r.start: r.dist for r in out.collect()}, dist, eps)
 
 
 def test_indexed_ed_one_exchange(spark, series, count_jobs):
-    """An indexed ED range query's first pass over a fresh series object
-    verifies its candidates through ONE exchange (layout rows and
-    candidate starts unioned): one shuffle-map job plus the result job,
-    with the series exploded into its chunk layout inside the plan. The
-    later passes read the kept layout (its leaf is in the plan) and
-    score every window of it: one job, with no exchange and no index
-    scan."""
+    """A fixed-decimal ED range query scores every window on every pass
+    and reads no index, even when one is passed: the first pass over a
+    fresh series object builds the chunk layout inside its plan (ONE
+    exchange: one shuffle-map job plus the result job), and the later
+    passes read the kept layout (its leaf is in the plan): one job,
+    with no exchange."""
     import re
 
     _, arr = series
@@ -719,7 +625,7 @@ def test_indexed_ed_one_exchange(spark, series, count_jobs):
         assert sorted((r.start, r.dist) for r in rows) == brute_force_ed(arr, q, 1.0)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert ("Exchange" in plan) != kept
-        assert ("pos_start" in plan) != kept  # the index scan
+        assert "pos_start" not in plan  # no index scan
         assert bool(kept_leaf.search(plan)) == kept
     idx.unpersist()
     df.unpersist()
@@ -745,10 +651,10 @@ def test_fixed_decimal_refuses_unrepresentable_values(bad):
 
 
 def test_best_match_and_verify_share_one_layout(spark, series, count_jobs):
-    """A best match and an ED verify over the same series and window
-    width read one chunk layout: the best match builds it inside its
-    plan, the verify keeps it, and a later best match reads it in
-    one job. The index build records no layout."""
+    """A best match and an ED range query over the same series and
+    window width read one chunk layout: the best match builds it
+    inside its plan, the range query keeps it, and a later best match
+    reads it in one job. The index build records no layout."""
     from distributed_stream_processing_spark.operators import subsequence_match as sm
     from distributed_stream_processing_spark.session import session_key
     from distributed_stream_processing_spark.streaming.online_ml import (
@@ -760,12 +666,8 @@ def test_best_match_and_verify_share_one_layout(spark, series, count_jobs):
     q = arr[500 : 500 + M]
     windows = {0: q, 1: arr[2000 : 2000 + M]}
     first = batch_best_match(df, windows, chunk=CHUNK, value_scale=100)
-    idx = build_kv_index(df, widths=(25, 50), value_scale=100)
-    cands = sm.probe_index(
-        idx, plan_segments(q.tolist(), (25, 50)), 1.0, N, M,
-        available_widths={25, 50},
-    )
-    got = sm.verify_ed_ints(df, cands, q.tolist(), 1.0, 100, chunk=CHUNK)
+    build_kv_index(df, widths=(25, 50), value_scale=100).count()
+    got = sm.verify_ed_ints(df, q.tolist(), 1.0, 100, chunk=CHUNK)
     assert sorted((r.start, r.dist) for r in got.collect()) == brute_force_ed(
         arr, q, 1.0
     )
@@ -843,23 +745,86 @@ def _shuffle_id(df) -> int:
         rdd = dep.rdd()
 
 
-def test_kept_layout_persists_no_block(spark, series, count_jobs):
+def _two_input_passes(df, arr):
+    """A pass of the two inputs that read kept layouts over ``df``: a
+    best match of two windows at CHUNK and an ED range query at the
+    default chunk. Returns (best, sorted range rows)."""
+    from distributed_stream_processing_spark.streaming.online_ml import (
+        batch_best_match,
+    )
+
+    windows = {0: arr[500 : 500 + M], 1: arr[2000 : 2000 + M]}
+    best = batch_best_match(df, windows, chunk=CHUNK, value_scale=100)
+    ranged = subsequence_match_ed(
+        df, windows[0].tolist(), 1.0, value_scale=100
+    ).collect()
+    return best, sorted((r.start, r.dist) for r in ranged)
+
+
+def _assert_two_input_results(results, arr):
+    assert all(r == results[0] for r in results)
+    best, ranged = results[0]
+    assert best[0][2] == 0 and best[1][2] == 0
+    assert ranged == brute_force_ed(arr, arr[500 : 500 + M], 1.0)
+
+
+# Run in a session of its own: deleting a live session's shuffle files
+# leaves the driver's block manager unregistered after the FetchFailed
+# recompute (getExecutorMemoryStatus goes from 1 entry to 0), and every
+# later pin in that session pays for it.
+_LOST_SHUFFLE_FILES = """
+import sys
+
+import numpy as np
+
+sys.path.insert(0, {repo!r})
+sys.path.insert(0, {tests!r})
+from test_subsequence_match import (
+    CHUNK, M, _assert_two_input_results, _shuffle_id, _two_input_passes,
+)
+
+from distributed_stream_processing_spark.operators.subsequence_match import (
+    DEFAULT_CHUNK, _series_layout,
+)
+from distributed_stream_processing_spark.session import get_spark
+
+arr = np.load({arr!r})
+spark = get_spark("lost-shuffle-files", shuffle_partitions=8)
+sc = spark.sparkContext
+df = spark.createDataFrame(
+    [(i, float(v)) for i, v in enumerate(arr)], "pos long, value double"
+).cache()
+df.count()
+results = [_two_input_passes(df, arr) for _ in range(3)]
+df.unpersist()
+disk = sc._jsc.sc().env().blockManager().diskBlockManager().getAllFiles()
+files = [disk.apply(i) for i in range(disk.size())]
+for chunk in (CHUNK, DEFAULT_CHUNK):
+    shuffle = _shuffle_id(_series_layout(df, M, chunk))
+    lost = [f for f in files if f.getName().startswith(f"shuffle_{{shuffle}}_")]
+    assert lost
+    for f in lost:
+        f.delete()
+results.append(_two_input_passes(df, arr))
+_assert_two_input_results(results, arr)
+print("RECOMPUTED", len(results))
+spark.stop()
+"""
+
+
+def test_kept_layout_persists_no_block(spark, series, count_jobs, tmp_path):
     """A kept layout is a kept shuffle, not a persisted block: the only
     persistent RDD the passes add is the series' own cache, so
     unpersisting the series frees every block. The passes after that
     still read the shuffle files (one job each), and when those files
     are lost, as with a lost executor, the next pass recomputes them
-    from the lineage. Two inputs read kept layouts: a best match and an
-    ED range query (which scores every window of its layout), and
-    every pass returns the same best match and the brute-force range
-    result."""
-    from distributed_stream_processing_spark.operators.subsequence_match import (
-        DEFAULT_CHUNK,
-        _series_layout,
-    )
-    from distributed_stream_processing_spark.streaming.online_ml import (
-        batch_best_match,
-    )
+    from the lineage (checked in a session of its own). Two inputs read
+    kept layouts: a best match and an ED range query (which scores
+    every window of its layout), and every pass returns the same best
+    match and the brute-force range result."""
+    import os
+    import subprocess
+    import sys
 
     sc = spark.sparkContext
 
@@ -869,35 +834,29 @@ def test_kept_layout_persists_no_block(spark, series, count_jobs):
     _, arr = series
     before = persistent()
     df = _cached_series(spark, arr)
-    windows = {0: arr[500 : 500 + M], 1: arr[2000 : 2000 + M]}
-    idx = build_kv_index(df, widths=(25, 50), value_scale=100)  # not persisted
-
-    def passes():
-        best = batch_best_match(df, windows, chunk=CHUNK, value_scale=100)
-        ranged = subsequence_match_ed(
-            df, windows[0].tolist(), 1.0, widths=(25, 50), index=idx,
-            n_positions=N, value_scale=100, available_widths={25, 50},
-        ).collect()
-        return best, sorted((r.start, r.dist) for r in ranged)
-
-    results = [passes() for _ in range(3)]
+    results = [_two_input_passes(df, arr) for _ in range(3)]
     assert len(persistent() - before) == 1  # the series' cache
     df.unpersist()
     assert not persistent() - before
-    assert count_jobs(lambda: results.append(passes())) == 2  # one per input
-    disk = sc._jsc.sc().env().blockManager().diskBlockManager().getAllFiles()
-    files = [disk.apply(i) for i in range(disk.size())]
-    for chunk in (CHUNK, DEFAULT_CHUNK):
-        shuffle = _shuffle_id(_series_layout(df, M, chunk))
-        lost = [f for f in files if f.getName().startswith(f"shuffle_{shuffle}_")]
-        assert lost
-        for f in lost:
-            f.delete()
-    results.append(passes())
-    assert all(r == results[0] for r in results)
-    best, ranged = results[0]
-    assert best[0][2] == 0 and best[1][2] == 0
-    assert ranged == brute_force_ed(arr, windows[0], 1.0)
+    assert count_jobs(lambda: results.append(_two_input_passes(df, arr))) == 2
+    _assert_two_input_results(results, arr)
+
+    tests = os.path.dirname(os.path.abspath(__file__))
+    np.save(tmp_path / "arr.npy", arr)
+    script = _LOST_SHUFFLE_FILES.format(
+        repo=os.path.dirname(tests), tests=tests, arr=str(tmp_path / "arr.npy")
+    )
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "RECOMPUTED 4" in out.stdout
 
 
 def test_kept_layout_range_query_both_sides_of_the_probe(spark, series):
@@ -937,11 +896,10 @@ def test_kept_layout_range_query_both_sides_of_the_probe(spark, series):
     df.unpersist()
 
 
-@pytest.mark.parametrize("segmenter", ["greedy", "dp"])
-def test_kept_layout_range_query_runs_one_job(spark, series, count_jobs, segmenter):
+def test_kept_layout_range_query_runs_one_job(spark, series, count_jobs):
     """A repeat ED range query over a kept layout, given no index and
     no n_positions, runs one job in all: no count, no index build, no
-    probe statistics."""
+    probe."""
     _, arr = series
     df = _cached_series(spark, arr)
     q = arr[500 : 500 + M].tolist()
@@ -950,7 +908,7 @@ def test_kept_layout_range_query_runs_one_job(spark, series, count_jobs, segment
         return sorted(
             (r.start, r.dist)
             for r in subsequence_match_ed(
-                df, q, 1.0, widths=(25, 50), value_scale=100, segmenter=segmenter
+                df, q, 1.0, widths=(25, 50), value_scale=100
             ).collect()
         )
 
@@ -979,23 +937,20 @@ def test_znorm_affine_copy_distance_is_zero(spark, series):
 
 
 def test_self_built_index_leaves_no_cache_entry(spark, series):
-    """A match call that builds its own index pins it as a local
-    checkpoint that goes with the returned frame; it must leave no
-    CacheManager entry behind (a .cache() entry lived until the session
-    ended), on the greedy and on the dp path."""
+    """A float ED match call that builds its own index pins it as a
+    local checkpoint that goes with the returned frame; it must leave
+    no CacheManager entry behind (a .cache() entry lived until the
+    session ended)."""
     _, arr = series
     q = arr[500 : 500 + M]
     spark.catalog.clearCache()
-    for segmenter in ("greedy", "dp"):
-        got = subsequence_match_ed(
-            _fresh_series(spark, arr), q.tolist(), 1.0, widths=(25, 50),
-            value_scale=100,
-            segmenter=segmenter,
-        ).collect()
-        assert sorted(r.start for r in got) == [
-            s for s, _ in brute_force_ed(arr, q, 1.0)
-        ]
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    got = subsequence_match_ed(
+        _fresh_series(spark, arr), q.tolist(), 1.0, widths=(25, 50)
+    ).collect()
+    assert sorted(r.start for r in got) == [
+        s for s, _ in brute_force_ed(arr, q, 1.0)
+    ]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_verify_ed_ints_exact_when_prefix_sums_wrap(spark):
@@ -1020,7 +975,7 @@ def test_verify_ed_ints_exact_when_prefix_sums_wrap(spark):
         for s, d in enumerate(d2)
         if d <= (eps * 100) ** 2
     )
-    got = verify_ed_ints(df, None, [q / 100], eps, 100, chunk=n, layout=None)
+    got = verify_ed_ints(df, [q / 100], eps, 100, chunk=n)
     assert sorted((r.start, r.dist) for r in got.collect()) == want
 
 
