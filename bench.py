@@ -21,7 +21,10 @@ if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
 from distributed_stream_processing_spark.plans import load_all  # noqa: E402
-from distributed_stream_processing_spark.session import get_spark  # noqa: E402
+from distributed_stream_processing_spark.session import (  # noqa: E402
+    get_spark,
+    python_channel,
+)
 
 HEADLINE = [
     "q01_pricing_summary",        # hash aggregation
@@ -1748,6 +1751,10 @@ def main() -> None:
             # unlike the overhead-bound sf0.1 headline walls)
             "parallelism": spark.sparkContext.defaultParallelism,
             "master": spark.sparkContext.master,
+            # the JVM-Python channel ("tcp" where no short socket
+            # directory could be made): TCP pays a ~40 ms stall per
+            # Python task, so walls from the two are not comparable
+            "channel": python_channel(spark),
             "scale_probe_s": round(scale_s, 2),
             # round-parity rotation regime of the heavy optional
             # sections (1 = q33/dedup-first, 0 = r16 order) — says

@@ -115,6 +115,29 @@ def _fixed_decimal(
     return ints
 
 
+def _fixed_decimal_d2(cents: np.ndarray, rows: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """Exact int64 squared distance of each width-m window of ``cents``
+    starting at ``rows`` to each scaled query (the rows of the 2-D
+    ``Q``, m wide): a (len(Q), len(rows)) array.
+
+    d2 = sum x^2 - 2 sum xq + sum q^2, from int64 prefix sums of x^2
+    and one float64 correlation per query, so memory grows with the
+    chunk, not with chunk x m. Both ``cents`` and ``Q`` come from
+    _fixed_decimal with ``against`` bounding cents against Q: each
+    product and partial sum of sum xq is then an integer below 2^53, so
+    the correlation is exact; the prefix sums may wrap, their
+    differences (below 2^53) do not."""
+    m = Q.shape[1]
+    sq = np.concatenate(([0], np.cumsum(cents * cents)))
+    ssq = sq[rows + m] - sq[rows]
+    xf = cents.astype(np.float64)
+    d2 = np.empty((len(Q), len(rows)), dtype=np.int64)
+    for i, q in enumerate(Q):
+        sxq = np.correlate(xf, q.astype(np.float64), "valid")[rows]
+        d2[i] = ssq - 2 * sxq.astype(np.int64) + int((q * q).sum())
+    return d2
+
+
 def _chunked(series: DataFrame, m: int, chunk: int) -> DataFrame:
     """(pos, value, chunk_id) rows of ``series`` in one scan, so that
     chunk c holds every width-``m`` window starting in [c*chunk,
@@ -784,21 +807,12 @@ def verify_ed_ints(
     q = _fixed_decimal(query, value_scale, "query")
     eps2 = float(epsilon * value_scale) ** 2  # int64 d2 < 2^53 is exact
 
-    qf, qq = q.astype(np.float64), int((q * q).sum())
-
     def kernel(chunks):
         for _base, pos, val, rows in chunks:
             if not len(rows):
                 continue
             cents = _fixed_decimal(val, value_scale, "series", against=q)
-            # d2 = sum x^2 - 2 sum xq + sum q^2, in O(chunk) memory. Each
-            # product and partial sum of sum xq is an integer below 2^53
-            # (the ``against`` bound), so the float64 correlation is
-            # exact; the int64 prefix sums may wrap, their differences
-            # (below 2^53) do not
-            sq = np.concatenate(([0], np.cumsum(cents * cents)))
-            sxq = np.correlate(cents.astype(np.float64), qf, "valid")[rows]
-            d2 = sq[rows + m] - sq[rows] - 2 * sxq.astype(np.int64) + qq
+            d2 = _fixed_decimal_d2(cents, rows, q[None])[0]
             keep = d2 <= eps2
             yield pd.DataFrame(
                 {

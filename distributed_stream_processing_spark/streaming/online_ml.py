@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from distributed_stream_processing_spark.operators.subsequence_match import (
     DEFAULT_CHUNK,
     _fixed_decimal,
+    _fixed_decimal_d2,
     _run_chunks,
 )
 
@@ -72,9 +73,11 @@ def batch_best_match(
     values), squared distances are EXACT int64 sums of scaled values —
     order-independent, so the argmin (ties broken by lowest position)
     is bit-reproducible in any SQL engine; d2 stays < 2^53 so the
-    double-typed merge column is exact. Without it, float64 sums (the
-    generic path; argmin then carries the usual summation-order
-    caveat).
+    double-typed merge column is exact. They come from prefix sums and
+    one correlation per window (_fixed_decimal_d2), so a task holds
+    O(chunk) values per window, not a chunk x m gather. Without it,
+    float64 sums over the gathered windows (the generic path; argmin
+    then carries the usual summation-order caveat).
 
     Returns {window_id: (best_pos, best_dist, best_d2)} where best_d2
     is the squared distance in scaled units (= dist^2 without scaling).
@@ -97,10 +100,12 @@ def batch_best_match(
             if not len(rows):
                 continue
             if value_scale is not None:
-                val = _fixed_decimal(val, value_scale, "series", against=Q)
-            X = np.lib.stride_tricks.sliding_window_view(val, m)[rows]
-            for wid, q in zip(ids, Q):
-                d2 = ((X - q) ** 2).sum(axis=1)
+                cents = _fixed_decimal(val, value_scale, "series", against=Q)
+                D2 = _fixed_decimal_d2(cents, rows, Q)
+            else:
+                X = np.lib.stride_tricks.sliding_window_view(val, m)[rows]
+                D2 = (((X - q) ** 2).sum(axis=1) for q in Q)
+            for wid, d2 in zip(ids, D2):
                 i = int(np.argmin(d2))  # first minimum: lowest position
                 found.append((wid, int(pos[rows[i]]), float(d2[i])))
         if found:

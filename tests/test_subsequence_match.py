@@ -979,6 +979,42 @@ def test_verify_ed_ints_exact_when_prefix_sums_wrap(spark):
     assert sorted((r.start, r.dist) for r in got.collect()) == want
 
 
+def test_best_match_full_chunk_wide_window_equals_brute_force(spark):
+    """Fixed-decimal best match at m = 2,000 over one full default
+    chunk (8,192 windows) equals a brute-force argmin over every
+    window, and a tie planted at a non-zero distance goes to the lower
+    position."""
+    from distributed_stream_processing_spark.operators.subsequence_match import (
+        DEFAULT_CHUNK,
+    )
+    from distributed_stream_processing_spark.streaming.online_ml import (
+        batch_best_match,
+    )
+
+    m = 2_000
+    rng = np.random.default_rng(11)
+    cents = np.cumsum(rng.integers(-50, 51, DEFAULT_CHUNK + m - 1))
+    cents[6_000 : 6_000 + m] = cents[1_000 : 1_000 + m]  # windows 1000 = 6000
+    tie = cents[1_000 : 1_000 + m].copy()
+    tie[7] += 3  # d2 = 9 at both 1000 and 6000
+    queries = {0: tie, 1: cents[4_321 : 4_321 + m] + 2, 2: rng.integers(-900, 900, m)}
+    df = _fresh_series(spark, cents / 100)
+    got = batch_best_match(
+        df, {k: q / 100 for k, q in queries.items()}, value_scale=100
+    )
+
+    def brute(q):
+        d2 = [int(((cents[s : s + m] - q) ** 2).sum()) for s in range(DEFAULT_CHUNK)]
+        best = min(range(DEFAULT_CHUNK), key=lambda s: (d2[s], s))
+        return best, d2[best]
+
+    for k, q in queries.items():
+        pos, d2 = brute(q)
+        assert got[k][0] == pos and got[k][2] == d2
+        assert got[k][1] == pytest.approx(math.sqrt(d2) / 100)
+    assert got[0][:3:2] == (1_000, 9.0)
+
+
 def test_value_scale_refuses_off_grid_input(spark, series):
     """Every value_scale path refuses data that is not fixed-decimal at
     that scale instead of quantizing it: a 3-decimal series fails the
